@@ -86,10 +86,15 @@ object SpectrumDdl {
 
   /** Spark-SQL executable equivalent of [[parquetTable]]: an external table
     * over the converted parquet directory, queryable by name in the session
-    * catalog (schema inferred from the parquet footers).
+    * catalog. The column list is the reflected schema in Spark types (what
+    * the converted files hold), so registering reads no parquet footer.
     */
-  def sparkParquetTable(schemaName: String, tableName: String,
-                        location: String): String =
-    s"CREATE TABLE IF NOT EXISTS ${qualifiedName(schemaName, tableName)} " +
+  def sparkParquetTable(schemaName: String, tableName: String, schema: TableSchema,
+                        location: String): String = {
+    val columns = schema.fields.map { case (n, t) =>
+      s"`${n.replace("`", "``")}` ${t.spark.sql}"
+    }.mkString(", ")
+    s"CREATE TABLE IF NOT EXISTS ${qualifiedName(schemaName, tableName)} ($columns) " +
       s"USING PARQUET LOCATION ${sq(location)}"
+  }
 }

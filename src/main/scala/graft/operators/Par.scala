@@ -12,14 +12,20 @@ package graft.operators
   * back-fills idle cores with the next job's tasks.
   *
   * Blocks until EVERY thunk finishes (success or failure) and only then
-  * rethrows the first failure: no write is still in flight when the
-  * caller's crash handling runs. Failure atomicity is unchanged from the
-  * serial form — all these writes land under an uncommitted `batch=N`
-  * that the ledger hides and the next ingest's cleanupOrphans deletes;
-  * which subset of them completed before an abort was never part of the
-  * contract (a serial chain aborts with an arbitrary prefix landed).
+  * rethrows the first failure, with every other failure attached to it as
+  * suppressed (one bad input can fail several thunks for different
+  * reasons): no write is still in flight when the caller's crash handling
+  * runs. Failure atomicity is unchanged from the serial form — all these
+  * writes land under an uncommitted `batch=N` that the ledger hides and
+  * the next ingest's cleanupOrphans deletes; which subset of them
+  * completed before an abort was never part of the contract (a serial
+  * chain aborts with an arbitrary prefix landed).
+  *
+  * The table copy uses it too: [[graft.pipeline.TableTransformer]]'s
+  * convert stage writes the Parquet file and computes the column
+  * statistics from the same typed frame at the same time.
   */
-private[operators] object Par {
+private[graft] object Par {
   def run(thunks: Seq[() => Unit]): Unit = {
     val live = thunks.filter(_ != null)
     if (live.size <= 1) { live.foreach(_()); return }
@@ -32,7 +38,11 @@ private[operators] object Par {
       try t() catch { case e: Throwable => errs.add(e) }))
     ts.foreach(_.start())
     ts.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    if (!errs.isEmpty) {
+      val first = errs.poll()
+      errs.forEach(e => if (e ne first) first.addSuppressed(e))
+      throw first
+    }
   }
 
   def run(thunks: (() => Unit)*)(implicit d: DummyImplicit): Unit =

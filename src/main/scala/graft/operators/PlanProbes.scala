@@ -25,10 +25,16 @@ private[operators] object PlanProbes {
     * default keeps delta-sized appends at `nBuckets` writer tasks. Catalyst
     * plan-statistics bytes are uncompressed in-memory estimates, so this
     * sits well below the on-disk 128 MB-1 GB file-size goal (guide §6).
+    * A value that is not a positive whole number of bytes fails with an
+    * error naming the key (0 would divide by zero in [[clusteredBy]]).
     */
-  private def saltTargetBytes(spark: org.apache.spark.sql.SparkSession): Long =
-    spark.conf.getOption("spark.graft.write.saltTargetBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
+  private[operators] def saltTargetBytes(spark: org.apache.spark.sql.SparkSession): Long = {
+    val key = "spark.graft.write.saltTargetBytes"
+    spark.conf.getOption(key).fold(32L * 1024 * 1024) { v =>
+      v.trim.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+        s"$key must be a positive number of bytes, got '$v'"))
+    }
+  }
 
   /** Cluster `df` by its bucket column before a partitionBy write so each
     * bucket directory receives a BOUNDED file count, without capping the

@@ -4,11 +4,14 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.CatalogColumnStat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{BooleanType, DateType, TimestampType}
 
 import graft.ddl.SpectrumDdl
 import graft.functions.UnloadDialect
+import graft.operators.Par
 import graft.schema.TableSchema
 import graft.sinks.ParquetSink
 import graft.sources.{JdbcSource, UnloadCsv}
@@ -36,8 +39,9 @@ object CsvExporter {
   val DefaultMaxFileBytes: Long = 256L * 1024 * 1024
 
   /** Export to unload-dialect gzip CSV + manifest. Output files are bounded
-    * at ~`maxFileBytes` of record data: average line width is measured on a
-    * small sample and converted to a `maxRecordsPerFile` cap (an estimate —
+    * at ~`maxFileBytes` of record data: average line width is measured on
+    * the first 4096 lines (one `take` job) and converted to a
+    * `maxRecordsPerFile` cap (an estimate —
     * UNLOAD bounds the stored bytes exactly because it writes serially; a
     * parallel writer bounds per-task, and gzip makes the stored files
     * smaller than the bound, never larger). Pass 0 to disable.
@@ -64,8 +68,7 @@ object CsvExporter {
     if (maxFileBytes > 0) {
       // octet_length, not length: the bound is on stored BYTES, and
       // character count under-estimates multibyte-heavy rows
-      val sampled = lines.limit(4096).agg(avg(octet_length(col("value")))).collect()(0)
-      val avgBytes = Option(sampled.get(0)).fold(100.0)(_.asInstanceOf[Double]) + 1.0
+      val avgBytes = ParquetSink.sampledWidth(lines.select(octet_length(col("value"))), 4096) + 1.0
       w = w.option("maxRecordsPerFile", math.max(1L, (maxFileBytes / avgBytes).toLong))
     }
     w.text(paths.csvDir)
@@ -93,6 +96,11 @@ object CsvExporter {
   * export.py:28-34), via the companion constructors. Stage boundaries in
   * Spark terms: each stage is a distributed job; the reference's per-file
   * multiprocessing Pool (R7) becomes task scheduling.
+  *
+  * A copy of a single-file table runs 7 Spark jobs: export 3 (the
+  * source's schema, the line-width sample, the CSV write), convert 4 (the
+  * row-width sample, the Parquet write, and the two-stage column
+  * statistics aggregate beside it), create none.
   */
 final class TableTransformer(spark: SparkSession, source: () => DataFrame,
                              paths: PathConfig, schemaName: String, tableName: String,
@@ -103,21 +111,41 @@ final class TableTransformer(spark: SparkSession, source: () => DataFrame,
            schemaName: String, tableName: String) =
     this(spark, () => spark.read.parquet(sourceParquet), paths, schemaName, tableName)
 
+  /** The source, evaluated once: schema reflection and the export share one
+    * DataFrame, so a parquet source's footers are read (one job) once.
+    */
+  private lazy val sourceDf: DataFrame = source()
+
   /** Schema reflected once from the source, shared by all stages
     * (transform.py:16) — validated against the supported-type whitelist.
     */
-  lazy val schema: TableSchema = TableSchema.fromStructType(source().schema)
+  lazy val schema: TableSchema = TableSchema.fromStructType(sourceDf.schema)
+
+  /** Row count and column statistics of this transformer's last
+    * conversion, for [[createTable]]; None until a conversion succeeds.
+    */
+  @volatile private var converted: Option[(Long, Map[String, CatalogColumnStat])] = None
 
   /** Stage 1: source table -> unload-dialect CSV + manifest. */
   def exportToCsv(): Seq[String] = {
     schema // force fail-fast validation before any work (schema.py:38-44)
-    CsvExporter.export(source(), paths, maxFileBytes)
+    CsvExporter.export(sourceDf, paths, maxFileBytes)
   }
 
-  /** Stage 2: manifest-driven CSV -> typed, gzip, INT96 Parquet. */
+  /** Stage 2: manifest-driven CSV -> typed, gzip, INT96 Parquet. The column
+    * statistics of the typed frame are computed at the same time, in a
+    * sibling job ([[Par]]): the Parquet write of a single CSV part is one
+    * task, so the statistics aggregate runs on otherwise idle cores, and
+    * it reads the CSV, not the Parquet file, so it needs no write to
+    * finish first.
+    */
   def convertToParquet(): Unit = {
+    converted = None
     val typed = UnloadCsv.readManifest(spark, schema, paths.manifestPath)
-    ParquetSink.write(typed, paths.spectrumDir)
+    var stats: (Long, Map[String, CatalogColumnStat]) = null
+    Par.run(() => ParquetSink.write(typed, paths.spectrumDir),
+      () => stats = Bridge.columnStats(typed))
+    converted = Some(stats)
   }
 
   /** Stage 3a: the Redshift-dialect external-table DDL (rendered text, as
@@ -131,27 +159,35 @@ final class TableTransformer(spark: SparkSession, source: () => DataFrame,
     * converted output is registered as an external parquet table in the
     * session catalog, queryable by name. Returns the qualified name.
     *
+    * The table is registered with the reflected column list, so no
+    * parquet footer is read to infer it.
+    *
     * STATS MAINTENANCE IS PART OF INGEST (SURVEY §4, VERDICT r10 missing
-    * #3): the freshly registered table is ANALYZE'd — table stats
-    * (rowCount/size) plus per-column NDV/min/max — so the cost-based
-    * optimizer can price joins over engine-produced tables with no
-    * hand-run ANALYZE step (CboJoinSpec pins reorder over a
-    * transformer-produced db). The reference's warehouse does the same
-    * implicitly (Redshift maintains table stats on COPY/CREATE). Cost:
-    * one scan of the table just written — marginal next to the convert
-    * stage that produced it, and the price of an optimizer that is never
-    * working from a stale or absent rowCount. The index artifacts
-    * ([[graft.operators.SignatureIndex]] etc.) are path-based parquet, not
-    * catalog tables — their scan sizing comes from parquet footers, and
-    * ANALYZE has no catalog entry to attach to there.
+    * #3): the registered table carries what `ANALYZE TABLE ... COMPUTE
+    * STATISTICS FOR ALL COLUMNS` would store — rowCount, sizeInBytes and
+    * per-column NDV/min/max/nulls/lengths — so the cost-based optimizer
+    * can price joins over engine-produced tables with no hand-run ANALYZE
+    * step (CboJoinSpec pins reorder over a transformer-produced db). The
+    * reference's warehouse does the same implicitly (Redshift maintains
+    * table stats on COPY/CREATE). When this transformer converted the
+    * files, the row count and column statistics come from
+    * [[convertToParquet]], computed by ANALYZE's own aggregate over the
+    * frame it wrote, and only the size is read here (a file listing), so
+    * this stage runs no job. Otherwise (a standalone create, as the CLI's
+    * `create_table` runs it) one ANALYZE scans the table. The index
+    * artifacts ([[graft.operators.SignatureIndex]] etc.) are path-based
+    * parquet, not catalog tables — their scan sizing comes from parquet
+    * footers, and ANALYZE has no catalog entry to attach to there.
     */
   def createTable(): String = {
     val qualified = s"$schemaName.${tableName.replace('.', '_')}"
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $schemaName")
     spark.sql(s"DROP TABLE IF EXISTS $qualified")
-    spark.sql(SpectrumDdl.sparkParquetTable(schemaName, tableName, paths.spectrumDir))
-    spark.sql(s"ANALYZE TABLE $qualified COMPUTE STATISTICS")
-    spark.sql(s"ANALYZE TABLE $qualified COMPUTE STATISTICS FOR ALL COLUMNS")
+    spark.sql(SpectrumDdl.sparkParquetTable(schemaName, tableName, schema, paths.spectrumDir))
+    converted match {
+      case Some((rows, colStats)) => Bridge.storeStats(spark, qualified, rows, colStats)
+      case None => spark.sql(s"ANALYZE TABLE $qualified COMPUTE STATISTICS FOR ALL COLUMNS")
+    }
     qualified
   }
 

@@ -1,7 +1,7 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{avg, length, struct, to_json}
+import org.apache.spark.sql.functions.{length, struct, to_json}
 
 /** Parquet sink with the reference's output contract (operators R5/R6, O4/O5/
   * O10/O11): gzip compression, INT96 timestamps for Spectrum compatibility,
@@ -17,10 +17,19 @@ object ParquetSink {
   /** Mirrors CsvExporter.DefaultMaxFileBytes (256 MB, HISTORY.rst v2.0.0). */
   val DefaultMaxFileBytes: Long = 256L * 1024 * 1024
 
-  /** `maxFileBytes` bounds output files via a sampled average row width
-    * converted to a record cap (an estimate — serialized parquet with
-    * compression is smaller than the JSON-ish proxy, so files land under
-    * the bound). Explicit `maxRecordsPerFile` overrides; 0 for both
+  /** Mean of the integer widths in the single column of `widths` over its
+    * first `n` rows, 100 when it has none. One `take` job, averaged on the
+    * driver: a limit-then-aggregate plan costs a shuffle and a second job.
+    */
+  private[graft] def sampledWidth(widths: DataFrame, n: Int): Double = {
+    val sample = widths.take(n)
+    if (sample.isEmpty) 100.0 else sample.map(_.getInt(0).toDouble).sum / sample.length
+  }
+
+  /** `maxFileBytes` bounds output files via the average row width of the
+    * first 2048 rows, converted to a record cap (an estimate — serialized
+    * parquet with compression is smaller than the JSON-ish proxy, so files
+    * land under the bound). Explicit `maxRecordsPerFile` overrides; 0 for both
     * disables bounding.
     */
   def write(df: DataFrame,
@@ -38,10 +47,8 @@ object ParquetSink {
       val cap =
         if (maxRecordsPerFile > 0) maxRecordsPerFile
         else if (maxFileBytes > 0) {
-          val sampled = df.limit(2048)
-            .select(length(to_json(struct(df.columns.map(df.col): _*))).as("w"))
-            .agg(avg("w")).collect()(0)
-          val avgBytes = Option(sampled.get(0)).fold(100.0)(_.asInstanceOf[Double]) + 1.0
+          val avgBytes = sampledWidth(
+            df.select(length(to_json(struct(df.columns.map(df.col): _*)))), 2048) + 1.0
           math.max(1L, (maxFileBytes / avgBytes).toLong)
         } else 0L
       var w = df.write.mode("overwrite").option("compression", compression)

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.command.CommandUtils
 import org.apache.spark.sql.{classic, Column, DataFrame, SparkSession}
 
 /** Column <-> Expression and LogicalPlan <-> DataFrame bridge.
@@ -26,4 +28,30 @@ object Bridge {
   /** The analyzed logical plan backing a DataFrame (resolved attributes). */
   def analyzed(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
+
+  /** Row count and per-column statistics of every column of `df`, from
+    * the one aggregate `ANALYZE TABLE ... COMPUTE STATISTICS FOR ALL
+    * COLUMNS` runs (Spark's own `CommandUtils.computeColumnStats`), keyed
+    * by column name in the catalog's form. One global aggregate over
+    * `df`: two jobs under AQE, its partial and its final stage.
+    */
+  def columnStats(df: DataFrame): (Long, Map[String, CatalogColumnStat]) = {
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val plan = ds.queryExecution.analyzed
+    val (rows, stats) = CommandUtils.computeColumnStats(ds.sparkSession, plan, plan.output)
+    rows -> stats.map { case (a, s) => a.name -> s.toCatalogColumnStat(a.name, a.dataType) }
+  }
+
+  /** Store `rowCount` and `colStats` as the catalog statistics of `table`,
+    * with the size of the files under its location: the final step of
+    * `AnalyzeColumnCommand`, for statistics computed elsewhere.
+    */
+  def storeStats(spark: SparkSession, table: String, rowCount: Long,
+                 colStats: Map[String, CatalogColumnStat]): Unit = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val ident = s.sessionState.sqlParser.parseTableIdentifier(table)
+    val catalog = s.sessionState.catalog
+    val (size, _) = CommandUtils.calculateTotalSize(s, catalog.getTableMetadata(ident))
+    catalog.alterTableStats(ident, Some(CatalogStatistics(size, Some(BigInt(rowCount)), colStats)))
+  }
 }

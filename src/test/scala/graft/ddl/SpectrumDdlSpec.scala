@@ -86,4 +86,13 @@ class SpectrumDdlSpec extends AnyFunSuite {
     assert(got.contains("add partition (k='o''brien')"))
     assert(got.contains("location 's3://x/k=o''brien/'"))
   }
+
+  test("the executable Spark DDL carries the column list in Spark types") {
+    val got = SpectrumDdl.sparkParquetTable("s", "a.t",
+      TableSchema(Seq("id" -> RsBigInt, "odd`name" -> RsVarchar(Some(8)),
+        "n" -> RsDecimal(12, 2), "ts" -> RsTimestamp, "x" -> RsDoublePrecision)),
+      "file:/w/it's")
+    assert(got == "CREATE TABLE IF NOT EXISTS s.a_t (`id` BIGINT, `odd``name` STRING, " +
+      "`n` DECIMAL(12,2), `ts` TIMESTAMP, `x` DOUBLE) USING PARQUET LOCATION 'file:/w/it''s'")
+  }
 }

@@ -57,4 +57,27 @@ class PlanProbesSpec extends SparkSpec {
     // the caller's crash handling runs
     assert(survived.get())
   }
+
+  test("Par throws one failure and attaches every other one as suppressed") {
+    val e = intercept[IllegalStateException] {
+      Par.run(Seq(
+        () => throw new IllegalStateException("first"),
+        () => { Thread.sleep(100); throw new IllegalArgumentException("second") }))
+    }
+    assert(e.getMessage == "first")
+    assert(e.getSuppressed.toSeq.map(_.getMessage) == Seq("second"))
+  }
+
+  test("saltTargetBytes must be a positive number; the error names the key") {
+    val key = "spark.graft.write.saltTargetBytes"
+    val s = spark.newSession()
+    assert(PlanProbes.saltTargetBytes(s) == 32L * 1024 * 1024)
+    s.conf.set(key, "4096")
+    assert(PlanProbes.saltTargetBytes(s) == 4096L)
+    for (bad <- Seq("32MB", "0")) {
+      s.conf.set(key, bad)
+      val e = intercept[IllegalArgumentException](PlanProbes.saltTargetBytes(s))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
 }

@@ -77,6 +77,35 @@ class UnloadCsvSpec extends SparkSpec {
     assert(df.count() == 2)
   }
 
+  private def manifest(json: String): String = {
+    val p = Files.createTempDirectory("unload_manifest_").resolve("manifest")
+    Files.writeString(p, json)
+    p.toString
+  }
+
+  test("manifest entries come back in entry order") {
+    val urls = Seq("s3://b/p/0003.gz", "s3://b/p/0001.gz", "file:/t/ü 2.gz", "s3://b/p/0002.gz")
+    val m = manifest(urls.map(u => s"""{"url": "$u", "mandatory": true}""")
+      .mkString("""{"entries": [""", ",\n  ", "]}"))
+    assert(UnloadCsv.manifestEntries(spark, m) == urls)
+  }
+
+  test("an empty entries list gives no parts and an empty typed frame") {
+    val m = manifest("""{"entries": []}""")
+    assert(UnloadCsv.manifestEntries(spark, m).isEmpty)
+    val df = UnloadCsv.readManifest(spark, TableSchema(Seq("a" -> RsInteger)), m)
+    assert(df.columns.toSeq == Seq("a") && df.count() == 0)
+  }
+
+  test("a malformed manifest fails with an error naming its path") {
+    for (bad <- Seq("""{"entries": [{"url": "a.gz"}""", """{"files": []}""", "",
+      """{"entries": {"url": "a.gz"}}""", """{"entries": [{"path": "a.gz"}]}""")) {
+      val m = manifest(bad)
+      val e = intercept[IllegalArgumentException](UnloadCsv.manifestEntries(spark, m))
+      assert(e.getMessage.contains(m), s"'$bad': ${e.getMessage}")
+    }
+  }
+
   test("dangling escape at EOF fails with a dialect error, not a closed-stream read") {
     val e = intercept[IllegalArgumentException] {
       val it = new UnloadRecordIterator(new java.io.StringReader("a|b\\"))
