@@ -104,27 +104,16 @@ object AggIndex {
   private def layoutMarkerPath(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_layout")
 
-  private def writeLayoutMarker(spark: SparkSession, path: String, version: Int): Unit = {
-    val mp = layoutMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(version.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def writeLayoutMarker(spark: SparkSession, path: String, version: Int): Unit =
+    Ledger.write(spark, layoutMarkerPath(path), version.toString)
 
   /** The table's highest written layout version — absent marker means a
     * pre-versioning (= v1-layout) table.
     */
   def layoutVersion(spark: SparkSession, path: String): Int = {
     val mp = layoutMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) 1
-    else {
-      val in = fs.open(mp)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                finally in.close()
-      raw.toInt
-    }
+    Ledger.read(spark, mp).fold(1)(raw => raw.toIntOption.getOrElse(
+      throw new IllegalStateException(s"corrupt layout marker at $mp (contents: '$raw')")))
   }
 
   private def bumpLayout(spark: SparkSession, path: String, version: Int): Unit =
@@ -196,54 +185,20 @@ object AggIndex {
   private lazy val mgAgg = udaf(new graft.functions.MisraGries.MisraGriesAgg(MgK))
   private lazy val mgMerge = udaf(new graft.functions.MisraGries.MisraGriesMergeAgg(MgK))
 
-  /** Commit ledger beside the data files (underscore-prefixed, so parquet
-    * readers ignore it): the highest batch id whose APPEND COMPLETED.
-    * Rows with batch > this value are orphans of a writer that died
-    * mid-batch — harmless when the writer's own checkpoint resumes
-    * (replay lands byte-identical under the original id; [[merged]]'s
-    * dedup folds it) but silently DOUBLE-COUNTED if a fresh checkpoint
-    * re-ingests the same events under a new id, because sum(cnt) is not
-    * duplicate-insensitive. [[ingestStream]] uses the ledger to fail
-    * loudly in exactly that case.
+  /** The commit ledger ([[Ledger.commit]]): rows with batch > its value
+    * are orphans of a writer that died mid-batch — harmless when the
+    * writer's own checkpoint resumes (replay lands byte-identical under
+    * the original id; [[merged]]'s dedup folds it) but silently
+    * DOUBLE-COUNTED if a fresh checkpoint re-ingests the same events
+    * under a new id, because sum(cnt) is not duplicate-insensitive.
+    * [[ingestStream]] uses the ledger to fail loudly in exactly that
+    * case, so it must never be absent once first written.
     */
-  private def commitMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_committed_batch")
+  private def markCommitted(spark: SparkSession, path: String, batch: Int): Unit =
+    Ledger.commit(spark, path, batch, writer = None)
 
-  private def markCommitted(spark: SparkSession, path: String, batch: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val mp = commitMarkerPath(path)
-    val fs = mp.getFileSystem(conf)
-    // write-temp-then-OVERWRITE-rename: an in-place truncating create
-    // could crash half-written (empty marker parses as garbage), and a
-    // delete-then-rename could crash with the marker ABSENT — which
-    // silently DISABLES the orphan guard, the unsafe direction: a fresh
-    // checkpoint would then double-count without the intended loud
-    // failure (ADVICE r10). FileContext.rename(OVERWRITE) publishes
-    // atomically, so the ledger is never absent once first written.
-    val tmp = new org.apache.hadoop.fs.Path(path, "_graft_committed_batch.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(batch.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(mp),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private def committedBatch(spark: SparkSession, path: String): Option[Int] = {
-    val mp = commitMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                finally in.close()
-      Some(try raw.toInt catch {
-        case _: NumberFormatException => throw new IllegalStateException(
-          s"corrupt commit ledger at $mp (contents: '$raw') — repair it to " +
-            "the highest fully-appended batch id before ingesting")
-      })
-    }
-  }
+  private def committedBatch(spark: SparkSession, path: String): Option[Int] =
+    Ledger.committed(spark, path).map(_._1)
 
   /** Aggregate the base log once; write the partial table as batch 0.
     *
@@ -761,10 +716,7 @@ object AggIndex {
     val tmp = new org.apache.hadoop.fs.Path(path + ".compact_tmp")
     kept.unionByName(recomputed).coalesce(1)
       .write.mode("overwrite").parquet(tmp.toString)
-    val lt = new org.apache.hadoop.fs.Path(tmp, "_graft_committed_batch")
-    val out = fs.create(lt, true)
-    try out.write((maxBatch + 1).toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    Ledger.commit(spark, tmp.toString, maxBatch + 1, writer = None)
     // retention floor rides the swap ([[AsofFloor]]): affected keys'
     // history was dropped from EVERY batch and recomputed under
     // maxBatch + 1 — any as-of below that would silently show history
@@ -844,10 +796,7 @@ object AggIndex {
     // new one INTO tmp BEFORE the swap so the guard's ledger is never
     // absent, however the process dies (everything in the compacted table
     // is committed by the maintenance-window contract)
-    val lt = new org.apache.hadoop.fs.Path(tmp, "_graft_committed_batch")
-    val out = fs.create(lt, true)
-    try out.write(maxBatch.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    Ledger.commit(spark, tmp.toString, maxBatch, writer = None)
     // retention floor rides the swap ([[AsofFloor]]): batches below
     // maxBatch now live only inside the consolidated batch maxBatch - 1
     // row — an as-of below that point would silently return an empty or

@@ -32,15 +32,11 @@ private[operators] object AsofFloor {
     * Monotone: an existing floor at or above `floor` is kept.
     */
   def write(spark: SparkSession, dir: String, floor: Int, rewrite: String): Unit = {
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
     val keep = read(spark, dir) match {
       case Some((f, r)) if f >= floor => (f, r)
       case _ => (floor, rewrite)
     }
-    val out = fs.create(new Path(dir, Marker), true)
-    try out.write(s"${keep._1}\n${keep._2}"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    Ledger.write(spark, new Path(dir, Marker), s"${keep._1}\n${keep._2}")
   }
 
   /** [[write]] into a REWRITE'S tmp dir pre-swap, carrying any floor the
@@ -55,17 +51,11 @@ private[operators] object AsofFloor {
     write(spark, tmpDir, floor, rewrite)
   }
 
-  def read(spark: SparkSession, dir: String): Option[(Int, String)] = {
-    val mp = new Path(dir, Marker)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split('\n')
-                  finally in.close()
-      Some((lines(0).trim.toInt, lines.drop(1).mkString("\n").trim))
+  def read(spark: SparkSession, dir: String): Option[(Int, String)] =
+    Ledger.read(spark, new Path(dir, Marker)).map { body =>
+      val lines = body.split('\n')
+      (lines(0).trim.toInt, lines.drop(1).mkString("\n").trim)
     }
-  }
 
   /** Gate an as-of read: `upToBatch` below the floor fails LOUDLY, naming
     * the rewrite that retired that history.

@@ -106,10 +106,11 @@ private[operators] object BatchBuckets {
       // and the in-memory probe (`use`) read the cache, not a re-kernel.
       // [[PlanProbes.clusteredBy]] (r19, ADVICE): pins the partition
       // count so AQE cannot coalesce the parquet encode to 1-4 tasks
-      // (measured r18), keeps one file per bucket per batch, and sizes
-      // any extra salt parallelism to the data instead of the former
-      // hardcoded 64 — same effective shape here (BB = 64 >= local
-      // cores), scale-adaptive beyond it.
+      // (measured r18), writes at most s = ceil(bytes / (target x BB))
+      // files per bucket per batch (s clamped to [1, cores / BB]; 1 for
+      // delta-sized appends), and sizes that salt parallelism to the data
+      // instead of the former hardcoded 64 — same effective shape here
+      // (BB = 64 >= local cores), scale-adaptive beyond it.
       PlanProbes.clusteredBy(r.withColumn("batch", lit(batch)),
           col("bb"), nBuckets, col("key"))
         .write.partitionBy("bb")

@@ -75,23 +75,8 @@ object IndexMaintenance {
     */
   private[operators] val MaxBatchMarker = "_graft_max_batch"
 
-  private[operators] def readMaxBatchMarker(spark: SparkSession, path: String): Option[Int] = {
-    val mp = new Path(path, MaxBatchMarker)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt)
-      finally in.close()
-    }
-  }
-
-  private def writeMaxBatchMarker(fs: org.apache.hadoop.fs.FileSystem,
-                                  dir: Path, batch: Int): Unit = {
-    val out = fs.create(new Path(dir, MaxBatchMarker), true)
-    try out.write(batch.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private[operators] def readMaxBatchMarker(spark: SparkSession, path: String): Option[Int] =
+    Ledger.read(spark, new Path(path, MaxBatchMarker)).map(_.toInt)
 
   /** True for a visible data file: parquet, not hidden, and not inside a
     * hidden directory below `root` (e.g. the `_tombstones` delete-vector
@@ -280,7 +265,7 @@ object IndexMaintenance {
       val r = raw.agg(org.apache.spark.sql.functions.max("batch")).first()
       val dataMax = if (r.isNullAt(0)) None else Some(r.getInt(0))
       (dataMax ++ priorMarker).reduceOption(_ max _)
-        .foreach(m => writeMaxBatchMarker(fs, tmp, m))
+        .foreach(m => Ledger.write(spark, new Path(tmp, MaxBatchMarker), m.toString))
     }
 
     // the swap (crash-safe order — scaladoc above): live aside, tmp in,

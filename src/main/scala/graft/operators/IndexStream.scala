@@ -45,12 +45,10 @@ private[operators] object IndexStream {
   def pinnedBase(rows: DataFrame, nextBatch: => Int, checkpoint: String): Int = {
     val markerPath = new org.apache.hadoop.fs.Path(checkpoint, "graft_base_batch")
     val fs = markerPath.getFileSystem(rows.sparkSession.sessionState.newHadoopConf())
-    if (fs.exists(markerPath)) {
-      val in = fs.open(markerPath)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-      finally in.close()
-    } else {
+    Ledger.read(rows.sparkSession, markerPath).map(_.toInt).getOrElse {
       val b = nextBatch
+      // create-if-absent, not Ledger.write: two starts racing on one
+      // checkpoint must not both win — the loser fails here
       val out = fs.create(markerPath, false)
       try out.write(b.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()

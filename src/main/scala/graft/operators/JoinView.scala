@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
   *
   * Crash discipline = [[AggIndex]]'s ledger: a batch's three appends
   * (a, b, view) publish under `batch=N` partitions and only then does the
-  * `_graft_committed_batch` marker advance (atomic OVERWRITE rename).
+  * `_graft_committed_batch` marker advance ([[Ledger.commit]]).
   * Every read — merged(), and the `old` sides inside ingest — filters
   * `batch <= committed`, so a writer that died mid-batch leaves only
   * invisible orphans; the next ingest deletes any `batch > committed`
@@ -58,9 +58,6 @@ object JoinView {
     * addressing the same directories as BIGINT-width stored history.
     */
   private def kbOf(df: DataFrame, key: String): Column = KeyBuckets.kbFor(df, key)
-
-  private def commitMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_committed_batch")
 
   private def keyMarkerPath(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_join_key")
@@ -99,20 +96,30 @@ object JoinView {
   private def dayOf(c: Column): Column =
     date_format(date_trunc("day", c), "yyyy-MM-dd")
 
-  private def pdOf(c: Column, pdb: Int): Column =
+  private[operators] def pdOf(c: Column, pdb: Int): Column =
     pmod(xxhash64(dayOf(c)), lit(pdb)).cast("int")
+
+  /** [[pdOf]] of a canonical `yyyy-MM-dd` day, evaluated on the driver
+    * through Catalyst's own XxHash64 expression. Its default-seed
+    * constructor is the one the xxhash64() function builds, so the seed
+    * has no second copy here.
+    */
+  private[operators] def pdOfDay(day: String, pdb: Int): Int = {
+    val h = new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
+      org.apache.spark.sql.catalyst.expressions.Literal(
+        org.apache.spark.unsafe.types.UTF8String.fromString(day),
+        org.apache.spark.sql.types.StringType)))
+      .eval(null).asInstanceOf[Long]
+    val m = h % pdb
+    (if (m < 0) m + pdb else m).toInt
+  }
 
   private def sessionTz(spark: SparkSession): String =
     spark.conf.get("spark.sql.session.timeZone")
 
-  private def writeDayColMarker(spark: SparkSession, path: String, dayCol: String): Unit = {
-    val mp = dayColMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(s"$dayCol\npdb=$PDB\nhash=$DayHashVersion\ntz=${sessionTz(spark)}"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  private def writeDayColMarker(spark: SparkSession, path: String, dayCol: String): Unit =
+    Ledger.write(spark, dayColMarkerPath(path),
+      s"$dayCol\npdb=$PDB\nhash=$DayHashVersion\ntz=${sessionTz(spark)}")
 
   /** The payload column the view subtable is day-bucketed on (`pd=`), if
     * [[build]] was given one — root-level marker, so it survives the
@@ -141,20 +148,13 @@ object JoinView {
     }
 
   private def readDayMarker(spark: SparkSession, path: String)
-      : Option[(String, Int, String, String)] = {
-    val mp = dayColMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) None
-    else {
-      val in = fs.open(mp)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        .split('\n').map(_.trim).filter(_.nonEmpty)
-                  finally in.close()
+      : Option[(String, Int, String, String)] =
+    Ledger.read(spark, dayColMarkerPath(path)).map { body =>
+      val lines = body.split('\n').map(_.trim).filter(_.nonEmpty)
       def tagged(t: String) = lines.find(_.startsWith(s"$t="))
         .map(_.stripPrefix(s"$t=")).getOrElse("")
-      Some((lines(0), tagged("pdb").toInt, tagged("hash"), tagged("tz")))
+      (lines(0), tagged("pdb").toInt, tagged("hash"), tagged("tz"))
     }
-  }
 
   /** The view subtable's partition columns under the current layout. A
     * day-bucketed view drops `kb=`: no view read prunes on the join key
@@ -167,70 +167,24 @@ object JoinView {
     if (viewDayCol(spark, path).isDefined) Seq("pd", "batch")
     else Seq("kb", "batch")
 
-  private def writeKeyMarker(spark: SparkSession, path: String, key: String): Unit = {
-    val mp = keyMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(key.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   /** The join-key column name, persisted at build time so key-dependent
     * reads (tombstone anti-joins) need no out-of-band metadata.
     */
-  def joinKey(spark: SparkSession, path: String): String = {
-    val mp = keyMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(mp), s"no join-key marker at $path — not a JoinView root")
-    val in = fs.open(mp)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
-  }
+  def joinKey(spark: SparkSession, path: String): String =
+    Ledger.read(spark, keyMarkerPath(path)).getOrElse(throw new IllegalArgumentException(
+      s"no join-key marker at $path — not a JoinView root"))
 
-  /** Ledger format: "<batch>\n<writer>" — the writer line lets a resumed
-    * stream distinguish its own crash window (batch committed by THIS
-    * checkpoint, applied-marker write lost) from a foreign writer having
-    * taken its id space (which must fail loudly, not no-op — the no-op
-    * would silently drop the new micro-batch's data).
+  /** (batch, writer) of the view's commit ledger — the writer line lets a
+    * resumed stream distinguish its own crash window (batch committed by
+    * THIS checkpoint, applied-marker write lost) from a foreign writer
+    * having taken its id space (which must fail loudly, not no-op — the
+    * no-op would silently drop the new micro-batch's data).
     */
-  private def markCommitted(spark: SparkSession, path: String, batch: Int,
-                            writer: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val mp = commitMarkerPath(path)
-    val fs = mp.getFileSystem(conf)
-    // write-temp-then-OVERWRITE-rename (AggIndex's rationale): never
-    // half-written, never absent once first written
-    val tmp = new org.apache.hadoop.fs.Path(path, "_graft_committed_batch.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$batch\n$writer".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(mp),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def ledger(spark: SparkSession, path: String): (Int, Option[String]) =
+    Ledger.committed(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"no commit ledger at $path — not a JoinView-managed root (build first)"))
 
-  private def ledgerLines(spark: SparkSession, path: String): Array[String] = {
-    val mp = commitMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(mp),
-      s"no commit ledger at $path — not a JoinView-managed root (build first)")
-    val in = fs.open(mp)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split('\n')
-    finally in.close()
-  }
-
-  private def committedBatch(spark: SparkSession, path: String): Int = {
-    val raw = ledgerLines(spark, path)(0).trim
-    try raw.toInt catch {
-      case _: NumberFormatException => throw new IllegalStateException(
-        s"corrupt commit ledger at $path (contents: '$raw')")
-    }
-  }
-
-  private def committedWriter(spark: SparkSession, path: String): Option[String] = {
-    val lines = ledgerLines(spark, path)
-    if (lines.length < 2) None else Some(lines(1).trim)
-  }
+  private def committedBatch(spark: SparkSession, path: String): Int = ledger(spark, path)._1
 
   // one file per kb directory per batch (r18; [[appendView]]'s day-layout
   // rationale applied to the kb writers too): without the clustering
@@ -505,9 +459,9 @@ object JoinView {
                 appendView(spark, v0, key, path, 0, sizeHint = Some(
                   PlanProbes.statsBytes(aP) + PlanProbes.statsBytes(bP))) }))
     } finally { aP.unpersist(); bP.unpersist() }
-    writeKeyMarker(spark, path, key)
+    Ledger.write(spark, keyMarkerPath(path), key)
     KeyBuckets.publish(spark, path)
-    markCommitted(spark, path, 0, writer = "build")
+    Ledger.commit(spark, path, 0, Some("build"))
   }
 
   /** Whether the view was built `cdc = true` — read off the persisted
@@ -585,7 +539,7 @@ object JoinView {
     appendView(spark, dv, key, path, b, sizeHint = Some(
       PlanProbes.statsBytes(justWritten(s"$path/a")) +
         PlanProbes.statsBytes(justWritten(s"$path/b"))))
-    markCommitted(spark, path, b, writer)
+    Ledger.commit(spark, path, b, Some(writer))
     b
   }
 
@@ -754,7 +708,7 @@ object JoinView {
       appendView(spark, dv.select(viewCols.map(col).toIndexedSeq: _*), key, path, b,
         sizeHint = Some(PlanProbes.statsBytes(wa) + PlanProbes.statsBytes(wb)))
     } finally keep.foreach(_.unpersist())
-    markCommitted(spark, path, b, writer)
+    Ledger.commit(spark, path, b, Some(writer))
     b
   }
 
@@ -903,32 +857,19 @@ object JoinView {
     Par.run(folds)
   }
 
-  private def appliedMarkerPath(checkpoint: String) =
+  /** The checkpoint-local applied marker of the streamed wirings here and
+    * in [[StarView.cdcStream]]: the highest foreachBatch id this
+    * checkpoint committed, -1 before the first.
+    */
+  private def appliedMarker(checkpoint: String) =
     new org.apache.hadoop.fs.Path(checkpoint, "graft_applied_batchid")
 
-  private def readApplied(spark: SparkSession, checkpoint: String): Long = {
-    val mp = appliedMarkerPath(checkpoint)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) -1L
-    else {
-      val in = fs.open(mp)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
-  }
+  private[operators] def readApplied(spark: SparkSession, checkpoint: String): Long =
+    Ledger.read(spark, appliedMarker(checkpoint)).fold(-1L)(_.toLong)
 
-  private def writeApplied(spark: SparkSession, checkpoint: String, batchId: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val mp = appliedMarkerPath(checkpoint)
-    val fs = mp.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(checkpoint, "graft_applied_batchid.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(mp),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private[operators] def writeApplied(spark: SparkSession, checkpoint: String,
+                                      batchId: Long): Unit =
+    Ledger.write(spark, appliedMarker(checkpoint), batchId.toString)
 
   /** Stream one side's appends into the view (the enriched-fact-table
     * production shape: facts stream, the dimension side grows by batch
@@ -939,7 +880,7 @@ object JoinView {
     *  - the checkpoint-local applied marker (highest foreachBatch id
     *    this checkpoint committed) makes replays definite no-ops;
     *  - the ledger's writer line closes the crash window between
-    *    markCommitted and the applied-marker write (batch committed by
+    *    the ledger commit and the applied-marker write (batch committed by
     *    THIS checkpoint -> no-op; committed by anyone else -> the id
     *    space was taken while the stream was stopped, and silently
     *    no-opping would DROP this micro-batch's data — fail loudly and
@@ -954,17 +895,17 @@ object JoinView {
           committedBatch(spark, path) + 1, checkpoint)
         if (batchId > readApplied(spark, checkpoint)) {
           val b = base + batchId.toInt
-          val c = committedBatch(spark, path)
+          val (c, w) = ledger(spark, path)
           if (b == c + 1) {
             val db = readSub(spark, s"$path/b").drop("kb", "batch").limit(0)
             ingest(batchDf, db, key, path, batch = b, writer = checkpoint)
             writeApplied(spark, checkpoint, batchId)
-          } else if (b == c && committedWriter(spark, path).contains(checkpoint)) {
+          } else if (b == c && w.contains(checkpoint)) {
             // crash window: we committed b, lost the applied-marker write
             writeApplied(spark, checkpoint, batchId)
           } else {
             throw new IllegalStateException(
-              s"view ledger at $c (writer ${committedWriter(spark, path).getOrElse("?")}) " +
+              s"view ledger at $c (writer ${w.getOrElse("?")}) " +
                 s"but this checkpoint's pinned id space expects batch $b — the view " +
                 "was advanced outside this checkpoint while it was stopped; a silent " +
                 "no-op would drop this micro-batch. Restart with a FRESH checkpoint " +
@@ -1136,17 +1077,7 @@ object JoinView {
     // written expression as a tiny local job.
     val canonical = days.forall(_.matches("""\d{4}-\d{2}-\d{2}"""))
     val pds =
-      if (canonical) days.map { d =>
-        // seed 42 = the xxhash64() SQL function's fixed seed — the same
-        // expression class the pd= writer evaluates
-        val h = org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
-          org.apache.spark.sql.catalyst.expressions.Literal(
-            org.apache.spark.unsafe.types.UTF8String.fromString(d),
-            org.apache.spark.sql.types.StringType)), 42L)
-          .eval(null).asInstanceOf[Long]
-        val m = h % pdb
-        (if (m < 0) m + pdb else m).toInt
-      }.distinct.toArray
+      if (canonical) days.map(pdOfDay(_, pdb)).distinct.toArray
       else {
         import spark.implicits._
         days.toDS().select(pdOf(col("value").cast("timestamp"), pdb))
@@ -1201,7 +1132,7 @@ object JoinView {
           committedBatch(spark, path) + 1, checkpoint)
         if (batchId > readApplied(spark, checkpoint)) {
           val b = base + batchId.toInt
-          val c = committedBatch(spark, path)
+          val (c, w) = ledger(spark, path)
           if (b == c + 1) {
             // drop the persisted side sign too: ingestCdc takes RAW row
             // images and manages the marker itself
@@ -1210,11 +1141,11 @@ object JoinView {
             ingestCdc(ups, db, key, path, batch = b, writer = checkpoint,
               delA = dels)
             writeApplied(spark, checkpoint, batchId)
-          } else if (b == c && committedWriter(spark, path).contains(checkpoint)) {
+          } else if (b == c && w.contains(checkpoint)) {
             writeApplied(spark, checkpoint, batchId)
           } else {
             throw new IllegalStateException(
-              s"view ledger at $c (writer ${committedWriter(spark, path).getOrElse("?")}) " +
+              s"view ledger at $c (writer ${w.getOrElse("?")}) " +
                 s"but this checkpoint's pinned id space expects batch $b — the view " +
                 "was advanced outside this checkpoint while it was stopped; a silent " +
                 "no-op would drop this micro-batch. Restart with a FRESH checkpoint " +

@@ -81,14 +81,8 @@ private[operators] object KeyBuckets {
   private def markerPath(root: String) =
     new org.apache.hadoop.fs.Path(root, "_graft_buckets")
 
-  def publish(spark: SparkSession, root: String, nb: Int = NB): Unit = {
-    val mp = markerPath(root)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(s"$nb\nhash=$HashVersion"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def publish(spark: SparkSession, root: String, nb: Int = NB): Unit =
+    Ledger.write(spark, markerPath(root), s"$nb\nhash=$HashVersion")
 
   /** Writer-entry guard: the stored bucket count AND hash-scheme version
     * must equal the ones this writer will address with. A marker-less
@@ -99,13 +93,10 @@ private[operators] object KeyBuckets {
     * silently wrong.
     */
   def validate(spark: SparkSession, root: String, nb: Int = NB): Unit = {
-    val mp = markerPath(root)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) { publish(spark, root, nb); return }
-    val in = fs.open(mp)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      .split('\n').map(_.trim).filter(_.nonEmpty)
-                finally in.close()
+    val lines = Ledger.read(spark, markerPath(root)) match {
+      case None => publish(spark, root, nb); return
+      case Some(body) => body.split('\n').map(_.trim).filter(_.nonEmpty)
+    }
     val storedNb = lines(0).toInt
     require(storedNb == nb,
       s"bucket count $nb does not match the table's persisted _graft_buckets " +

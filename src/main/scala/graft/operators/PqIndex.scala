@@ -252,9 +252,9 @@ object PqIndex {
   //
   //   path/v=N/codes      the code table encoded under codebook N
   //   path/v=N/_codebook  that codebook (cid, float vector rows)
-  //   path/_graft_pq_current   the current version (atomic OVERWRITE flip)
+  //   path/_graft_pq_current   the current version (atomic flip)
   //   path/_tombstones    ROOT-level forget vectors — they outlive retrain
-  //   path/_pins/...      reader snapshot pins ([[withSnapshot]])
+  //   path/_reader_pins/...  reader snapshot pins ([[withSnapshot]])
   //
   // [[retrain]] trains on the CURRENT live corpus, encodes it under
   // v = N+1, flips the marker, and GCs superseded versions that no
@@ -325,26 +325,14 @@ object PqIndex {
   /** The live version — fails loudly on a non-versioned root. */
   def currentVersion(spark: SparkSession, path: String): Int = {
     val mp = currentMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(mp),
-      s"no version marker at $path — not a versioned PQ index (buildVersioned first)")
-    val in = fs.open(mp)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-    finally in.close()
+    val raw = Ledger.read(spark, mp).getOrElse(throw new IllegalArgumentException(
+      s"no version marker at $path — not a versioned PQ index (buildVersioned first)"))
+    raw.toIntOption.getOrElse(throw new IllegalStateException(
+      s"corrupt version marker at $mp (contents: '$raw')"))
   }
 
-  private def flipCurrent(spark: SparkSession, path: String, v: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val mp = currentMarkerPath(path)
-    val fs = mp.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path, "_graft_pq_current.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(mp),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  private def flipCurrent(spark: SparkSession, path: String, v: Int): Unit =
+    Ledger.write(spark, currentMarkerPath(path), v.toString)
 
   private def saveCodebook(spark: SparkSession, path: String, v: Int,
                            cb: Array[Seq[Float]]): Unit = {
@@ -408,41 +396,14 @@ object PqIndex {
       adcLut(probe, loadCodebook(spark, path, v)), topN)
   }
 
-  private def pinsDir(path: String) = new org.apache.hadoop.fs.Path(path, "_pins")
-
-  private def pinnedVersions(spark: SparkSession, path: String): Set[Int] = {
-    val pd = pinsDir(path)
-    val fs = pd.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(pd)) Set.empty
-    else fs.listStatus(pd).iterator.flatMap { st =>
-      val in = fs.open(st.getPath)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split('\n')
-                  finally in.close()
-      val v = lines(0).trim.toInt
-      val ts = lines(1).trim.toLong
-      if (System.currentTimeMillis() - ts <= PinTtlMs) Some(v) else None
-    }.toSet
-  }
-
-  /** Snapshot bracket: resolves the current version ONCE, registers a pin
-    * holding it, and runs `f` against that version — a concurrent
-    * [[retrain]] can flip and GC freely, but the pinned version's codes
-    * AND codebook survive until the bracket exits (or [[PinTtlMs]]
-    * expires — a crashed reader cannot block reclamation forever, the
-    * Scd2Dim pin contract).
+  /** Snapshot bracket: runs `f` against the current version under a
+    * reader pin ([[Ledger.withPin]]) — a concurrent [[retrain]] can flip
+    * and GC freely, but the pinned version's codes AND codebook survive
+    * until the bracket exits (or [[PinTtlMs]] expires — a crashed reader
+    * cannot block reclamation forever, the Scd2Dim pin contract).
     */
-  def withSnapshot[A](spark: SparkSession, path: String)(f: Int => A): A = {
-    val v = currentVersion(spark, path)
-    val pd = pinsDir(path)
-    val fs = pd.getFileSystem(spark.sessionState.newHadoopConf())
-    val pin = new org.apache.hadoop.fs.Path(pd,
-      s"pin_${java.util.UUID.randomUUID().toString}")
-    val out = fs.create(pin, true)
-    try out.write(s"$v\n${System.currentTimeMillis()}"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    try f(v) finally fs.delete(pin, false)
-  }
+  def withSnapshot[A](spark: SparkSession, path: String)(f: Int => A): A =
+    Ledger.withPin(spark, path)(() => currentVersion(spark, path))(f)
 
   /** Retrain on the CURRENT live corpus and atomically swap: train a new
     * codebook on `emb` (root tombstones anti-joined out first — a
@@ -465,7 +426,7 @@ object PqIndex {
     saveCodebook(spark, path, nv, cb)
     flipCurrent(spark, path, nv)
     // GC: versions below the new current that no live pin references
-    val keep = pinnedVersions(spark, path) + nv
+    val keep = Ledger.livePins(spark, path, PinTtlMs).toSet + nv
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     fs.listStatus(root).iterator

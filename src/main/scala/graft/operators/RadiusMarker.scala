@@ -17,28 +17,15 @@ private[operators] object RadiusMarker {
 
   def markerPath(path: String) = new Path(path, "_graft_tau")
 
-  def write(spark: SparkSession, path: String, tau: Int): Unit = {
-    val mp = markerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(tau.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+  def write(spark: SparkSession, path: String, tau: Int): Unit =
+    Ledger.write(spark, markerPath(path), tau.toString)
 
   /** The persisted radius; `default` for a marker-less artifact (FastSS:
     * 1, the only radius that existed pre-marker; PassJoin indexes are
     * never marker-less — they postdate the discipline).
     */
-  def stored(spark: SparkSession, path: String, default: Int): Int = {
-    val mp = markerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) default
-    else {
-      val in = fs.open(mp)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-      finally in.close()
-    }
-  }
+  def stored(spark: SparkSession, path: String, default: Int): Int =
+    Ledger.read(spark, markerPath(path)).fold(default)(_.toInt)
 
   def validate(spark: SparkSession, path: String, tau: Int, default: Int): Unit = {
     val s = stored(spark, path, default)

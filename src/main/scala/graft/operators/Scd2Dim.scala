@@ -82,38 +82,14 @@ object Scd2Dim {
 
   private def stagePath(path: String) = new Path(path + ".merge_stage")
 
-  private def commitMarkerPath(path: String) =
-    new Path(path, "_graft_committed_batch")
+  // THIS ledger advance is the jointly-atomic commit of every bucket the
+  // merge touched
+  private def markCommitted(spark: SparkSession, path: String, v: Int): Unit =
+    Ledger.commit(spark, path, v, writer = None)
 
-  private def markCommitted(spark: SparkSession, path: String, v: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val mp = commitMarkerPath(path)
-    val fs = mp.getFileSystem(conf)
-    // write-temp-then-OVERWRITE-rename (AggIndex's rationale): never
-    // half-written, never absent once first written — THIS rename is the
-    // jointly-atomic commit of every bucket the merge touched
-    val tmp = new Path(path, "_graft_committed_batch.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(mp),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private def committedVersion(spark: SparkSession, path: String): Int = {
-    val mp = commitMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(mp),
-      s"no commit ledger at $path — not an Scd2Dim-managed root (seed first)")
-    val in = fs.open(mp)
-    val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-              finally in.close()
-    try raw.toInt catch {
-      case _: NumberFormatException => throw new IllegalStateException(
-        s"corrupt commit ledger at $path (contents: '$raw')")
-    }
-  }
+  private def committedVersion(spark: SparkSession, path: String): Int =
+    Ledger.committed(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"no commit ledger at $path — not an Scd2Dim-managed root (seed first)"))._1
 
   /** The committed version directory of every bucket (or of `onlyBuckets`):
     * per bucket, the highest `v=` at or below the ledger. ONE driver-side
@@ -313,7 +289,7 @@ object Scd2Dim {
                            buckets: Set[Int], keep: Int): Unit = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val pinFloor = activePinFloor(spark, path)
+    val pinFloor = Ledger.livePins(spark, path, PinTtlMs).minOption
     buckets.foreach { b =>
       val bp = new Path(root, s"kb=$b")
       if (fs.exists(bp)) {
@@ -347,16 +323,16 @@ object Scd2Dim {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(stagePath(path), true)
-    if (!fs.exists(commitMarkerPath(path))) return
-    val c = committedVersion(spark, path)
-    fs.listStatus(root).iterator
-      .filter(d => d.isDirectory && d.getPath.getName.startsWith("kb="))
-      .foreach { d =>
-        fs.listStatus(d.getPath).iterator
-          .filter(vd => vd.isDirectory && vd.getPath.getName.startsWith("v=") &&
-            vd.getPath.getName.stripPrefix("v=").toInt > c)
-          .foreach(vd => fs.delete(vd.getPath, true))
-      }
+    Ledger.committed(spark, path).foreach { case (c, _) =>
+      fs.listStatus(root).iterator
+        .filter(d => d.isDirectory && d.getPath.getName.startsWith("kb="))
+        .foreach { d =>
+          fs.listStatus(d.getPath).iterator
+            .filter(vd => vd.isDirectory && vd.getPath.getName.startsWith("v=") &&
+              vd.getPath.getName.stripPrefix("v=").toInt > c)
+            .foreach(vd => fs.delete(vd.getPath, true))
+        }
+    }
   }
 
   /** Wire an updates stream into the merge — one [[upsertBatch]] per
@@ -428,8 +404,6 @@ object Scd2Dim {
     presentation(committedRows(spark, path, None,
       committedVersion(spark, path)))
 
-  private def pinsDir(path: String) = new Path(path, "_reader_pins")
-
   /** Reader pins older than this are presumed crashed and ignored by GC
     * (a kill -9'd reader must not block reclamation forever). A snapshot
     * bracket outliving the TTL falls back to the one-generation grace —
@@ -438,96 +412,21 @@ object Scd2Dim {
     */
   val PinTtlMs: Long = 6L * 3600 * 1000
 
-  /** The oldest ledger value any live (non-expired) reader pin holds.
-    * Runs under the merge's single-WRITER discipline but races READER
-    * brackets freely: a pin released between the listing and the open is
-    * skipped (its reader is done — protecting nothing is correct), and
-    * expired pins are deleted here so `_reader_pins` stays bounded by
-    * the live-reader count instead of growing one file per crashed
-    * bracket forever.
-    */
-  private def activePinFloor(spark: SparkSession, path: String): Option[Int] = {
-    val d = pinsDir(path)
-    val fs = d.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(d)) None
-    else {
-      val now = System.currentTimeMillis()
-      fs.listStatus(d).iterator
-        // name filter: a crashed [[withSnapshot]] rename can strand a
-        // `.pin-*.tmp`; it must not masquerade as a live pin — but it
-        // must still be TTL-DELETED (not merely skipped), else a reader
-        // that dies between create and rename leaks the tmp file forever
-        // (r15 ADVICE): reap expired tmps here, never parsing them
-        .filter { st =>
-          val n = st.getPath.getName
-          if (st.isFile && n.startsWith(".pin-") && n.endsWith(".tmp") &&
-              now - st.getModificationTime > PinTtlMs)
-            fs.delete(st.getPath, false) // stranded tmp of a crashed reader
-          st.isFile && n.startsWith("pin-")
-        }
-        .flatMap { st =>
-          if (now - st.getModificationTime > PinTtlMs) {
-            fs.delete(st.getPath, false) // presumed-crashed reader
-            None
-          } else {
-            try {
-              val in = fs.open(st.getPath)
-              val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                        finally in.close()
-              raw.toIntOption
-            } catch {
-              case _: java.io.FileNotFoundException => None // released mid-listing
-            }
-          }
-        }
-        .reduceOption(_ min _)
-    }
-  }
-
   /** LEDGER-PINNED snapshot read (r13 verdict task 6): resolve the
-    * dimension under the ledger, register a reader pin holding that
-    * value, run `f` over the frozen snapshot, and release the pin —
+    * dimension under a reader pin holding the ledger value
+    * ([[Ledger.withPin]]), run `f` over the frozen snapshot, and release
+    * the pin —
     * [[gcSuperseded]] retains, per bucket, every version an active pin
     * can still resolve, so the snapshot's files survive ANY number of
     * concurrent merges for the bracket's lifetime (vs plain [[read]]'s
     * one-generation grace). Pins expire after [[PinTtlMs]] so a crashed
-    * reader cannot block reclamation forever.
-    *
-    * The pin is registered immediately AFTER the ledger read and before
-    * bucket-version resolution (r14 verdict/ADVICE: the earlier doc
-    * claimed the reverse order), and the read->pin window is closed by
-    * construction, not by the grace: the pin lands via temp-file +
-    * ATOMIC RENAME (a concurrent GC can never open a half-written pin,
-    * parse "" to None, and ignore it), and the ledger is RE-READ after
-    * the rename. Any merge+GC pair that could have reclaimed the
-    * resolved version inside the read->pin window must have advanced the
-    * ledger before its GC listed pins — i.e. before our rename, hence
-    * before the re-read — so a re-read returning the pinned value proves
-    * every later GC sees the pin; a changed value re-pins and re-checks.
+    * reader cannot block reclamation forever. The pin holds the LEDGER
+    * value and lands before bucket-version resolution, so every version
+    * the snapshot resolves is one the pin protects.
     */
-  def withSnapshot[T](spark: SparkSession, path: String)(f: DataFrame => T): T = {
-    val conf = spark.sessionState.newHadoopConf()
-    val d = pinsDir(path)
-    val fs = d.getFileSystem(conf)
-    fs.mkdirs(d)
-    val id = java.util.UUID.randomUUID()
-    val pin = new Path(d, s"pin-$id")
-    def pinAt(v: Int): Unit = {
-      val tmp = new Path(d, s".pin-$id.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(v.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-      fc.rename(fs.makeQualified(tmp), fs.makeQualified(pin),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-    try {
-      var c = committedVersion(spark, path)
-      pinAt(c)
-      var c2 = committedVersion(spark, path)
-      while (c2 != c) { c = c2; pinAt(c); c2 = committedVersion(spark, path) }
+  def withSnapshot[T](spark: SparkSession, path: String)(f: DataFrame => T): T =
+    Ledger.withPin(spark, path)(() => committedVersion(spark, path)) { c =>
       f(presentation(committedRows(spark, path, None, c)))
-    } finally fs.delete(pin, false)
-  }
+    }
 }
 

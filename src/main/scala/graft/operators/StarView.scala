@@ -55,8 +55,8 @@ import org.apache.spark.sql.functions._
   *    delta's buckets (plan-asserted in StarViewSpec).
   *
   * Crash/replay discipline is [[JoinView]]'s verbatim: one
-  * `_graft_committed_batch` ledger for ALL subtables (atomic
-  * OVERWRITE-rename), orphan cleanup of `batch > committed` directories
+  * `_graft_committed_batch` ledger for ALL subtables ([[Ledger.commit]]),
+  * orphan cleanup of `batch > committed` directories
   * before re-append, explicit-id replay no-op, schema sidecars beside
   * each subtable so empty sides read typed.
   *
@@ -69,9 +69,6 @@ object StarView {
 
   private def kbOf(df: DataFrame, key: String): Column = KeyBuckets.kbFor(df, key)
 
-  private def commitMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_committed_batch")
-
   private def metaMarkerPath(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_star_meta")
 
@@ -80,24 +77,16 @@ object StarView {
     * out-of-band metadata ([[JoinView]]'s join-key marker, star edition).
     */
   private def writeMeta(spark: SparkSession, path: String, factKey: String,
-                        dimKeys: Seq[String], cdc: Boolean): Unit = {
-    val mp = metaMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(mp, true)
-    try out.write(s"fact=$factKey\ndims=${dimKeys.mkString(",")}\ncdc=$cdc"
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+                        dimKeys: Seq[String], cdc: Boolean): Unit =
+    Ledger.write(spark, metaMarkerPath(path),
+      s"fact=$factKey\ndims=${dimKeys.mkString(",")}\ncdc=$cdc")
 
   /** (factKey, dimKeys, cdc) — fails loudly on a non-StarView root. */
   def meta(spark: SparkSession, path: String): (String, Seq[String], Boolean) = {
     val mp = metaMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(mp), s"no star meta marker at $path — not a StarView root (build first)")
-    val in = fs.open(mp)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+    val lines = Ledger.read(spark, mp).getOrElse(throw new IllegalArgumentException(
+      s"no star meta marker at $path — not a StarView root (build first)"))
       .split('\n').map(_.trim).filter(_.nonEmpty)
-              finally in.close()
     def tagged(t: String) = lines.find(_.startsWith(s"$t="))
       .map(_.stripPrefix(s"$t=")).getOrElse(
         throw new IllegalStateException(s"corrupt star meta at $mp: no $t line"))
@@ -105,44 +94,12 @@ object StarView {
       tagged("cdc").toBoolean)
   }
 
-  private def markCommitted(spark: SparkSession, path: String, batch: Int,
-                            writer: String): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val mp = commitMarkerPath(path)
-    val fs = mp.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(path, "_graft_committed_batch.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$batch\n$writer".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(mp),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+  /** (batch, writer) of the star's commit ledger. */
+  private def ledger(spark: SparkSession, path: String): (Int, Option[String]) =
+    Ledger.committed(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"no commit ledger at $path — not a StarView-managed root (build first)"))
 
-  private def committedBatch(spark: SparkSession, path: String): Int = {
-    val mp = commitMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(mp),
-      s"no commit ledger at $path — not a StarView-managed root (build first)")
-    val in = fs.open(mp)
-    val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      .split('\n')(0).trim
-              finally in.close()
-    try raw.toInt catch {
-      case _: NumberFormatException => throw new IllegalStateException(
-        s"corrupt commit ledger at $path (contents: '$raw')")
-    }
-  }
-
-  private def committedWriter(spark: SparkSession, path: String): Option[String] = {
-    val mp = commitMarkerPath(path)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) return None
-    val in = fs.open(mp)
-    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.split('\n')
-                finally in.close()
-    if (lines.length < 2) None else Some(lines(1).trim)
-  }
+  private def committedBatch(spark: SparkSession, path: String): Int = ledger(spark, path)._1
 
   /** Subtable names in side order: fact, dims, key indexes, view. */
   private def subs(dimKeys: Seq[String]): Seq[String] =
@@ -293,7 +250,7 @@ object StarView {
     }
     writeMeta(spark, path, factKey, dimKeys, cdc)
     KeyBuckets.publish(spark, path)
-    markCommitted(spark, path, 0, writer = "build")
+    Ledger.commit(spark, path, 0, Some("build"))
   }
 
   private def guardOneRowPerKey(d: DataFrame, key: String, side: String,
@@ -437,7 +394,7 @@ object StarView {
         append(dv, factKey, s"$path/view", b, sizeHint = Some(hint))
       }
     } finally keep.foreach(_.unpersist())
-    markCommitted(spark, path, b, writer)
+    Ledger.commit(spark, path, b, Some(writer))
     b
   }
 
@@ -559,7 +516,7 @@ object StarView {
       append(dv.select(viewCols.map(col).toIndexedSeq: _*), factKey, s"$path/view", b,
         sizeHint = Some((wf +: wds).map(PlanProbes.statsBytes).sum))
     } finally keep.foreach(_.unpersist())
-    markCommitted(spark, path, b, writer)
+    Ledger.commit(spark, path, b, Some(writer))
     b
   }
 
@@ -667,33 +624,6 @@ object StarView {
     }
   }
 
-  private def appliedMarkerPath(checkpoint: String) =
-    new org.apache.hadoop.fs.Path(checkpoint, "graft_applied_batchid")
-
-  private def readApplied(spark: SparkSession, checkpoint: String): Long = {
-    val mp = appliedMarkerPath(checkpoint)
-    val fs = mp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(mp)) -1L
-    else {
-      val in = fs.open(mp)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
-  }
-
-  private def writeApplied(spark: SparkSession, checkpoint: String, batchId: Long): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val mp = appliedMarkerPath(checkpoint)
-    val fs = mp.getFileSystem(conf)
-    val tmp = new org.apache.hadoop.fs.Path(checkpoint, "graft_applied_batchid.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(batchId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, conf)
-    fc.rename(fs.makeQualified(tmp), fs.makeQualified(mp),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
   /** Stream a FULL CHANGEFEED of the FACT side into the star view — the
     * production interleave (facts stream continuously, dims change by
     * batch ingests between stream runs): each trigger's rows split on
@@ -715,9 +645,9 @@ object StarView {
         val (factKey, dimKeys, _) = meta(spark, path)
         val base = IndexStream.pinnedBase(batchDf,
           committedBatch(spark, path) + 1, checkpoint)
-        if (batchId > readApplied(spark, checkpoint)) {
+        if (batchId > JoinView.readApplied(spark, checkpoint)) {
           val b = base + batchId.toInt
-          val c = committedBatch(spark, path)
+          val (c, w) = ledger(spark, path)
           if (b == c + 1) {
             val emptyDims = dimKeys.indices.map(i =>
               readSub(spark, s"$path/d$i").drop("kb", "batch", "sgn").limit(0))
@@ -726,13 +656,13 @@ object StarView {
               emptyDims, path, batch = b, writer = checkpoint,
               factDeletes = batchDf.filter(col(opCol).eqNullSafe("d"))
                 .select(col(factKey)))
-            writeApplied(spark, checkpoint, batchId)
-          } else if (b == c && committedWriter(spark, path).contains(checkpoint)) {
+            JoinView.writeApplied(spark, checkpoint, batchId)
+          } else if (b == c && w.contains(checkpoint)) {
             // crash window: we committed b, lost the applied-marker write
-            writeApplied(spark, checkpoint, batchId)
+            JoinView.writeApplied(spark, checkpoint, batchId)
           } else {
             throw new IllegalStateException(
-              s"star ledger at $c (writer ${committedWriter(spark, path).getOrElse("?")}) " +
+              s"star ledger at $c (writer ${w.getOrElse("?")}) " +
                 s"but this checkpoint's pinned id space expects batch $b — the view " +
                 "was advanced outside this checkpoint while it was stopped; a silent " +
                 "no-op would drop this micro-batch. Restart with a FRESH checkpoint " +

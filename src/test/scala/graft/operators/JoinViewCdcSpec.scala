@@ -367,6 +367,21 @@ class JoinViewCdcSpec extends SparkSpec {
       s"mergedForDays read not pruned: $prunedParts vs full $fullParts partitions")
   }
 
+  test("driver-side day bucket ids equal the pd= expression Spark evaluates") {
+    val spark0 = spark
+    import spark0.implicits._
+    // ~1,000 days from 1960 to 2039 (pre-1970 included) plus leap days
+    val start = java.time.LocalDate.of(1960, 1, 1)
+    val days = ((0 until 1000).map(i => start.plusDays(i * 29L).toString) ++
+      Seq("1960-02-29", "1968-02-29", "2000-02-29", "2024-02-29", "2100-03-01")).distinct
+    for (pdb <- Seq(JoinView.PDB, 7, 64)) {
+      val bySpark = days.toDF("d")
+        .select(JoinView.pdOf(col("d").cast("timestamp"), pdb)).collect().map(_.getInt(0))
+      assert(days.map(JoinView.pdOfDay(_, pdb)) == bySpark.toSeq,
+        s"driver pd ids diverge from the written expression at pdb = $pdb")
+    }
+  }
+
   test("mergedForDays on a view without the day layout fails loudly") {
     val path = Files.createTempDirectory("graft_jvcdc_noday_").toString
     JoinView.build(mkA(A0), mkB(B0), "k", path, cdc = true)

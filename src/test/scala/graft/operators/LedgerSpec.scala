@@ -1,0 +1,100 @@
+package graft.operators
+
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+
+import graft.SparkSpec
+
+/** The shared sidecar protocol: atomic publish leaves nothing behind,
+  * both commit-ledger forms keep their exact bytes, corrupt integer
+  * markers fail naming the file, and the pin GC reaps crashed readers.
+  */
+class LedgerSpec extends SparkSpec {
+
+  private def tmpRoot(tag: String) = Files.createTempDirectory(s"graft_ledger_$tag").toString
+
+  private def fs(root: String) =
+    new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
+
+  test("write publishes the body and leaves no tmp file; an absent file reads None") {
+    val root = tmpRoot("write_")
+    val f = new Path(root, "_graft_x")
+    assert(Ledger.read(spark, f).isEmpty)
+    Ledger.write(spark, f, "a\nb")
+    Ledger.write(spark, f, "c\n")
+    assert(Ledger.read(spark, f).contains("c"))
+    val left = Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
+    assert(!left.exists(_.contains(".tmp")), s"tmp file left behind: ${left.mkString(", ")}")
+  }
+
+  test("both commit-ledger forms keep their exact bytes and read back") {
+    val plain = tmpRoot("plain_")
+    Ledger.commit(spark, plain, 7, writer = None)
+    assert(new String(Files.readAllBytes(Paths.get(plain, "_graft_committed_batch")), UTF_8) == "7")
+    assert(Ledger.committed(spark, plain).contains((7, None)))
+
+    val tagged = tmpRoot("tagged_")
+    Ledger.commit(spark, tagged, 7, Some("writer-x"))
+    assert(new String(Files.readAllBytes(Paths.get(tagged, "_graft_committed_batch")), UTF_8) ==
+      "7\nwriter-x")
+    assert(Ledger.committed(spark, tagged).contains((7, Some("writer-x"))))
+
+    assert(Ledger.committed(spark, tmpRoot("none_")).isEmpty)
+  }
+
+  test("a corrupt integer marker fails naming its file") {
+    def corrupt(name: String, body: String): String = {
+      val root = tmpRoot("corrupt_")
+      Files.write(Paths.get(root, name), body.getBytes(UTF_8))
+      root
+    }
+    val cases: Seq[(String, String => Any)] = Seq(
+      "_graft_committed_batch" -> (r => Ledger.committed(spark, r)),
+      "_graft_layout" -> (r => AggIndex.layoutVersion(spark, r)),
+      "_graft_pq_current" -> (r => PqIndex.currentVersion(spark, r)))
+    for ((name, readIt) <- cases; body <- Seq("", "x7")) {
+      val root = corrupt(name, body)
+      val e = intercept[IllegalStateException](readIt(root))
+      assert(e.getMessage.contains(new Path(root, name).toString),
+        s"$name ('$body'): message does not name the file: ${e.getMessage}")
+    }
+  }
+
+  test("livePins reaps expired pins and stranded tmps, ignores a zero-byte pin") {
+    val root = tmpRoot("pins_")
+    val dir = new Path(root, "_reader_pins")
+    val f = fs(root)
+    def put(name: String, body: String, ageMs: Long): Path = {
+      val p = new Path(dir, name)
+      val out = f.create(p, true)
+      try out.write(body.getBytes(UTF_8)) finally out.close()
+      if (ageMs > 0) f.setTimes(p, System.currentTimeMillis() - ageMs, -1)
+      p
+    }
+    val ttl = 60000L
+    val live = put("pin-live", "4", 0)
+    val torn = put("pin-torn", "", 0)
+    val expired = put("pin-expired", "1", ttl + 60000L)
+    val freshTmp = put(".pin-fresh.tmp", "2", 0)
+    val staleTmp = put(".pin-stale.tmp", "3", ttl + 60000L)
+    assert(Ledger.livePins(spark, root, ttl) == Seq(4))
+    assert(f.exists(live) && f.exists(torn) && f.exists(freshTmp))
+    assert(!f.exists(expired), "an expired pin must be deleted")
+    assert(!f.exists(staleTmp), "a stranded tmp older than the TTL must be deleted")
+    assert(Ledger.livePins(spark, tmpRoot("nopins_"), ttl).isEmpty)
+  }
+
+  test("withPin re-resolves after pinning and releases the pin") {
+    val root = tmpRoot("withpin_")
+    // the value moves once between the first resolve and the re-read
+    val answers = Iterator(1, 2, 2)
+    val seen = Ledger.withPin(spark, root)(() => answers.next()) { v =>
+      assert(Ledger.livePins(spark, root, 60000L) == Seq(v))
+      v
+    }
+    assert(seen == 2)
+    assert(Ledger.livePins(spark, root, 60000L).isEmpty, "the pin outlived its bracket")
+  }
+}

@@ -125,6 +125,25 @@ class PqRetrainSpec extends SparkSpec {
     assert(PqIndex.currentVersion(spark, path) == 3)
   }
 
+  test("a torn pin and an expired pin neither fail a retrain nor block its GC") {
+    val path = Files.createTempDirectory("graft_pqrt_badpin_").toString
+    PqIndex.buildVersioned(emb0, path)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val pins = new org.apache.hadoop.fs.Path(path, "_reader_pins")
+    // a reader that died between creating its pin and writing it
+    fs.create(new org.apache.hadoop.fs.Path(pins, "pin-torn"), true).close()
+    // a reader that died long ago while holding v1
+    val expired = new org.apache.hadoop.fs.Path(pins, "pin-expired")
+    val out = fs.create(expired, true)
+    try out.write("1".getBytes("UTF-8")) finally out.close()
+    fs.setTimes(expired, System.currentTimeMillis() - PqIndex.PinTtlMs - 60000L, -1)
+    assert(PqIndex.retrain(spark, path, emb0) == 2)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/v=1")),
+      "an expired or unparseable pin must not keep v1 alive")
+    assert(!fs.exists(expired), "the expired pin must be deleted")
+  }
+
   test("forgotten ids stay forgotten through a retrain") {
     val path = Files.createTempDirectory("graft_pqrt_fgt_").toString
     PqIndex.buildVersioned(emb0, path)
