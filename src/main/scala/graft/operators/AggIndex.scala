@@ -110,11 +110,8 @@ object AggIndex {
   /** The table's highest written layout version — absent marker means a
     * pre-versioning (= v1-layout) table.
     */
-  def layoutVersion(spark: SparkSession, path: String): Int = {
-    val mp = layoutMarkerPath(path)
-    Ledger.read(spark, mp).fold(1)(raw => raw.toIntOption.getOrElse(
-      throw new IllegalStateException(s"corrupt layout marker at $mp (contents: '$raw')")))
-  }
+  def layoutVersion(spark: SparkSession, path: String): Int =
+    Ledger.readInt(spark, layoutMarkerPath(path)).getOrElse(1)
 
   private def bumpLayout(spark: SparkSession, path: String, version: Int): Unit =
     if (version > layoutVersion(spark, path))

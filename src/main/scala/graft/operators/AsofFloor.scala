@@ -51,11 +51,13 @@ private[operators] object AsofFloor {
     write(spark, tmpDir, floor, rewrite)
   }
 
-  def read(spark: SparkSession, dir: String): Option[(Int, String)] =
-    Ledger.read(spark, new Path(dir, Marker)).map { body =>
+  def read(spark: SparkSession, dir: String): Option[(Int, String)] = {
+    val file = new Path(dir, Marker)
+    Ledger.read(spark, file).map { body =>
       val lines = body.split('\n')
-      (lines(0).trim.toInt, lines.drop(1).mkString("\n").trim)
+      (Ledger.int(file, body, lines(0)), lines.drop(1).mkString("\n").trim)
     }
+  }
 
   /** Gate an as-of read: `upToBatch` below the floor fails LOUDLY, naming
     * the rewrite that retired that history.

@@ -76,7 +76,7 @@ object IndexMaintenance {
   private[operators] val MaxBatchMarker = "_graft_max_batch"
 
   private[operators] def readMaxBatchMarker(spark: SparkSession, path: String): Option[Int] =
-    Ledger.read(spark, new Path(path, MaxBatchMarker)).map(_.toInt)
+    Ledger.readInt(spark, new Path(path, MaxBatchMarker))
 
   /** True for a visible data file: parquet, not hidden, and not inside a
     * hidden directory below `root` (e.g. the `_tombstones` delete-vector

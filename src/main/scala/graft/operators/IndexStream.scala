@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Shared foreachBatch append discipline for streaming into a persisted
   * index ([[SignatureIndex]], [[SubstringIndex]]): plain batch writer (the
@@ -21,6 +21,11 @@ import org.apache.spark.sql.DataFrame
   * live, the stream is the path's only appender; batch and stream appends
   * compose safely in SEQUENCE, each new checkpoint re-reading the stored
   * max batch.
+  *
+  * The join views ([[JoinView]], [[StarView]]) stream through
+  * [[exactlyOnce]] instead: their rows are not duplicate-insensitive, so
+  * the same pinned ids are guarded by an applied marker and the commit
+  * ledger's writer line.
   */
 private[operators] object IndexStream {
 
@@ -44,17 +49,71 @@ private[operators] object IndexStream {
     */
   def pinnedBase(rows: DataFrame, nextBatch: => Int, checkpoint: String): Int = {
     val markerPath = new org.apache.hadoop.fs.Path(checkpoint, "graft_base_batch")
-    val fs = markerPath.getFileSystem(rows.sparkSession.sessionState.newHadoopConf())
-    Ledger.read(rows.sparkSession, markerPath).map(_.toInt).getOrElse {
+    Ledger.readInt(rows.sparkSession, markerPath).getOrElse {
       val b = nextBatch
-      // create-if-absent, not Ledger.write: two starts racing on one
+      // first writer wins, not Ledger.write: two starts racing on one
       // checkpoint must not both win — the loser fails here
-      val out = fs.create(markerPath, false)
-      try out.write(b.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      Ledger.writeOnce(rows.sparkSession, markerPath, b.toString)
       b
     }
   }
+
+  /** The checkpoint-local applied marker of [[exactlyOnce]]: the highest
+    * foreachBatch id this checkpoint committed, -1 before the first.
+    */
+  private def appliedMarker(checkpoint: String) =
+    new org.apache.hadoop.fs.Path(checkpoint, "graft_applied_batchid")
+
+  def readApplied(spark: SparkSession, checkpoint: String): Long =
+    Ledger.readInt(spark, appliedMarker(checkpoint)).fold(-1L)(_.toLong)
+
+  private def writeApplied(spark: SparkSession, checkpoint: String, batchId: Long): Unit =
+    Ledger.write(spark, appliedMarker(checkpoint), batchId.toString)
+
+  /** Stream `rows` into a ledgered view root ([[ViewStore]]): each
+    * micro-batch runs `apply(rows, batch)` under a REAL pinned batch id
+    * (base + foreachBatch id, the [[pinnedBase]] discipline), and `apply`
+    * must commit that id to the root's ledger with this checkpoint as the
+    * writer. Exactly-once is carried by TWO markers, because view rows
+    * are not duplicate-insensitive:
+    *  - the checkpoint-local applied marker (highest foreachBatch id
+    *    this checkpoint committed) makes replays definite no-ops;
+    *  - the ledger's writer line closes the crash window between
+    *    the ledger commit and the applied-marker write (batch committed by
+    *    THIS checkpoint -> no-op; committed by anyone else -> the id
+    *    space was taken while the stream was stopped, and silently
+    *    no-opping would DROP this micro-batch's data — fail loudly and
+    *    direct the operator to a fresh checkpoint instead).
+    */
+  def exactlyOnce(rows: DataFrame, root: String, checkpoint: String)
+                 (apply: (DataFrame, Int) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    rows.writeStream
+      .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
+        val spark = batchDf.sparkSession
+        val base = pinnedBase(batchDf, ViewStore.committed(spark, root) + 1, checkpoint)
+        if (batchId > readApplied(spark, checkpoint)) {
+          val b = base + batchId.toInt
+          val (c, w) = ViewStore.ledger(spark, root)
+          if (b == c + 1) {
+            apply(batchDf, b)
+            writeApplied(spark, checkpoint, batchId)
+          } else if (b == c && w.contains(checkpoint)) {
+            // crash window: we committed b, lost the applied-marker write
+            writeApplied(spark, checkpoint, batchId)
+          } else {
+            throw new IllegalStateException(
+              s"view ledger at $c (writer ${w.getOrElse("?")}) " +
+                s"but this checkpoint's pinned id space expects batch $b — the view " +
+                "was advanced outside this checkpoint while it was stopped; a silent " +
+                "no-op would drop this micro-batch. Restart with a FRESH checkpoint " +
+                "(the view data itself is intact).")
+          }
+        }
+        ()
+      }
+      .option("checkpointLocation", checkpoint)
+      .start()
 
   /** Auto-compaction threshold for streamed ingest: when a micro-batch
     * append leaves more than this many data files, the index is compacted

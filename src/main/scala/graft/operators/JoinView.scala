@@ -30,13 +30,11 @@ import org.apache.spark.sql.functions._
   * batch-sized so AQE broadcasts them against the pruned scan. The view
   * is append-only — no rewrite, compaction-friendly.
   *
-  * Crash discipline = [[AggIndex]]'s ledger: a batch's three appends
-  * (a, b, view) publish under `batch=N` partitions and only then does the
-  * `_graft_committed_batch` marker advance ([[Ledger.commit]]).
-  * Every read — merged(), and the `old` sides inside ingest — filters
-  * `batch <= committed`, so a writer that died mid-batch leaves only
-  * invisible orphans; the next ingest deletes any `batch > committed`
-  * directories before re-appending under the same id, so a retry can
+  * Storage format and crash discipline are [[ViewStore]]'s: a batch's
+  * three appends (a, b, view) publish under `batch=N` partitions and only
+  * then does the `_graft_committed_batch` ledger advance; every read
+  * filters `batch <= committed`, and the next ingest deletes a crashed
+  * writer's orphans before re-appending under the same id, so a retry can
   * never double-materialize a pair. mergedAsOf(N) is time travel for
   * free: the view as it stood after batch N is a prefix filter on the
   * immutable batch column.
@@ -53,11 +51,7 @@ object JoinView {
     */
   val NB = KeyBuckets.NB
 
-  /** Bucket of `key` with its type resolved from the frame — the
-    * canonicalized form ([[KeyBuckets.kbFor]]) keeps an INT-width delta
-    * addressing the same directories as BIGINT-width stored history.
-    */
-  private def kbOf(df: DataFrame, key: String): Column = KeyBuckets.kbFor(df, key)
+  private val Subs = Seq("a", "b", "view")
 
   private def keyMarkerPath(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_join_key")
@@ -148,13 +142,15 @@ object JoinView {
     }
 
   private def readDayMarker(spark: SparkSession, path: String)
-      : Option[(String, Int, String, String)] =
-    Ledger.read(spark, dayColMarkerPath(path)).map { body =>
+      : Option[(String, Int, String, String)] = {
+    val file = dayColMarkerPath(path)
+    Ledger.read(spark, file).map { body =>
       val lines = body.split('\n').map(_.trim).filter(_.nonEmpty)
       def tagged(t: String) = lines.find(_.startsWith(s"$t="))
         .map(_.stripPrefix(s"$t=")).getOrElse("")
-      (lines(0), tagged("pdb").toInt, tagged("hash"), tagged("tz"))
+      (lines(0), Ledger.int(file, body, tagged("pdb")), tagged("hash"), tagged("tz"))
     }
+  }
 
   /** The view subtable's partition columns under the current layout. A
     * day-bucketed view drops `kb=`: no view read prunes on the join key
@@ -167,127 +163,30 @@ object JoinView {
     if (viewDayCol(spark, path).isDefined) Seq("pd", "batch")
     else Seq("kb", "batch")
 
+  /** The `pd=/batch=` layout of a view [[build]] was given a `dayCol`:
+    * the day-bucket partition that makes [[mergedForDays]] a
+    * storage-pruned read. Retraction rows are value-identical to the rows
+    * they cancel ([[cdcTerms]]), so a +1 and its -1 always land under the
+    * SAME pd and the per-bucket sign-sum is self-contained. Appends
+    * cluster on pd ([[ViewStore.append]]): one file per pd directory per
+    * batch, the salt keeping every core busy at <= cores/PDB files per
+    * directory.
+    */
+  private def dayBuckets(dc: String, pdb: Int, key: String): ViewStore.Layout =
+    ViewStore.Layout("pd", pdb, _ => pdOf(col(dc), pdb), key)
+
+  /** The view subtable's persisted layout: [[dayBuckets]] or `kb=`. */
+  private def viewLayout(spark: SparkSession, path: String, key: String): ViewStore.Layout =
+    dayLayout(spark, path).fold(ViewStore.byKey(key)) { case (dc, pdb) =>
+      dayBuckets(dc, pdb, key)
+    }
+
   /** The join-key column name, persisted at build time so key-dependent
     * reads (tombstone anti-joins) need no out-of-band metadata.
     */
   def joinKey(spark: SparkSession, path: String): String =
     Ledger.read(spark, keyMarkerPath(path)).getOrElse(throw new IllegalArgumentException(
       s"no join-key marker at $path — not a JoinView root"))
-
-  /** (batch, writer) of the view's commit ledger — the writer line lets a
-    * resumed stream distinguish its own crash window (batch committed by
-    * THIS checkpoint, applied-marker write lost) from a foreign writer
-    * having taken its id space (which must fail loudly, not no-op — the
-    * no-op would silently drop the new micro-batch's data).
-    */
-  private def ledger(spark: SparkSession, path: String): (Int, Option[String]) =
-    Ledger.committed(spark, path).getOrElse(throw new IllegalArgumentException(
-      s"no commit ledger at $path — not a JoinView-managed root (build first)"))
-
-  private def committedBatch(spark: SparkSession, path: String): Int = ledger(spark, path)._1
-
-  // one file per kb directory per batch (r18; [[appendView]]'s day-layout
-  // rationale applied to the kb writers too): without the clustering
-  // repartition each task opens a file in every kb= directory it has rows
-  // for — tasks x NB files per subtable per batch, and every later pruned
-  // read lists and opens all of them. The shuffle is delta-sized.
-  private def append(df: DataFrame, key: String, sub: String, batch: Int): Unit =
-    PlanProbes.clusteredBy(
-        df.withColumn("kb", kbOf(df, key)).withColumn("batch", lit(batch)),
-        col("kb"), NB, col(key))
-      .write.partitionBy("kb", "batch").mode("append").parquet(sub)
-
-  /** Append to the VIEW subtable under its persisted layout: plain
-    * `kb=/batch=` or, when [[build]] was given a `dayCol`, `kb=/pd=/batch=`
-    * — the secondary day-bucket partition that makes [[mergedForDays]] a
-    * storage-pruned read. Retraction rows are value-identical to the rows
-    * they cancel ([[cdcTerms]]), so a +1 and its -1 always land under the
-    * SAME pd and the per-bucket sign-sum is self-contained.
-    */
-  /** `sizeHint`: pre-join delta bytes for the clustering salt — the view
-    * delta is a JOIN, whose Catalyst size estimate is a product (huge for
-    * a KB-sized delta); see [[PlanProbes.clusteredBy]].
-    */
-  private def appendView(spark: SparkSession, df: DataFrame, key: String,
-                         path: String, batch: Int,
-                         sizeHint: Option[BigInt] = None): Unit =
-    dayLayout(spark, path) match {
-      case Some((dc, pdb)) =>
-        // one file per pd directory: without the clustering shuffle every
-        // task writes a file into every directory it has rows for — pd x
-        // tasks files per batch, the small-file explosion that taxes
-        // every later listing. The shuffle is delta-sized (exactly the
-        // rows being appended).
-        // salted clustering (r18; [[PlanProbes.clusteredBy]]): the bare
-        // repartition(col("pd")) here was AQE-coalescable — measured
-        // collapsing the view encode to one task — and a pd-count pin
-        // alone caps the writers at PDB; the salt keeps every core busy
-        // at <= cores/PDB files per directory
-        PlanProbes.clusteredBy(
-            df.withColumn("pd", pdOf(col(dc), pdb)).withColumn("batch", lit(batch)),
-            col("pd"), pdb, col(key), sizeHint)
-          .write.partitionBy("pd", "batch").mode("append")
-          .parquet(s"$path/view")
-      case None =>
-        df.withColumn("kb", kbOf(df, key)).withColumn("batch", lit(batch))
-          .write.partitionBy("kb", "batch").mode("append").parquet(s"$path/view")
-    }
-
-  /** Persist each subtable's schema as a SIBLING sidecar table (one empty
-    * parquet file at `<sub>_schema`, beside — not inside — the data dir):
-    * an EMPTY side or view — a batch with no appends for one side, a seed
-    * join with no matches — writes only partition metadata, and a later
-    * schema-INFERRED read of it would fail. Every read goes through the
-    * sidecar schema instead, so emptiness is a value, not an error.
-    * Sibling placement (r12 verdict): a sidecar INSIDE the data dir is
-    * listed-and-ignored by every partitioned read (one WARN per read) and
-    * must be rescued across [[IndexMaintenance.compact]]'s swap; beside it
-    * the read never sees it and the swap never moves it.
-    */
-  private def schemaSidecarPath(sub: String): String = s"${sub}_schema"
-
-  private def writeSchemaSidecar(df: DataFrame, key: String, sub: String): Unit = {
-    df.withColumn("kb", kbOf(df, key)).withColumn("batch", lit(0))
-      .limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(schemaSidecarPath(sub))
-    SchemaCache.invalidate(schemaSidecarPath(sub))
-  }
-
-  /** View-subtable sidecar: under the day layout the partition columns
-    * are (pd INT, batch) — no kb ([[viewPartCols]]'s rationale).
-    */
-  private def writeViewSchemaSidecar(df: DataFrame, key: String, path: String,
-                                     dayCol: Option[String]): Unit = {
-    (dayCol match {
-      case Some(dc) => df.withColumn("pd", pdOf(col(dc), PDB))
-      case None => df.withColumn("kb", kbOf(df, key))
-    }).withColumn("batch", lit(0))
-      .limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(schemaSidecarPath(s"$path/view"))
-    SchemaCache.invalidate(schemaSidecarPath(s"$path/view"))
-  }
-
-  private def readSub(spark: SparkSession, sub: String): DataFrame = {
-    val sidecar = new org.apache.hadoop.fs.Path(schemaSidecarPath(sub))
-    val fs = sidecar.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(sidecar)) {
-      // migration guard (r13 ADVICE): pre-r13 tables kept the sidecar
-      // INSIDE the data dir — fail with the rebuild instruction the
-      // writer path gets from the hash-version marker, not a raw
-      // path-not-found from the parquet reader
-      val legacy = new org.apache.hadoop.fs.Path(sub, "_schema")
-      if (fs.exists(legacy)) throw new IllegalStateException(
-        s"schema sidecar for $sub sits at the pre-r13 location $legacy (inside the " +
-          "data dir); this view was written under the old layout — rebuild it " +
-          "(JoinView.build + re-ingest) under the current sibling-sidecar layout")
-      throw new IllegalStateException(
-        s"no schema sidecar at $sidecar — not a JoinView subtable (build first)")
-    }
-    // memoized (r18): the sidecar is immutable between (re)builds and
-    // this schema consult was a footer-inference job per readSub call
-    val schema = SchemaCache.parquetSchema(spark, schemaSidecarPath(sub))
-    spark.read.schema(schema).parquet(sub)
-  }
 
   /** Anti-join a subtable's own `_tombstones` delete vectors out (the
     * shared [[Tombstones]] layout, per subtable so
@@ -296,59 +195,13 @@ object JoinView {
   private def live(df: DataFrame, spark: SparkSession, sub: String, key: String): DataFrame =
     Tombstones.applyTo(df, spark, sub, key)
 
-  /** A stored side, committed rows only, PRUNED to the given key buckets —
-    * the read whose PartitionFilters make ingest delta-sized. Tombstoned
-    * keys are anti-joined out so a later delta cannot resurrect pairs
-    * with a forgotten counterpart.
+  /** A stored side, committed rows only, pruned to the given key buckets
+    * ([[ViewStore.storedPruned]]). Tombstoned keys are anti-joined out so
+    * a later delta cannot resurrect pairs with a forgotten counterpart.
     */
-  private def storedPruned(spark: SparkSession, sub: String, committed: Int,
-                           buckets: Array[Int], key: String): DataFrame =
-    live(readSub(spark, sub)
-      .filter(col("batch") <= committed && col("kb").isin(buckets.map(Int.box): _*))
-      .drop("kb", "batch"), spark, sub, key)
-
-  /** Bounded collect: at most NB bucket ids present in a delta. */
-  private def bucketsOf(delta: DataFrame, key: String): Array[Int] =
-    delta.select(kbOf(delta, key).as("kb")).distinct().collect().map(_.getInt(0))
-
-  /** The delta's key-bucket ids AND the one-row-per-key contract check
-    * from ONE pass over the just-written rows (r19; guide §2.4 "fewer
-    * passes"): these were two separate collect jobs per side per CDC
-    * batch — a per-key count grouped up to its <= NB buckets answers
-    * both. The detailed per-key probe re-runs only on violation, to
-    * build [[guardOneRowPerKey]]'s message (failure path).
-    */
-  private def bucketsAndGuard(d: DataFrame, key: String, side: String,
-                              batch: Int): Array[Int] = {
-    val kbC = KeyBuckets.kb(col(key), d.schema(key).dataType)
-    val rows = d.groupBy(col(key)).agg(count(lit(1)).as("_c"))
-      .groupBy(kbC.as("kb")).agg(max(col("_c")).as("_m"))
-      .collect()
-    if (rows.exists(_.getLong(1) > 1)) guardOneRowPerKey(d, key, side, batch)
-    rows.map(_.getInt(0))
-  }
-
-  /** Delete `batch > committed` partition directories — orphans of a
-    * writer that died between its appends and its commit. Run before
-    * re-appending under the same id so a retry cannot double-materialize.
-    * One listing per ingest (batch cadence, not per-trigger).
-    */
-  private def cleanupOrphans(spark: SparkSession, path: String, committed: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val dayView = viewDayCol(spark, path).isDefined
-    for (sub <- Seq("a", "b", "view")) {
-      val pattern =
-        if (sub == "view" && dayView) s"$path/view/pd=*/batch=*"
-        else s"$path/$sub/kb=*/batch=*"
-      val glob = new org.apache.hadoop.fs.Path(pattern)
-      val fs = glob.getFileSystem(conf)
-      val hits = fs.globStatus(glob)
-      if (hits != null) hits.foreach { st =>
-        val id = st.getPath.getName.stripPrefix("batch=").toInt
-        if (id > committed) fs.delete(st.getPath, true)
-      }
-    }
-  }
+  private def liveSide(spark: SparkSession, sub: String, committed: Int,
+                       buckets: Array[Int], key: String): DataFrame =
+    live(ViewStore.storedPruned(spark, sub, committed, buckets), spark, sub, key)
 
   /** The delta-rule view increment for one batch, as a (lazy) DataFrame —
     * factored out so JoinViewSpec can plan-assert the pruned stored reads.
@@ -357,10 +210,10 @@ object JoinView {
                          db: DataFrame, key: String, committed: Int,
                          daBuckets: Option[Array[Int]] = None,
                          dbBuckets: Option[Array[Int]] = None): DataFrame = {
-    val aOld = storedPruned(spark, s"$path/a", committed,
-      dbBuckets.getOrElse(bucketsOf(db, key)), key)
-    val bOld = storedPruned(spark, s"$path/b", committed,
-      daBuckets.getOrElse(bucketsOf(da, key)), key)
+    val aOld = liveSide(spark, s"$path/a", committed,
+      dbBuckets.getOrElse(ViewStore.bucketsOf(db, key)), key)
+    val bOld = liveSide(spark, s"$path/b", committed,
+      daBuckets.getOrElse(ViewStore.bucketsOf(da, key)), key)
     da.join(bOld, Seq(key))
       .unionByName(aOld.join(db, Seq(key)))
       .unionByName(da.join(db, Seq(key)))
@@ -368,7 +221,7 @@ object JoinView {
 
   def deltaView(spark: SparkSession, path: String, da: DataFrame, db: DataFrame,
                 key: String): DataFrame =
-    deltaTerms(spark, path, da, db, key, committedBatch(spark, path))
+    deltaTerms(spark, path, da, db, key, ViewStore.committed(spark, path))
 
   /** Seed the view: batch 0 = the base join.
     *
@@ -385,14 +238,13 @@ object JoinView {
     * per key.
     */
   /** `dayCol` (either mode): name a TIMESTAMP payload column and the view
-    * subtable gains a SECONDARY `pd=` day-bucket partition between `kb=`
-    * and `batch=` (bucket = hash(day string) % [[PDB]], scheme + zone
-    * persisted in the day marker) — the layout that makes
-    * [[mergedForDays]] a PartitionFilters-pruned read, so a downstream
-    * day-keyed consumer (the [[AggIndex.ingestCdc]] recompute) reads the
-    * affected days' buckets instead of the whole view. Rows whose
-    * `dayCol` is NULL land in the default partition and are visible only
-    * to full reads.
+    * subtable is partitioned by a `pd=` day bucket instead of `kb=`
+    * (bucket = hash(day string) % [[PDB]], scheme + zone persisted in the
+    * day marker) — the layout that makes [[mergedForDays]] a
+    * PartitionFilters-pruned read, so a downstream day-keyed consumer
+    * (the [[AggIndex.ingestCdc]] recompute) reads the affected days'
+    * buckets instead of the whole view. Rows whose `dayCol` is NULL land
+    * in the default partition and are visible only to full reads.
     */
   def build(a0: DataFrame, b0: DataFrame, key: String, path: String,
             cdc: Boolean = false, dayCol: String = null): Unit = {
@@ -440,24 +292,22 @@ object JoinView {
         // per side, else every later current-state resolve ties. The two
         // guards are independent — overlap them ([[Par]], r19).
         Par.run(Seq(
-          () => guardOneRowPerKey(aW, key, "a", 0),
-          () => guardOneRowPerKey(bW, key, "b", 0)))
+          () => ViewStore.guardOneRowPerKey(aW, key, "a", 0),
+          () => ViewStore.guardOneRowPerKey(bW, key, "b", 0)))
       }
-      // the day marker lands BEFORE any view append so appendView and every
-      // later writer resolve one consistent layout
+      // the day marker lands BEFORE any view append so every later writer
+      // resolves the layout this build seeds
       dayOpt.foreach(dc => writeDayColMarker(spark, path, dc))
       // the three sidecar/append chains target DIFFERENT subtable
       // directories and read only the build-scoped persists — overlap
       // them ([[Par]], r19); racing persist materialization is
       // block-level-locked, each side still computes once
       Par.run(Seq(
-        () => { writeSchemaSidecar(aW, key, s"$path/a")
-                append(aW, key, s"$path/a", 0) },
-        () => { writeSchemaSidecar(bW, key, s"$path/b")
-                append(bW, key, s"$path/b", 0) },
-        () => { writeViewSchemaSidecar(v0, key, path, dayOpt)
-                appendView(spark, v0, key, path, 0, sizeHint = Some(
-                  PlanProbes.statsBytes(aP) + PlanProbes.statsBytes(bP))) }))
+        () => ViewStore.seed(aW, s"$path/a", ViewStore.byKey(key)),
+        () => ViewStore.seed(bW, s"$path/b", ViewStore.byKey(key)),
+        () => ViewStore.seed(v0, s"$path/view",
+          dayOpt.fold(ViewStore.byKey(key))(dayBuckets(_, PDB, key)),
+          sizeHint = Some(PlanProbes.statsBytes(aP) + PlanProbes.statsBytes(bP)))))
     } finally { aP.unpersist(); bP.unpersist() }
     Ledger.write(spark, keyMarkerPath(path), key)
     KeyBuckets.publish(spark, path)
@@ -468,21 +318,20 @@ object JoinView {
     * view schema (the sgn column is the marker; no extra sidecar).
     */
   def isCdc(spark: SparkSession, path: String): Boolean =
-    SchemaCache.parquetSchema(spark, schemaSidecarPath(s"$path/view"))
-      .fieldNames.contains("sgn")
+    ViewStore.schema(spark, s"$path/view").fieldNames.contains("sgn")
 
   /** Side-layout version guard (r16 ADVICE; the [[KeyBuckets]] /
     * `_graft_tau` upgrade-axis discipline applied to the signed-side
     * layout): CDC views persisted before delete markers landed in the
     * sides carry UNSIGNED a/ and b/ subtables, and the first signed read
-    * ([[currentPruned]]'s `sgn === 1` filter) would die with a raw
-    * unresolved-column AnalysisException — after this batch's side files
-    * had already been appended. Checked at writer entry, BEFORE any
+    * ([[ViewStore.currentPruned]]'s `sgn === 1` filter) would die with a
+    * raw unresolved-column AnalysisException — after this batch's side
+    * files had already been appended. Checked at writer entry, BEFORE any
     * files land, with the rebuild path named.
     */
   private def requireSignedSides(spark: SparkSession, path: String): Unit =
     for (side <- Seq("a", "b"))
-      require(readSub(spark, s"$path/$side").schema.fieldNames.contains("sgn"),
+      require(ViewStore.readSub(spark, s"$path/$side").schema.fieldNames.contains("sgn"),
         s"CDC view at $path has a pre-signed-side layout (side $side carries no " +
           "sgn column — it was persisted before delete markers moved into the " +
           "sides). Rebuild with build(cdc = true); mergedAsOf reads of the " +
@@ -494,118 +343,40 @@ object JoinView {
     *
     * `batch` defaults to the next free id; an EXPLICIT id makes the call
     * replay-idempotent for streamed wiring ([[ingestStream]]): an id at
-    * or below the ledger was fully applied before — the whole call
-    * no-ops (a foreachBatch replay after a crash between ledger advance
-    * and checkpoint commit must not double-materialize) — and an id
-    * beyond the next free one fails loudly (a gap means a foreign
-    * writer).
+    * or below the ledger was fully applied before and the whole call
+    * no-ops, an id beyond the next free one fails loudly
+    * ([[ViewStore.admit]]).
     */
   def ingest(da: DataFrame, db: DataFrame, key: String, path: String,
              batch: Int = -1, writer: String = "batch"): Int = {
     val spark = da.sparkSession
-    KeyBuckets.validate(spark, path) // an NB mismatch would prune wrong buckets
     require(!isCdc(spark, path),
       s"view at $path was built cdc = true — use ingestCdc (an append-only " +
         "delta-rule batch would land unsigned rows the sign-resolving reads " +
         "cannot interpret)")
-    val c = committedBatch(spark, path)
-    val b = if (batch >= 0) batch else c + 1
+    val (c, b) = ViewStore.admit(spark, path, batch, Subs)
     if (b <= c) return b // fully-committed replay: exactly-once by no-op
-    require(b == c + 1,
-      s"batch $b skips ahead of ledger $c at $path — a foreign writer is interleaving")
-    cleanupOrphans(spark, path, c)
-    // SINGLE evaluation of each caller-supplied delta: append it first,
-    // then derive the delta-rule terms from the just-written batch=b
-    // partitions — a non-deterministic or expensive input is computed
-    // once, and the rows joined into the view are byte-identical to the
-    // rows recorded in a/ and b/ by construction. The two sides' append
-    // + bucket-collect chains are independent — overlap them ([[Par]],
-    // r19).
-    def justWritten(sub: String) =
-      readSub(spark, sub).filter(col("batch") === b).drop("kb", "batch")
+    // SINGLE evaluation of each caller-supplied delta
+    // ([[ViewStore.written]]). The two sides' append + bucket-collect
+    // chains are independent — overlap them ([[Par]], r19).
+    def justWritten(side: String) = ViewStore.written(spark, s"$path/$side", b)
     var aBuckets, bBuckets = Array.empty[Int]
     Par.run(Seq(
       () => {
-        append(da, key, s"$path/a", b)
-        aBuckets = bucketsOf(justWritten(s"$path/a"), key)
+        ViewStore.append(da, s"$path/a", b, ViewStore.byKey(key))
+        aBuckets = ViewStore.bucketsOf(justWritten("a"), key)
       },
       () => {
-        append(db, key, s"$path/b", b)
-        bBuckets = bucketsOf(justWritten(s"$path/b"), key)
+        ViewStore.append(db, s"$path/b", b, ViewStore.byKey(key))
+        bBuckets = ViewStore.bucketsOf(justWritten("b"), key)
       }))
-    val dv = deltaTerms(spark, path,
-      justWritten(s"$path/a"), justWritten(s"$path/b"), key, c,
+    val dv = deltaTerms(spark, path, justWritten("a"), justWritten("b"), key, c,
       daBuckets = Some(aBuckets), dbBuckets = Some(bBuckets))
-    appendView(spark, dv, key, path, b, sizeHint = Some(
-      PlanProbes.statsBytes(justWritten(s"$path/a")) +
-        PlanProbes.statsBytes(justWritten(s"$path/b"))))
+    ViewStore.append(dv, s"$path/view", b, viewLayout(spark, path, key),
+      sizeHint = Some(PlanProbes.statsBytes(justWritten("a")) +
+        PlanProbes.statsBytes(justWritten("b"))))
     Ledger.commit(spark, path, b, Some(writer))
     b
-  }
-
-  /** A stored side pruned to the given buckets and resolved to its
-    * CURRENT row per key (latest committed batch wins) — the upsert-mode
-    * read: under the CDC contract each key's newest row image IS the
-    * row, so the delta terms must join current state, not the append-only
-    * union a plain view's terms see. Same bucket-pruned scan shape as
-    * [[storedPruned]] plus one delta-sized window.
-    */
-  private def currentPruned(spark: SparkSession, sub: String, committed: Int,
-                            buckets: Array[Int], key: String): DataFrame = {
-    val raw = live(readSub(spark, sub)
-      .filter(col("batch") <= committed && col("kb").isin(buckets.map(Int.box): _*))
-      .drop("kb"), spark, sub, key)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col("batch").desc)
-    raw.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn", "batch")
-      // a key whose LATEST side row is a -1 delete marker has left the
-      // side: it is absent from the current state, not null-valued
-      .filter(col("sgn") === 1).drop("sgn")
-  }
-
-  /** One side's signed persisted delta: the caller's upsert row images at
-    * sgn = +1, unioned with one sgn = -1 DELETE MARKER per delete key —
-    * key + null payloads (typed off the side's persisted schema), so the
-    * marker lands in the same subtable/batch layout as every other row
-    * and [[currentPruned]] resolves deletion as "latest row is signed
-    * out" with no side-channel state.
-    */
-  private def signedSide(spark: SparkSession, up: DataFrame, del: DataFrame,
-                         key: String, sub: String): DataFrame = {
-    val marked = up.withColumn("sgn", lit(1))
-    if (del == null) marked
-    else {
-      val payload = readSub(spark, sub).schema.fields
-        .filterNot(f => Set("kb", "batch", "sgn", key).contains(f.name))
-      val markers = del.select(col(key)).distinct()
-        .select((col(key) +: payload.toIndexedSeq.map(f =>
-          lit(null).cast(f.dataType).as(f.name))): _*)
-        .withColumn("sgn", lit(-1))
-      marked.unionByName(markers)
-    }
-  }
-
-  /** Loud enforcement of the one-row-per-key delta contract (r15 verdict
-    * What's-wrong #2): two row images (or an image + a delete) for one
-    * key in one batch would TIE [[currentPruned]]'s latest-row window and
-    * resolve nondeterministically — the next batch's retraction then may
-    * not be value-identical to the surviving row and sign-sum reads drift
-    * silently. Delta-sized groupBy (cheap); in [[ingestCdc]] it runs on
-    * the JUST-WRITTEN batch (single-evaluation discipline), so a failure
-    * leaves only uncommitted orphans that the next ingest's
-    * [[cleanupOrphans]] removes.
-    */
-  private def guardOneRowPerKey(d: DataFrame, key: String, side: String,
-                                batch: Int): Unit = {
-    val dup = d.groupBy(col(key)).count()
-      .filter(col("count") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"CDC delta batch $batch side $side carries ${if (dup.isEmpty) 0 else dup.head.getLong(1)} " +
-        s"rows for key ${if (dup.isEmpty) "?" else dup.head.get(0)} — the row-image " +
-        "contract allows at most ONE upsert-or-delete per key per side per batch " +
-        "(a tie would make the current-state resolve nondeterministic and later " +
-        "retractions value-divergent)")
   }
 
   /** Apply one batch of CDC UPSERTS to either side (the Debezium
@@ -628,19 +399,20 @@ object JoinView {
     * so the as-of floor never rises here.
     *
     * Scale shape: both current-state reads are partition-pruned to the
-    * delta's key buckets ([[currentPruned]]); retract and insert terms
-    * are semi-joined to the touched keys, so every term is delta-sized.
-    * Ledger/replay/crash discipline is [[ingest]]'s verbatim: same
-    * commit marker, same orphan cleanup, same explicit-id idempotence.
+    * delta's key buckets ([[ViewStore.currentPruned]]); retract and
+    * insert terms are semi-joined to the touched keys, so every term is
+    * delta-sized. Ledger/replay/crash discipline is [[ingest]]'s: same
+    * batch admission ([[ViewStore.admit]]), same explicit-id idempotence.
     *
     * DELETES (Debezium `op = d`, the third CDC op — r15 verdict task 1):
     * `delA`/`delB` carry the keys leaving each side. A delete is the
     * SAME delta rule with the key removed from the post-state instead of
     * re-inserted — K gains the delete keys, the retract term is
     * unchanged, and A' = Δa ∪ (A \ K_a) simply never re-admits them.
-    * Persistence is a -1 DELETE MARKER row per key ([[signedSide]]):
-    * key + typed-null payloads, landing in the side subtable under the
-    * same batch, so [[currentPruned]] (and [[foldCdc]]) resolve deletion
+    * Persistence is a -1 DELETE MARKER row per key
+    * ([[ViewStore.signedSide]]): key + typed-null payloads, landing in the
+    * side subtable under the same batch, so the current-state reads (and
+    * [[foldCdc]]) resolve deletion
     * as "latest row is signed out" with no side-channel state, and a
     * later re-insert of the key is an ordinary +1 row image that simply
     * out-batches the marker. This is the CHANGEFEED path (a fact leaving
@@ -650,36 +422,30 @@ object JoinView {
     * pair alive before its delete batch, exactly.
     *
     * Contract: a key appears at most ONCE per side per batch across
-    * upserts ∪ deletes ([[guardOneRowPerKey]], checked loudly on the
-    * just-written batch — r15 verdict What's-wrong #2).
+    * upserts ∪ deletes ([[ViewStore.guardOneRowPerKey]], checked loudly
+    * on the just-written batch — r15 verdict What's-wrong #2).
     */
   def ingestCdc(da: DataFrame, db: DataFrame, key: String, path: String,
                 batch: Int = -1, writer: String = "cdc",
                 delA: DataFrame = null, delB: DataFrame = null): Int = {
     val spark = da.sparkSession
-    KeyBuckets.validate(spark, path)
     require(isCdc(spark, path),
       s"view at $path was not built cdc = true — plain [[ingest]] maintains it; " +
         "upserts need the signed view (rebuild with build(cdc = true))")
     require(!da.columns.contains("sgn") && !db.columns.contains("sgn"),
       "CDC deltas carry raw row images — the sgn marker is writer-managed")
     requireSignedSides(spark, path)
-    val c = committedBatch(spark, path)
-    val b = if (batch >= 0) batch else c + 1
+    val (c, b) = ViewStore.admit(spark, path, batch, Subs)
     if (b <= c) return b // fully-committed replay: exactly-once by no-op
-    require(b == c + 1,
-      s"batch $b skips ahead of ledger $c at $path — a foreign writer is interleaving")
-    cleanupOrphans(spark, path, c)
     // provably-empty signed sides skip their append AND the guard over
     // the nothing they would have written (r18): a one-sided CDC batch —
     // the common cadence — paid an empty write-job round trip and an
     // empty guard job on the untouched side every batch
-    val aSigned = signedSide(spark, da, delA, key, s"$path/a")
-    val bSigned = signedSide(spark, db, delB, key, s"$path/b")
+    val aSigned = ViewStore.signedSide(spark, da, delA, key, s"$path/a")
+    val bSigned = ViewStore.signedSide(spark, db, delB, key, s"$path/b")
     val aApp = !PlanProbes.provablyEmpty(aSigned)
     val bApp = !PlanProbes.provablyEmpty(bSigned)
-    def justWritten(sub: String) =
-      readSub(spark, sub).filter(col("batch") === b).drop("kb", "batch")
+    def justWritten(side: String) = ViewStore.written(spark, s"$path/$side", b)
     // the two sides' append + contract-check/bucket-collect chains are
     // independent of each other — overlap them ([[Par]], r19); within a
     // side the probe runs on the rows that actually landed, and a
@@ -688,24 +454,23 @@ object JoinView {
     var aBuckets, bBuckets = Array.empty[Int]
     Par.run(Seq(
       if (!aApp) null else () => {
-        append(aSigned, key, s"$path/a", b)
-        aBuckets = bucketsAndGuard(justWritten(s"$path/a"), key, "a", b)
+        ViewStore.append(aSigned, s"$path/a", b, ViewStore.byKey(key))
+        aBuckets = ViewStore.bucketsAndGuard(justWritten("a"), key, "a", b)
       },
       if (!bApp) null else () => {
-        append(bSigned, key, s"$path/b", b)
-        bBuckets = bucketsAndGuard(justWritten(s"$path/b"), key, "b", b)
+        ViewStore.append(bSigned, s"$path/b", b, ViewStore.byKey(key))
+        bBuckets = ViewStore.bucketsAndGuard(justWritten("b"), key, "b", b)
       }))
-    val wa = justWritten(s"$path/a")
-    val wb = justWritten(s"$path/b")
+    val wa = justWritten("a")
+    val wb = justWritten("b")
     val keep = scala.collection.mutable.Buffer.empty[DataFrame]
     try {
       val dv = cdcTerms(spark, path, wa, wb, key, c, keep, aApp, bApp,
         buckets = Some((aBuckets ++ bBuckets).distinct))
       // positional append: align the signed delta to the persisted view
       // schema's column order (pd is writer-derived, not a delta column)
-      val viewCols = SchemaCache.parquetSchema(spark, schemaSidecarPath(s"$path/view"))
-        .fieldNames.filterNot(n => n == "kb" || n == "batch" || n == "pd")
-      appendView(spark, dv.select(viewCols.map(col).toIndexedSeq: _*), key, path, b,
+      ViewStore.append(dv.select(ViewStore.rowColumns(spark, s"$path/view"): _*),
+        s"$path/view", b, viewLayout(spark, path, key),
         sizeHint = Some(PlanProbes.statsBytes(wa) + PlanProbes.statsBytes(wb)))
     } finally keep.foreach(_.unpersist())
     Ledger.commit(spark, path, b, Some(writer))
@@ -736,7 +501,7 @@ object JoinView {
         val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         keep += p; p
       }
-    // da/db are SIGNED side deltas ([[signedSide]]): +1 row images,
+    // da/db are SIGNED side deltas ([[ViewStore.signedSide]]): +1 row images,
     // -1 delete markers. A delete is the retract term with the key simply
     // NOT re-entering the post-state: the anti-join below already removes
     // every touched key from the current state, and only +1 rows re-enter.
@@ -746,11 +511,15 @@ object JoinView {
     // sets its combined append-probe already collected (r19 — zero
     // extra jobs here); plan-inspection callers compute them.
     val bkts = buckets.getOrElse(
-      ((if (aApp) bucketsOf(da, key) else Array.empty[Int]) ++
-        (if (bApp) bucketsOf(db, key) else Array.empty[Int])).distinct)
+      ((if (aApp) ViewStore.bucketsOf(da, key) else Array.empty[Int]) ++
+        (if (bApp) ViewStore.bucketsOf(db, key) else Array.empty[Int])).distinct)
     val touched = pin(da.select(col(key)).unionByName(db.select(col(key))).distinct())
-    val aCur = pin(currentPruned(spark, s"$path/a", committed, bkts, key))
-    val bCur = pin(currentPruned(spark, s"$path/b", committed, bkts, key))
+    // tombstoned keys are anti-joined out of the current state, so a
+    // later upsert cannot resurrect pairs with a forgotten counterpart
+    def current(side: String) = pin(live(ViewStore.currentPruned(spark, s"$path/$side",
+      key, committed, bkts), spark, s"$path/$side", key))
+    val aCur = current("a")
+    val bCur = current("b")
     val retract = aCur.join(bCur, Seq(key))
       .join(touched, Seq(key), "left_semi")
       .withColumn("sgn", lit(-1))
@@ -769,9 +538,9 @@ object JoinView {
                    delB: DataFrame = null): DataFrame = {
     requireSignedSides(spark, path)
     cdcTerms(spark, path,
-      signedSide(spark, da, delA, key, s"$path/a"),
-      signedSide(spark, db, delB, key, s"$path/b"),
-      key, committedBatch(spark, path))
+      ViewStore.signedSide(spark, da, delA, key, s"$path/a"),
+      ViewStore.signedSide(spark, db, delB, key, s"$path/b"),
+      key, ViewStore.committed(spark, path))
   }
 
   /** Consolidate a CDC view's signed history into its RESOLVED state —
@@ -801,9 +570,9 @@ object JoinView {
     require(isCdc(spark, path),
       s"foldCdc only applies to CDC views — $path has no signed view")
     val key = joinKey(spark, path)
-    for (sub <- Seq("a", "b", "view"))
+    for (sub <- Subs)
       IndexMaintenance.recover(spark, s"$path/$sub")
-    val c = committedBatch(spark, path)
+    val c = ViewStore.committed(spark, path)
     AsofFloor.write(spark, path, floor = c,
       rewrite = s"foldCdc (signed history at or below batch $c consolidated)")
     val conf = spark.sessionState.newHadoopConf()
@@ -819,7 +588,7 @@ object JoinView {
       fs.delete(trash, true)
     }
     def liveRows(sub: String) =
-      live(readSub(spark, sub).filter(col("batch") <= c), spark, sub, key)
+      live(ViewStore.readSub(spark, sub).filter(col("batch") <= c), spark, sub, key)
     // the three subtable folds read/write disjoint directories and each
     // independently preserves every read — overlap them ([[Par]], r19);
     // a crash between swaps was always benign (scaladoc above)
@@ -829,16 +598,11 @@ object JoinView {
         // pd rides through the fold as an ordinary grouping column (it is
         // a pure function of the payload timestamp, so grouping is
         // unchanged) and the rewrite keeps the day layout
-        val payload = readSub(spark, vsub).columns
-          .filterNot(Set("sgn", "kb", "batch").contains)
-        val resolved = liveRows(vsub).drop("kb", "batch")
-          .groupBy(payload.map(col).toIndexedSeq: _*)
-          .agg(sum("sgn").as("_cnt"))
-          .filter(col("_cnt") > 0).drop("_cnt")
+        val resolved = ViewStore.resolve(liveRows(vsub).drop("kb", "batch"))
           .withColumn("sgn", lit(1))
         val vparts = viewPartCols(spark, path)
         swapIn(vsub,
-          (if (vparts.contains("kb")) resolved.withColumn("kb", kbOf(resolved, key))
+          (if (vparts.contains("kb")) resolved.withColumn("kb", KeyBuckets.kbFor(resolved, key))
            else resolved).withColumn("batch", lit(c)),
           partCols = vparts)
       }) ++ Seq("a", "b").map(side => () => {
@@ -850,72 +614,26 @@ object JoinView {
           .drop("_rn")
           // a key whose latest row is a -1 delete marker has left the
           // side: the fold drops it (and the marker) entirely — post-fold
-          // state is exactly what currentPruned resolves
+          // state is exactly what ViewStore.currentPruned resolves
           .filter(col("sgn") === 1)
           .withColumn("batch", lit(c)))
       })
     Par.run(folds)
   }
 
-  /** The checkpoint-local applied marker of the streamed wirings here and
-    * in [[StarView.cdcStream]]: the highest foreachBatch id this
-    * checkpoint committed, -1 before the first.
-    */
-  private def appliedMarker(checkpoint: String) =
-    new org.apache.hadoop.fs.Path(checkpoint, "graft_applied_batchid")
-
-  private[operators] def readApplied(spark: SparkSession, checkpoint: String): Long =
-    Ledger.read(spark, appliedMarker(checkpoint)).fold(-1L)(_.toLong)
-
-  private[operators] def writeApplied(spark: SparkSession, checkpoint: String,
-                                      batchId: Long): Unit =
-    Ledger.write(spark, appliedMarker(checkpoint), batchId.toString)
-
   /** Stream one side's appends into the view (the enriched-fact-table
     * production shape: facts stream, the dimension side grows by batch
     * ingests between stream runs). Each micro-batch applies the delta
-    * rule under a REAL pinned batch id (base + foreachBatch id, the
-    * [[IndexStream.pinnedBase]] discipline). Exactly-once is carried by
-    * TWO markers, because view rows are not duplicate-insensitive:
-    *  - the checkpoint-local applied marker (highest foreachBatch id
-    *    this checkpoint committed) makes replays definite no-ops;
-    *  - the ledger's writer line closes the crash window between
-    *    the ledger commit and the applied-marker write (batch committed by
-    *    THIS checkpoint -> no-op; committed by anyone else -> the id
-    *    space was taken while the stream was stopped, and silently
-    *    no-opping would DROP this micro-batch's data — fail loudly and
-    *    direct the operator to a fresh checkpoint instead).
+    * rule through [[ingest]] under [[IndexStream.exactlyOnce]]'s pinned
+    * batch ids, applied marker and writer-line crash window.
     */
   def ingestStream(da: DataFrame, key: String, path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    da.writeStream
-      .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
-        val spark = batchDf.sparkSession
-        val base = IndexStream.pinnedBase(batchDf,
-          committedBatch(spark, path) + 1, checkpoint)
-        if (batchId > readApplied(spark, checkpoint)) {
-          val b = base + batchId.toInt
-          val (c, w) = ledger(spark, path)
-          if (b == c + 1) {
-            val db = readSub(spark, s"$path/b").drop("kb", "batch").limit(0)
-            ingest(batchDf, db, key, path, batch = b, writer = checkpoint)
-            writeApplied(spark, checkpoint, batchId)
-          } else if (b == c && w.contains(checkpoint)) {
-            // crash window: we committed b, lost the applied-marker write
-            writeApplied(spark, checkpoint, batchId)
-          } else {
-            throw new IllegalStateException(
-              s"view ledger at $c (writer ${w.getOrElse("?")}) " +
-                s"but this checkpoint's pinned id space expects batch $b — the view " +
-                "was advanced outside this checkpoint while it was stopped; a silent " +
-                "no-op would drop this micro-batch. Restart with a FRESH checkpoint " +
-                "(the view data itself is intact).")
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IndexStream.exactlyOnce(da, path, checkpoint) { (batchDf, b) =>
+      val db = ViewStore.readSub(batchDf.sparkSession, s"$path/b")
+        .drop("kb", "batch").limit(0)
+      ingest(batchDf, db, key, path, batch = b, writer = checkpoint)
+    }
 
   /** Right-to-be-forgotten on the JOIN KEY (a user and every enriched
     * row derived from them): O(deletes) — append the ids to each
@@ -946,8 +664,8 @@ object JoinView {
     // delta rule. (compact keeps its conservative unconditional raise
     // when ANY tombstones pend — by then the intersect answer is the
     // same question this probe answered at forget time.)
-    val c = committedBatch(spark, path)
-    val buckets = bucketsOf(idsK, key)
+    val c = ViewStore.committed(spark, path)
+    val buckets = ViewStore.bucketsOf(idsK, key)
     // the existence probe reads WITHOUT the ledger filter (r14 ADVICE):
     // ids present only in a crashed writer's uncommitted orphan batch
     // would otherwise be tombstoned with no floor raise, and once the
@@ -959,8 +677,8 @@ object JoinView {
     // scans the view un-pruned — forget is the rare compliance path, and
     // the sides' pruned probes answer first in the common case
     val dayView = viewDayCol(spark, path).isDefined
-    val hidesStored = Seq("a", "b", "view").exists { sub =>
-      val raw = readSub(spark, s"$path/$sub")
+    val hidesStored = Subs.exists { sub =>
+      val raw = ViewStore.readSub(spark, s"$path/$sub")
       val pruned = if (sub == "view" && dayView) raw
         else raw.filter(col("kb").isin(buckets.map(Int.box): _*))
       !live(pruned.drop("kb", "pd", "batch"), spark, s"$path/$sub", key)
@@ -969,13 +687,13 @@ object JoinView {
     if (hidesStored)
       AsofFloor.write(spark, path, floor = c,
         rewrite = "forget (keys tombstoned out of every batch)")
-    for (sub <- Seq("a", "b", "view"))
+    for (sub <- Subs)
       Tombstones.forget(spark, s"$path/$sub", ids, idCol = key)
   }
 
-  /** Compact each subtable in place ([[IndexMaintenance.compact]], kb/batch
-    * layout preserved): merges fragment files AND physically reclaims
-    * tombstoned rows, retiring the applied delete vectors with the swap.
+  /** Compact each subtable in place ([[ViewStore.compact]], layout
+    * preserved): merges fragment files AND physically reclaims tombstoned
+    * rows, retiring the applied delete vectors with the swap.
     */
   def compact(spark: SparkSession, path: String): Unit = {
     // reclaiming pending delete vectors makes the hide-from-every-batch
@@ -985,27 +703,14 @@ object JoinView {
     // without its floor. Root-level marker, so it survives the
     // per-subtable swaps untouched.
     val conf = spark.sessionState.newHadoopConf()
-    val anyTombstones = Seq("a", "b", "view").exists { sub =>
+    val anyTombstones = Subs.exists { sub =>
       val t = new org.apache.hadoop.fs.Path(s"$path/$sub/_tombstones")
       t.getFileSystem(conf).exists(t)
     }
     if (anyTombstones)
-      AsofFloor.write(spark, path, floor = committedBatch(spark, path),
+      AsofFloor.write(spark, path, floor = ViewStore.committed(spark, path),
         rewrite = "compact (tombstoned keys physically reclaimed from every batch)")
-    val dayView = viewDayCol(spark, path).isDefined
-    for (sub <- Seq("a", "b", "view")) {
-      val pattern =
-        if (sub == "view" && dayView) s"$path/view/pd=*/batch=*"
-        else s"$path/$sub/kb=*/batch=*"
-      val glob = new org.apache.hadoop.fs.Path(pattern)
-      val fs = glob.getFileSystem(conf)
-      val hits = fs.globStatus(glob)
-      // a never-populated side has only the schema sidecar — nothing to do
-      if (hits != null && hits.nonEmpty)
-        IndexMaintenance.compact(spark, s"$path/$sub",
-          partitionCols = if (sub == "view" && dayView) Seq("pd", "batch")
-                          else Seq("kb", "batch"))
-    }
+    ViewStore.compact(spark, path, Subs)
   }
 
   /** The maintained view — committed batches only. */
@@ -1029,24 +734,11 @@ object JoinView {
     // forget/reclamation fails loudly instead of silently returning the
     // rewritten (keys-hidden) history as if it were the past
     AsofFloor.check(spark, path, upToBatch)
-    val c = committedBatch(spark, path)
-    signResolve(live(readSub(spark, s"$path/view")
+    val c = ViewStore.committed(spark, path)
+    ViewStore.resolve(live(ViewStore.readSub(spark, s"$path/view")
       .filter(col("batch") <= math.min(c, upToBatch))
       .drop("kb", "batch", "pd"), spark, s"$path/view", joinKey(spark, path)))
   }
-
-  /** Sign-sum resolve of a (possibly signed) view read: group by payload,
-    * keep sum(sgn) > 0; a plain view passes through.
-    */
-  private def signResolve(raw: DataFrame): DataFrame =
-    if (!raw.columns.contains("sgn")) raw
-    else {
-      val payload = raw.columns.filterNot(_ == "sgn")
-      raw.groupBy(payload.map(col).toIndexedSeq: _*)
-        .agg(sum("sgn").as("_cnt"))
-        .filter(col("_cnt") > 0)
-        .drop("_cnt")
-    }
 
   /** The maintained view RESTRICTED to the given days (`yyyy-MM-dd`
     * strings) — the day-keyed consumer's read ([[AggIndex.ingestCdc]]'s
@@ -1067,7 +759,7 @@ object JoinView {
       s"view at $path carries no pd= day partition — mergedForDays needs the " +
         "day layout (build with dayCol = <timestamp payload column>); a full " +
         "merged() read followed by a day filter stays exact but prunes nothing"))
-    val c = committedBatch(spark, path)
+    val c = ViewStore.committed(spark, path)
     // the days' bucket ids. Canonical `yyyy-MM-dd` strings (the contract,
     // and the only form the residual day filter below can ever match)
     // hash on the DRIVER through Catalyst's own XxHash64 expression —
@@ -1083,15 +775,15 @@ object JoinView {
         days.toDS().select(pdOf(col("value").cast("timestamp"), pdb))
           .distinct().collect().map(_.getInt(0))
       }
-    signResolve(live(readSub(spark, s"$path/view")
+    ViewStore.resolve(live(ViewStore.readSub(spark, s"$path/view")
       .filter(col("batch") <= c && col("pd").isin(pds.map(Int.box): _*))
       .drop("kb", "batch", "pd"), spark, s"$path/view", joinKey(spark, path))
       .filter(dayOf(col(dc)).isin(days.map(d => d: Any): _*)))
   }
 
   /** Stream CDC upserts of side `a` into the view — [[ingestStream]]'s
-    * wiring (pinned batch ids, applied marker, writer-line crash window)
-    * with [[ingestCdc]] as the per-trigger apply, so a streamed row image
+    * wiring ([[IndexStream.exactlyOnce]]) with [[ingestCdc]] as the
+    * per-trigger apply, so a streamed row image
     * REPLACES its key's previous row instead of appending a duplicate
     * pair. Exactly-once carries over unchanged: ingestCdc is
     * explicit-id idempotent and the two markers close the same windows.
@@ -1110,8 +802,7 @@ object JoinView {
     * DIFFERENT keys applies atomically under one batch id (one
     * [[ingestCdc]] call); a same-key collision within a trigger fails
     * the one-row-per-key guard loudly rather than applying in an
-    * arbitrary order. Wiring (pinned ids, applied marker, writer-line
-    * crash window) is [[upsertStream]]'s verbatim — they share
+    * arbitrary order. Wiring is [[upsertStream]]'s — they share
     * [[cdcStreamApply]].
     */
   def cdcStream(da: DataFrame, key: String, path: String, checkpoint: String,
@@ -1121,39 +812,19 @@ object JoinView {
       df.filter(!col(opCol).eqNullSafe("d")).drop(opCol),
       df.filter(col(opCol).eqNullSafe("d")).select(col(key))))
 
+  /** [[IndexStream.exactlyOnce]] with one [[ingestCdc]] of side `a` per
+    * trigger, its rows split into (upserts, delete keys).
+    */
   private def cdcStreamApply(da: DataFrame, key: String, path: String,
                              checkpoint: String,
                              split: DataFrame => (DataFrame, DataFrame))
       : org.apache.spark.sql.streaming.StreamingQuery =
-    da.writeStream
-      .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
-        val spark = batchDf.sparkSession
-        val base = IndexStream.pinnedBase(batchDf,
-          committedBatch(spark, path) + 1, checkpoint)
-        if (batchId > readApplied(spark, checkpoint)) {
-          val b = base + batchId.toInt
-          val (c, w) = ledger(spark, path)
-          if (b == c + 1) {
-            // drop the persisted side sign too: ingestCdc takes RAW row
-            // images and manages the marker itself
-            val db = readSub(spark, s"$path/b").drop("kb", "batch", "sgn").limit(0)
-            val (ups, dels) = split(batchDf)
-            ingestCdc(ups, db, key, path, batch = b, writer = checkpoint,
-              delA = dels)
-            writeApplied(spark, checkpoint, batchId)
-          } else if (b == c && w.contains(checkpoint)) {
-            writeApplied(spark, checkpoint, batchId)
-          } else {
-            throw new IllegalStateException(
-              s"view ledger at $c (writer ${w.getOrElse("?")}) " +
-                s"but this checkpoint's pinned id space expects batch $b — the view " +
-                "was advanced outside this checkpoint while it was stopped; a silent " +
-                "no-op would drop this micro-batch. Restart with a FRESH checkpoint " +
-                "(the view data itself is intact).")
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IndexStream.exactlyOnce(da, path, checkpoint) { (batchDf, b) =>
+      // drop the persisted side sign too: ingestCdc takes RAW row
+      // images and manages the marker itself
+      val db = ViewStore.readSub(batchDf.sparkSession, s"$path/b")
+        .drop("kb", "batch", "sgn").limit(0)
+      val (ups, dels) = split(batchDf)
+      ingestCdc(ups, db, key, path, batch = b, writer = checkpoint, delA = dels)
+    }
 }

@@ -93,11 +93,11 @@ private[operators] object KeyBuckets {
     * silently wrong.
     */
   def validate(spark: SparkSession, root: String, nb: Int = NB): Unit = {
-    val lines = Ledger.read(spark, markerPath(root)) match {
+    val (body, lines) = Ledger.read(spark, markerPath(root)) match {
       case None => publish(spark, root, nb); return
-      case Some(body) => body.split('\n').map(_.trim).filter(_.nonEmpty)
+      case Some(body) => (body, body.split('\n').map(_.trim).filter(_.nonEmpty))
     }
-    val storedNb = lines(0).toInt
+    val storedNb = Ledger.int(markerPath(root), body, lines(0))
     require(storedNb == nb,
       s"bucket count $nb does not match the table's persisted _graft_buckets " +
         s"$storedNb at $root — the kb= layout would be addressed wrongly; " +

@@ -37,16 +37,45 @@ private[operators] object Ledger {
     * never a partial one, and never no file once the first write landed.
     */
   def write(spark: SparkSession, file: Path, body: String): Unit =
-    publish(spark, new Path(file.getParent, file.getName + ".tmp"), file, body)
+    publish(spark, new Path(file.getParent, file.getName + ".tmp"), file, body, Rename.OVERWRITE)
 
-  private def publish(spark: SparkSession, tmp: Path, file: Path, body: String): Unit = {
+  /** Publish `body` at `file` only if no writer has published there yet:
+    * the first writer wins, a later one throws
+    * (`FileAlreadyExistsException`) and leaves the first body intact. The
+    * body lands completely in a uniquely named tmp that a rename WITHOUT
+    * OVERWRITE then publishes, so a racing reader sees no file or the
+    * whole body, never an empty one; a tmp stranded by a dead writer
+    * carries another name and blocks nobody.
+    */
+  def writeOnce(spark: SparkSession, file: Path, body: String): Unit = {
+    val tmp = new Path(file.getParent, s".${file.getName}-${java.util.UUID.randomUUID()}.tmp")
+    try publish(spark, tmp, file, body, Rename.NONE)
+    finally tmp.getFileSystem(spark.sessionState.newHadoopConf()).delete(tmp, false)
+  }
+
+  private def publish(spark: SparkSession, tmp: Path, file: Path, body: String,
+                      mode: Rename): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = file.getFileSystem(conf)
     val out = fs.create(tmp, true)
     try out.write(body.getBytes(UTF_8)) finally out.close()
     FileContext.getFileContext(fs.getUri, conf)
-      .rename(fs.makeQualified(tmp), fs.makeQualified(file), Rename.OVERWRITE)
+      .rename(fs.makeQualified(tmp), fs.makeQualified(file), mode)
   }
+
+  /** `field` of the marker `file`, whose whole body is `body`, as an Int:
+    * every integer a marker holds is parsed here, so a torn or corrupt
+    * marker fails naming its file and contents, never with a bare
+    * `NumberFormatException`.
+    */
+  def int(file: Path, body: String, field: String): Int =
+    field.trim.toIntOption.getOrElse(throw new IllegalStateException(
+      s"corrupt marker at $file (contents: '$body'): '$field' is not an integer — " +
+        "repair it or rebuild the artifact before writing again"))
+
+  /** A one-integer marker; None when absent. */
+  def readInt(spark: SparkSession, file: Path): Option[Int] =
+    read(spark, file).map(body => int(file, body, body))
 
   private val CommitLedger = "_graft_committed_batch"
 
@@ -66,10 +95,7 @@ private[operators] object Ledger {
     val file = new Path(root, CommitLedger)
     read(spark, file).map { body =>
       val lines = body.split('\n').map(_.trim)
-      val batch = lines(0).toIntOption.getOrElse(throw new IllegalStateException(
-        s"corrupt commit ledger at $file (contents: '$body') — repair it to " +
-          "the highest fully-written batch id before writing again"))
-      (batch, lines.lift(1))
+      (int(file, body, lines(0)), lines.lift(1))
     }
   }
 
@@ -90,7 +116,8 @@ private[operators] object Ledger {
     val dir = new Path(root, PinsDir)
     val id = java.util.UUID.randomUUID()
     val pin = new Path(dir, s"pin-$id")
-    def pinAt(v: Int): Unit = publish(spark, new Path(dir, s".pin-$id.tmp"), pin, v.toString)
+    def pinAt(v: Int): Unit =
+      publish(spark, new Path(dir, s".pin-$id.tmp"), pin, v.toString, Rename.OVERWRITE)
     try {
       var v = resolve()
       pinAt(v)

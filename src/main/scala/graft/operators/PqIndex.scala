@@ -323,13 +323,9 @@ object PqIndex {
   private def cbDir(path: String, v: Int) = s"$path/v=$v/cb"
 
   /** The live version — fails loudly on a non-versioned root. */
-  def currentVersion(spark: SparkSession, path: String): Int = {
-    val mp = currentMarkerPath(path)
-    val raw = Ledger.read(spark, mp).getOrElse(throw new IllegalArgumentException(
+  def currentVersion(spark: SparkSession, path: String): Int =
+    Ledger.readInt(spark, currentMarkerPath(path)).getOrElse(throw new IllegalArgumentException(
       s"no version marker at $path — not a versioned PQ index (buildVersioned first)"))
-    raw.toIntOption.getOrElse(throw new IllegalStateException(
-      s"corrupt version marker at $mp (contents: '$raw')"))
-  }
 
   private def flipCurrent(spark: SparkSession, path: String, v: Int): Unit =
     Ledger.write(spark, currentMarkerPath(path), v.toString)

@@ -25,7 +25,7 @@ private[operators] object RadiusMarker {
     * never marker-less — they postdate the discipline).
     */
   def stored(spark: SparkSession, path: String, default: Int): Int =
-    Ledger.read(spark, markerPath(path)).fold(default)(_.toInt)
+    Ledger.readInt(spark, markerPath(path)).getOrElse(default)
 
   def validate(spark: SparkSession, path: String, tau: Int, default: Int): Unit = {
     val s = stored(spark, path, default)

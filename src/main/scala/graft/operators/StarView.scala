@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multi-way incremental materialized join view (r17 verdict missing #1):
@@ -49,16 +49,15 @@ import org.apache.spark.sql.functions._
   *    fact copies. Stale ki entries (a fact upsert that moved pk to a
   *    new dim key leaves the old pair behind) only ADD candidate pks —
   *    a recomputed-but-unchanged pk emits a cancelling -1/+1 pair, so
-  *    correctness never depends on ki minimality; compaction folds the
-  *    pairs away.
+  *    correctness never depends on ki minimality; sign-sum reads resolve
+  *    the pair away ([[compact]] merges files and keeps every row).
   *  - every current-state read inside ingest is partition-pruned to the
   *    delta's buckets (plan-asserted in StarViewSpec).
   *
-  * Crash/replay discipline is [[JoinView]]'s verbatim: one
-  * `_graft_committed_batch` ledger for ALL subtables ([[Ledger.commit]]),
-  * orphan cleanup of `batch > committed` directories
-  * before re-append, explicit-id replay no-op, schema sidecars beside
-  * each subtable so empty sides read typed.
+  * Storage format and crash/replay discipline are [[ViewStore]]'s: one
+  * `_graft_committed_batch` ledger for ALL subtables, orphan cleanup of
+  * `batch > committed` directories before re-append, explicit-id replay
+  * no-op, schema sidecars beside each subtable so empty sides read typed.
   *
   * Contract: `factKey` is a fact column unique per fact row (CDC mode
   * enforces one row image per pk per batch); each dim's join column
@@ -66,8 +65,6 @@ import org.apache.spark.sql.functions._
   * disjoint across sides; single writer.
   */
 object StarView {
-
-  private def kbOf(df: DataFrame, key: String): Column = KeyBuckets.kbFor(df, key)
 
   private def metaMarkerPath(path: String) =
     new org.apache.hadoop.fs.Path(path, "_graft_star_meta")
@@ -94,87 +91,10 @@ object StarView {
       tagged("cdc").toBoolean)
   }
 
-  /** (batch, writer) of the star's commit ledger. */
-  private def ledger(spark: SparkSession, path: String): (Int, Option[String]) =
-    Ledger.committed(spark, path).getOrElse(throw new IllegalArgumentException(
-      s"no commit ledger at $path — not a StarView-managed root (build first)"))
-
-  private def committedBatch(spark: SparkSession, path: String): Int = ledger(spark, path)._1
-
   /** Subtable names in side order: fact, dims, key indexes, view. */
   private def subs(dimKeys: Seq[String]): Seq[String] =
     Seq("f") ++ dimKeys.indices.map(i => s"d$i") ++
       dimKeys.indices.map(i => s"ki$i") ++ Seq("view")
-
-  private def schemaSidecarPath(sub: String): String = s"${sub}_schema"
-
-  private def writeSidecar(df: DataFrame, key: String, sub: String): Unit = {
-    df.withColumn("kb", kbOf(df, key)).withColumn("batch", lit(0))
-      .limit(0).coalesce(1)
-      .write.mode("overwrite").parquet(schemaSidecarPath(sub))
-    SchemaCache.invalidate(schemaSidecarPath(sub))
-  }
-
-  private def readSub(spark: SparkSession, sub: String): DataFrame = {
-    val sidecar = new org.apache.hadoop.fs.Path(schemaSidecarPath(sub))
-    val fs = sidecar.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(sidecar),
-      s"no schema sidecar at $sidecar — not a StarView subtable (build first)")
-    // memoized (r18): the sidecar is immutable between (re)builds and
-    // this schema consult was a footer-inference job per readSub call
-    val schema = SchemaCache.parquetSchema(spark, schemaSidecarPath(sub))
-    spark.read.schema(schema).parquet(sub)
-  }
-
-  // one file per kb directory per batch (r18; [[JoinView.appendView]]'s
-  // day-layout rationale applied to every kb writer): without the
-  // clustering repartition each of the writer's tasks opens a file in
-  // every kb= directory it has rows for — tasks x NB files per subtable
-  // per batch, and every later pruned read lists and opens all of them.
-  // The shuffle is delta-sized (exactly the rows being appended).
-  private def append(df: DataFrame, key: String, sub: String, batch: Int,
-                     sizeHint: Option[BigInt] = None): Unit =
-    // salted clustering (r18; [[PlanProbes.clusteredBy]]'s rationale);
-    // view appends pass the pre-join delta bytes as the sizing hint —
-    // Catalyst's join size estimate is a product (r19)
-    PlanProbes.clusteredBy(
-        df.withColumn("kb", kbOf(df, key)).withColumn("batch", lit(batch)),
-        col("kb"), KeyBuckets.NB, col(key), sizeHint)
-      .write.partitionBy("kb", "batch").mode("append").parquet(sub)
-
-  /** Bounded collect: at most NB bucket ids in a delta. */
-  private def bucketsOf(delta: DataFrame, key: String): Array[Int] =
-    delta.select(kbOf(delta, key).as("kb")).distinct().collect().map(_.getInt(0))
-
-  /** See [[PlanProbes.provablyEmpty]] — true for the `.limit(0)` frames
-    * callers pass for untouched sides; a star batch touching one side
-    * paid an empty write-job round trip for every other side (r18).
-    */
-  private def provablyEmpty(df: DataFrame): Boolean =
-    PlanProbes.provablyEmpty(df)
-
-  private def storedPruned(spark: SparkSession, sub: String, committed: Int,
-                           buckets: Array[Int]): DataFrame =
-    readSub(spark, sub)
-      .filter(col("batch") <= committed && col("kb").isin(buckets.map(Int.box): _*))
-      .drop("kb", "batch")
-
-  private def storedAll(spark: SparkSession, sub: String, committed: Int): DataFrame =
-    readSub(spark, sub).filter(col("batch") <= committed).drop("kb", "batch")
-
-  private def cleanupOrphans(spark: SparkSession, path: String,
-                             dimKeys: Seq[String], committed: Int): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    for (sub <- subs(dimKeys)) {
-      val glob = new org.apache.hadoop.fs.Path(s"$path/$sub/kb=*/batch=*")
-      val fs = glob.getFileSystem(conf)
-      val hits = fs.globStatus(glob)
-      if (hits != null) hits.foreach { st =>
-        val id = st.getPath.getName.stripPrefix("batch=").toInt
-        if (id > committed) fs.delete(st.getPath, true)
-      }
-    }
-  }
 
   /** Key-index rows for a fact slice: one narrow (dim key, fact pk) pair
     * per fact row per dim axis — what lets a dim delta find its affected
@@ -223,9 +143,9 @@ object StarView {
       if (cdc) {
         // contract guards fail BEFORE any files land; independent of each
         // other — overlap them ([[Par]], r19)
-        Par.run((() => guardOneRowPerKey(factP, factKey, "f", 0)) +:
+        Par.run((() => ViewStore.guardOneRowPerKey(factP, factKey, "f", 0)) +:
           dimsP.map { case (k, d) =>
-            () => guardOneRowPerKey(d, k, s"dim($k)", 0) })
+            () => ViewStore.guardOneRowPerKey(d, k, s"dim($k)", 0) })
       }
       // the 2k + 4 sidecar/append writes all target DIFFERENT directories
       // and read only the build-scoped persisted frames — one batch of
@@ -234,16 +154,13 @@ object StarView {
       // block-level locking serializes per partition — each input is
       // still computed once)
       Par.run(Seq[() => Unit](
-        () => { writeSidecar(sgn1(factP), factKey, s"$path/f")
-                append(sgn1(factP), factKey, s"$path/f", 0) },
-        () => { writeSidecar(sgn1(v0), factKey, s"$path/view")
-                append(sgn1(v0), factKey, s"$path/view", 0,
-                  sizeHint = Some(PlanProbes.statsBytes(factP))) }) ++
+        () => ViewStore.seed(sgn1(factP), s"$path/f", ViewStore.byKey(factKey)),
+        () => ViewStore.seed(sgn1(v0), s"$path/view", ViewStore.byKey(factKey),
+          sizeHint = Some(PlanProbes.statsBytes(factP)))) ++
         dimsP.zipWithIndex.flatMap { case ((k, d), i) => Seq[() => Unit](
-          () => { writeSidecar(sgn1(d), k, s"$path/d$i")
-                  append(sgn1(d), k, s"$path/d$i", 0) },
-          () => { writeSidecar(kiRows(factP, factKey, k), k, s"$path/ki$i")
-                  append(kiRows(factP, factKey, k), k, s"$path/ki$i", 0) })
+          () => ViewStore.seed(sgn1(d), s"$path/d$i", ViewStore.byKey(k)),
+          () => ViewStore.seed(kiRows(factP, factKey, k), s"$path/ki$i",
+            ViewStore.byKey(k)))
         })
     } finally {
       factP.unpersist(); dimsP.foreach(_._2.unpersist())
@@ -251,30 +168,6 @@ object StarView {
     writeMeta(spark, path, factKey, dimKeys, cdc)
     KeyBuckets.publish(spark, path)
     Ledger.commit(spark, path, 0, Some("build"))
-  }
-
-  private def guardOneRowPerKey(d: DataFrame, key: String, side: String,
-                                batch: Int): Unit = {
-    val dup = d.groupBy(col(key)).count()
-      .filter(col("count") > 1).limit(1).collect()
-    require(dup.isEmpty,
-      s"CDC delta batch $batch side $side carries multiple rows for key " +
-        s"${if (dup.isEmpty) "?" else dup.head.get(0)} — the row-image contract " +
-        "allows at most ONE upsert-or-delete per key per side per batch")
-  }
-
-  /** The delta's key-bucket ids AND the one-row-per-key contract check
-    * from ONE pass over the just-written rows (r19; [[JoinView]]'s
-    * bucketsAndGuard) — these were two collect jobs per side per batch.
-    */
-  private def bucketsAndGuard(d: DataFrame, key: String, side: String,
-                              batch: Int): Array[Int] = {
-    val kbC = KeyBuckets.kb(col(key), d.schema(key).dataType)
-    val rows = d.groupBy(col(key)).agg(count(lit(1)).as("_c"))
-      .groupBy(kbC.as("kb")).agg(max(col("_c")).as("_m"))
-      .collect()
-    if (rows.exists(_.getLong(1) > 1)) guardOneRowPerKey(d, key, side, batch)
-    rows.map(_.getInt(0))
   }
 
   /** Apply one batch of APPENDS (plain mode; any subset of sides may be
@@ -285,24 +178,19 @@ object StarView {
   def ingest(factDelta: DataFrame, dimDeltas: Seq[DataFrame], path: String,
              batch: Int = -1, writer: String = "batch"): Int = {
     val spark = factDelta.sparkSession
-    KeyBuckets.validate(spark, path)
     val (factKey, dimKeys, cdc) = meta(spark, path)
     require(!cdc, s"view at $path was built cdc = true — use ingestCdc")
     require(dimDeltas.size == dimKeys.size,
       s"expected ${dimKeys.size} dim deltas (build order), got ${dimDeltas.size}")
-    val c = committedBatch(spark, path)
-    val b = if (batch >= 0) batch else c + 1
+    val (c, b) = ViewStore.admit(spark, path, batch, subs(dimKeys))
     if (b <= c) return b // fully-committed replay: exactly-once by no-op
-    require(b == c + 1,
-      s"batch $b skips ahead of ledger $c at $path — a foreign writer is interleaving")
-    cleanupOrphans(spark, path, dimKeys, c)
     // single-evaluation: land the deltas first, derive terms from the
-    // just-written rows (JoinView's discipline). Provably-empty sides
+    // just-written rows ([[ViewStore.written]]). Provably-empty sides
     // (the `.limit(0)` frames callers pass for untouched sides) skip
     // their append outright — an empty partitioned write lands no files
     // but still costs a full job round trip, and a star batch touching
     // one side paid that for every other side (r18).
-    val fAppended = !provablyEmpty(factDelta)
+    val fAppended = !PlanProbes.provablyEmpty(factDelta)
     // the fact delta is consumed 1 + k times (its append, one ki
     // projection per dim) — persist across them (r18; the caller's frame
     // may be an expensive derivation), released before returning
@@ -312,21 +200,19 @@ object StarView {
     // all of a batch's side/key-index appends target DIFFERENT subtable
     // directories — overlap them ([[Par]], r19) instead of paying each
     // small write job's fixed latency serially
-    val dimAppended = dimKeys.zip(dimDeltas).map { case (_, dd) =>
-      !provablyEmpty(dd)
-    }
+    val dimAppended = dimDeltas.map(dd => !PlanProbes.provablyEmpty(dd))
     Par.run(
       Seq(if (!fAppended) null
-          else () => append(fd, factKey, s"$path/f", b)) ++
+          else () => ViewStore.append(fd, s"$path/f", b, ViewStore.byKey(factKey))) ++
       dimKeys.zip(dimDeltas).zipWithIndex.flatMap { case ((k, dd), i) => Seq(
         if (!dimAppended(i)) null
-        else () => append(dd, k, s"$path/d$i", b),
+        else () => ViewStore.append(dd, s"$path/d$i", b, ViewStore.byKey(k)),
         if (!fAppended) null
-        else () => append(kiRows(fd, factKey, k), k, s"$path/ki$i", b))
+        else () => ViewStore.append(kiRows(fd, factKey, k), s"$path/ki$i", b,
+          ViewStore.byKey(k)))
       })
     if (fAppended) fd.unpersist()
-    def written(sub: String) =
-      readSub(spark, sub).filter(col("batch") === b).drop("kb", "batch")
+    def written(sub: String) = ViewStore.written(spark, sub, b)
     // r18: every just-written delta read below is consumed several times
     // (bucket collects + the term joins) — pin each for the batch's scope
     // so the per-use cost is a cache read, not a re-scan; and derive ALL
@@ -349,7 +235,8 @@ object StarView {
         else {
           val df0 = pin(written(s"$path/f"))
           Some(dimKeys.zipWithIndex.foldLeft(df0) { case (acc, (k, i)) =>
-            acc.join(storedPruned(spark, s"$path/d$i", c, bucketsOf(df0, k)), Seq(k))
+            acc.join(ViewStore.storedPruned(spark, s"$path/d$i", c,
+              ViewStore.bucketsOf(df0, k)), Seq(k))
           })
         }
       // term for dim i: f_new ⋈ d1_new ⋈ … ⋈ Δdi ⋈ d{i+1}_old ⋈ … — the
@@ -359,77 +246,35 @@ object StarView {
       val dimTerms = dimKeys.zipWithIndex.map { case (ki, i) =>
         if (!dimAppended(i)) None else {
           val dd = pin(written(s"$path/d$i"))
-          val kiNew = readSub(spark, s"$path/ki$i")
-            .filter(col("batch") <= b &&
-              col("kb").isin(bucketsOf(dd, ki).map(Int.box): _*))
-            .drop("kb", "batch")
+          val kiNew = ViewStore.storedPruned(spark, s"$path/ki$i", b,
+            ViewStore.bucketsOf(dd, ki))
           val pks = pin(kiNew.join(dd.select(col(ki)), Seq(ki), "left_semi")
             .select(col(factKey)).distinct())
-          val fNew = readSub(spark, s"$path/f")
-            .filter(col("batch") <= b &&
-              col("kb").isin(bucketsOf(pks, factKey).map(Int.box): _*))
-            .drop("kb", "batch")
+          val fNew = ViewStore.storedPruned(spark, s"$path/f", b,
+              ViewStore.bucketsOf(pks, factKey))
             .join(pks, Seq(factKey), "left_semi")
           val withDi = pin(fNew.join(dd, Seq(ki)))
           val term = dimKeys.zipWithIndex.filterNot(_._2 == i)
             .foldLeft(withDi) { case (acc, (k, j)) =>
               val upTo = if (j < i) b else c // earlier sides NEW, later OLD
-              acc.join(readSub(spark, s"$path/d$j")
-                .filter(col("batch") <= upTo &&
-                  col("kb").isin(bucketsOf(withDi, k).map(Int.box): _*))
-                .drop("kb", "batch"), Seq(k))
+              acc.join(ViewStore.storedPruned(spark, s"$path/d$j", upTo,
+                ViewStore.bucketsOf(withDi, k)), Seq(k))
             }
           Some(term)
         }
       }
       val terms = (factTerm +: dimTerms).flatten
       if (terms.nonEmpty) {
-        val viewCols = SchemaCache.parquetSchema(spark, schemaSidecarPath(s"$path/view"))
-          .fieldNames.filterNot(n => n == "kb" || n == "batch")
-        val dv = terms
-          .map(_.select(viewCols.map(col).toIndexedSeq: _*))
-          .reduce(_ unionByName _)
+        val viewCols = ViewStore.rowColumns(spark, s"$path/view")
+        val dv = terms.map(_.select(viewCols: _*)).reduce(_ unionByName _)
         val hint = (written(s"$path/f") +: dimKeys.indices.map(i =>
           written(s"$path/d$i"))).map(PlanProbes.statsBytes).sum
-        append(dv, factKey, s"$path/view", b, sizeHint = Some(hint))
+        ViewStore.append(dv, s"$path/view", b, ViewStore.byKey(factKey),
+          sizeHint = Some(hint))
       }
     } finally keep.foreach(_.unpersist())
     Ledger.commit(spark, path, b, Some(writer))
     b
-  }
-
-  /** A side's CURRENT state (latest committed row image per key, delete
-    * markers resolved out), pruned to the given buckets.
-    */
-  private def currentPruned(spark: SparkSession, sub: String, key: String,
-                            committed: Int, buckets: Option[Array[Int]]): DataFrame = {
-    val base = readSub(spark, sub).filter(col("batch") <= committed)
-    val pruned = buckets.fold(base)(bs =>
-      base.filter(col("kb").isin(bs.map(Int.box): _*)))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(key)).orderBy(col("batch").desc)
-    pruned.drop("kb")
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn", "batch")
-      .filter(col("sgn") === 1).drop("sgn")
-  }
-
-  /** One side's signed persisted delta: +1 row images ∪ -1 delete markers
-    * (key + typed-null payloads) — [[JoinView]]'s signedSide verbatim.
-    */
-  private def signedSide(spark: SparkSession, up: DataFrame, del: DataFrame,
-                         key: String, sub: String): DataFrame = {
-    val marked = up.withColumn("sgn", lit(1))
-    if (del == null) marked
-    else {
-      val payload = readSub(spark, sub).schema.fields
-        .filterNot(f => Set("kb", "batch", "sgn", key).contains(f.name))
-      val markers = del.select(col(key)).distinct()
-        .select((col(key) +: payload.toIndexedSeq.map(f =>
-          lit(null).cast(f.dataType).as(f.name))): _*)
-        .withColumn("sgn", lit(-1))
-      marked.unionByName(markers)
-    }
   }
 
   /** Apply one batch of CDC row images — upserts and deletes, on ANY
@@ -449,7 +294,6 @@ object StarView {
                 factDeletes: DataFrame = null,
                 dimDeletes: Seq[DataFrame] = null): Int = {
     val spark = factDelta.sparkSession
-    KeyBuckets.validate(spark, path)
     val (factKey, dimKeys, cdc) = meta(spark, path)
     require(cdc, s"view at $path was not built cdc = true — use ingest")
     require(dimDeltas.size == dimKeys.size,
@@ -461,48 +305,44 @@ object StarView {
       if (dimDeletes == null) Seq.fill(dimKeys.size)(null) else dimDeletes
     require(dimDels.size == dimKeys.size,
       s"expected ${dimKeys.size} dim delete sets, got ${dimDels.size}")
-    val c = committedBatch(spark, path)
-    val b = if (batch >= 0) batch else c + 1
+    val (c, b) = ViewStore.admit(spark, path, batch, subs(dimKeys))
     if (b <= c) return b
-    require(b == c + 1,
-      s"batch $b skips ahead of ledger $c at $path — a foreign writer is interleaving")
-    cleanupOrphans(spark, path, dimKeys, c)
     // provably-empty signed sides skip their append (and the guard over
     // the nothing they would have written) — [[ingest]]'s r18 rationale:
     // the empty write's job round trip per untouched side dominated
     // batches that touch one side
-    val fKiNonEmpty = !provablyEmpty(factDelta)
+    val fKiNonEmpty = !PlanProbes.provablyEmpty(factDelta)
     // the fact delta is consumed 1 + k times (the signed append, one ki
     // projection per dim) — persist across them (r18), released below
     val fd = if (fKiNonEmpty)
       factDelta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else factDelta
-    val fSigned = signedSide(spark, fd, factDeletes, factKey, s"$path/f")
-    val fAppended = fKiNonEmpty || !provablyEmpty(fSigned)
+    val fSigned = ViewStore.signedSide(spark, fd, factDeletes, factKey, s"$path/f")
+    val fAppended = fKiNonEmpty || !PlanProbes.provablyEmpty(fSigned)
     val dimSigned = dimKeys.zip(dimDeltas).zipWithIndex.map { case ((k, dd), i) =>
-      signedSide(spark, dd, dimDels(i), k, s"$path/d$i")
+      ViewStore.signedSide(spark, dd, dimDels(i), k, s"$path/d$i")
     }
-    val dimAppended = dimSigned.map(s => !provablyEmpty(s))
-    def written(sub: String) =
-      readSub(spark, sub).filter(col("batch") === b).drop("kb", "batch")
+    val dimAppended = dimSigned.map(s => !PlanProbes.provablyEmpty(s))
+    def written(sub: String) = ViewStore.written(spark, sub, b)
     // every side's append + contract-check chain, and the fact's ki
     // appends, are independent of each other — overlap them ([[Par]],
     // r19); a guard violation still aborts BEFORE the ledger advances
     val wdBuckets = Array.fill(dimKeys.size)(Array.empty[Int])
     Par.run(
       Seq(if (!fAppended) null else () => {
-            append(fSigned, factKey, s"$path/f", b)
-            guardOneRowPerKey(written(s"$path/f"), factKey, "f", b)
+            ViewStore.append(fSigned, s"$path/f", b, ViewStore.byKey(factKey))
+            ViewStore.guardOneRowPerKey(written(s"$path/f"), factKey, "f", b)
           }) ++
       dimKeys.zipWithIndex.flatMap { case (k, i) => Seq(
         if (!dimAppended(i)) null else () => {
-          append(dimSigned(i), k, s"$path/d$i", b)
-          wdBuckets(i) = bucketsAndGuard(written(s"$path/d$i"), k, s"dim($k)", b)
+          ViewStore.append(dimSigned(i), s"$path/d$i", b, ViewStore.byKey(k))
+          wdBuckets(i) = ViewStore.bucketsAndGuard(written(s"$path/d$i"), k, s"dim($k)", b)
         },
         // ki gains entries for the batch's +1 fact images only (markers
         // carry null dim keys — useless as index entries)
         if (!fKiNonEmpty) null
-        else () => append(kiRows(fd, factKey, k), k, s"$path/ki$i", b))
+        else () => ViewStore.append(kiRows(fd, factKey, k), s"$path/ki$i", b,
+          ViewStore.byKey(k)))
       })
     if (fKiNonEmpty) fd.unpersist()
     val wf = written(s"$path/f")
@@ -511,9 +351,8 @@ object StarView {
     try {
       val dv = cdcTerms(spark, path, factKey, dimKeys, wf, wds, c,
         fAppended, dimAppended, keep, wdBuckets = Some(wdBuckets.toSeq))
-      val viewCols = SchemaCache.parquetSchema(spark, schemaSidecarPath(s"$path/view"))
-        .fieldNames.filterNot(n => n == "kb" || n == "batch")
-      append(dv.select(viewCols.map(col).toIndexedSeq: _*), factKey, s"$path/view", b,
+      ViewStore.append(dv.select(ViewStore.rowColumns(spark, s"$path/view"): _*),
+        s"$path/view", b, ViewStore.byKey(factKey),
         sizeHint = Some((wf +: wds).map(PlanProbes.statsBytes).sum))
     } finally keep.foreach(_.unpersist())
     Ledger.commit(spark, path, b, Some(writer))
@@ -552,11 +391,8 @@ object StarView {
         // ingestCdc passes the bucket sets its combined append-probe
         // already collected (r19 — zero extra jobs here);
         // plan-inspection callers compute them
-        val wb = wdBuckets.map(_(i)).getOrElse(bucketsOf(wd, k))
-        readSub(spark, s"$path/ki$i")
-          .filter(col("batch") <= committed + 1 &&
-            col("kb").isin(wb.map(Int.box): _*))
-          .drop("kb", "batch")
+        val wb = wdBuckets.map(_(i)).getOrElse(ViewStore.bucketsOf(wd, k))
+        ViewStore.storedPruned(spark, s"$path/ki$i", committed + 1, wb)
           .join(wd.select(col(k)), Seq(k), "left_semi")
           .select(col(factKey))
       }
@@ -564,25 +400,19 @@ object StarView {
     val fPks = if (fAppended) Seq(wf.select(col(factKey))) else Seq.empty
     val pks = pin((fPks ++ dimPks).reduceOption(_ unionByName _)
       .getOrElse(wf.select(col(factKey))).distinct())
-    val pkBuckets = bucketsOf(pks, factKey)
+    val pkBuckets = ViewStore.bucketsOf(pks, factKey)
     // retract: the view's CURRENT rows for the affected pks — sign-resolve
     // restricted to the pks' buckets, so retractions are value-identical
     // to the rows they cancel
-    val vRaw = readSub(spark, s"$path/view")
-      .filter(col("batch") <= committed &&
-        col("kb").isin(pkBuckets.map(Int.box): _*))
-      .drop("kb", "batch")
+    val vRaw = ViewStore.storedPruned(spark, s"$path/view", committed, pkBuckets)
     val vPayload = vRaw.columns.filterNot(_ == "sgn")
-    val retract = vRaw
-      .join(pks, Seq(factKey), "left_semi")
-      .groupBy(vPayload.map(col).toIndexedSeq: _*)
-      .agg(sum("sgn").as("_cnt")).filter(col("_cnt") > 0).drop("_cnt")
+    val retract = ViewStore.resolve(vRaw.join(pks, Seq(factKey), "left_semi"))
       .withColumn("sgn", lit(-1))
     // insert: the affected pks' CURRENT star join — fact current images
     // for the pks, each dim's current image pruned to fCur's key-bucket
     // supersets
-    val fCur = pin(currentPruned(spark, s"$path/f", factKey, committed + 1,
-      Some(pkBuckets)).join(pks, Seq(factKey), "left_semi"))
+    val fCur = pin(ViewStore.currentPruned(spark, s"$path/f", factKey, committed + 1,
+      pkBuckets).join(pks, Seq(factKey), "left_semi"))
     // ALL k dim-key bucket sets in ONE collect over the pinned fCur (r19;
     // this was one bucketsOf job per dim): each set is <= NB values, so
     // one collect_set aggregate per dim key in a single pass answers all
@@ -590,14 +420,14 @@ object StarView {
       if (dimKeys.isEmpty) Seq.empty
       else {
         val sets = dimKeys.zipWithIndex.map { case (k, i) =>
-          collect_set(kbOf(fCur, k)).as(s"_b$i")
+          collect_set(KeyBuckets.kbFor(fCur, k)).as(s"_b$i")
         }
         val row = fCur.agg(sets.head, sets.tail: _*).collect()(0)
         dimKeys.indices.map(i => row.getSeq[Int](i).toArray)
       }
     val insert = dimKeys.zipWithIndex.foldLeft(fCur: DataFrame) { case (acc, (k, i)) =>
-      acc.join(currentPruned(spark, s"$path/d$i", k, committed + 1,
-        Some(dimBuckets(i))), Seq(k))
+      acc.join(ViewStore.currentPruned(spark, s"$path/d$i", k, committed + 1,
+        dimBuckets(i)), Seq(k))
     }.withColumn("sgn", lit(1))
     retract.unionByName(insert.select((vPayload.map(col) :+ col("sgn")).toIndexedSeq: _*))
   }
@@ -610,18 +440,10 @@ object StarView {
     * retractions are history, not rewrites, so the floor never rises here.
     */
   def mergedAsOf(spark: SparkSession, path: String, upToBatch: Int): DataFrame = {
-    val c = committedBatch(spark, path)
-    val raw = readSub(spark, s"$path/view")
+    val c = ViewStore.committed(spark, path)
+    ViewStore.resolve(ViewStore.readSub(spark, s"$path/view")
       .filter(col("batch") <= math.min(c, upToBatch))
-      .drop("kb", "batch")
-    if (!raw.columns.contains("sgn")) raw
-    else {
-      val payload = raw.columns.filterNot(_ == "sgn")
-      raw.groupBy(payload.map(col).toIndexedSeq: _*)
-        .agg(sum("sgn").as("_cnt"))
-        .filter(col("_cnt") > 0)
-        .drop("_cnt")
-    }
+      .drop("kb", "batch"))
   }
 
   /** Stream a FULL CHANGEFEED of the FACT side into the star view — the
@@ -629,63 +451,28 @@ object StarView {
     * batch ingests between stream runs): each trigger's rows split on
     * `opCol` ('d' = delete, only the pk is read; anything else — incl. a
     * NULL op, null-safe — is an upsert row image) and apply atomically
-    * through one [[ingestCdc]] call under a REAL pinned batch id.
-    * Exactly-once is [[JoinView.cdcStream]]'s two-marker wiring verbatim:
-    * the checkpoint-local applied marker no-ops replays, and the ledger's
-    * writer line distinguishes this checkpoint's own crash window (no-op)
-    * from a foreign writer having taken the id space (fail loudly — a
-    * silent no-op would drop the micro-batch).
+    * through one [[ingestCdc]] call under [[IndexStream.exactlyOnce]]'s
+    * pinned batch ids, applied marker and writer-line crash window.
     */
   def cdcStream(da: DataFrame, path: String, checkpoint: String,
                 opCol: String = "op")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    da.writeStream
-      .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
-        val spark = batchDf.sparkSession
-        val (factKey, dimKeys, _) = meta(spark, path)
-        val base = IndexStream.pinnedBase(batchDf,
-          committedBatch(spark, path) + 1, checkpoint)
-        if (batchId > JoinView.readApplied(spark, checkpoint)) {
-          val b = base + batchId.toInt
-          val (c, w) = ledger(spark, path)
-          if (b == c + 1) {
-            val emptyDims = dimKeys.indices.map(i =>
-              readSub(spark, s"$path/d$i").drop("kb", "batch", "sgn").limit(0))
-            ingestCdc(
-              batchDf.filter(!col(opCol).eqNullSafe("d")).drop(opCol),
-              emptyDims, path, batch = b, writer = checkpoint,
-              factDeletes = batchDf.filter(col(opCol).eqNullSafe("d"))
-                .select(col(factKey)))
-            JoinView.writeApplied(spark, checkpoint, batchId)
-          } else if (b == c && w.contains(checkpoint)) {
-            // crash window: we committed b, lost the applied-marker write
-            JoinView.writeApplied(spark, checkpoint, batchId)
-          } else {
-            throw new IllegalStateException(
-              s"star ledger at $c (writer ${w.getOrElse("?")}) " +
-                s"but this checkpoint's pinned id space expects batch $b — the view " +
-                "was advanced outside this checkpoint while it was stopped; a silent " +
-                "no-op would drop this micro-batch. Restart with a FRESH checkpoint " +
-                "(the view data itself is intact).")
-          }
-        }
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-
-  /** Compact every subtable in place (kb/batch layout preserved) — folds
-    * the CDC -1/+1 recompute pairs away and bounds file counts.
-    */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val (_, dimKeys, _) = meta(spark, path)
-    val conf = spark.sessionState.newHadoopConf()
-    for (sub <- subs(dimKeys)) {
-      val glob = new org.apache.hadoop.fs.Path(s"$path/$sub/kb=*/batch=*")
-      val fs = glob.getFileSystem(conf)
-      val hits = fs.globStatus(glob)
-      if (hits != null && hits.nonEmpty)
-        IndexMaintenance.compact(spark, s"$path/$sub", partitionCols = Seq("kb", "batch"))
+    IndexStream.exactlyOnce(da, path, checkpoint) { (batchDf, b) =>
+      val spark = batchDf.sparkSession
+      val (factKey, dimKeys, _) = meta(spark, path)
+      val emptyDims = dimKeys.indices.map(i =>
+        ViewStore.readSub(spark, s"$path/d$i").drop("kb", "batch", "sgn").limit(0))
+      ingestCdc(
+        batchDf.filter(!col(opCol).eqNullSafe("d")).drop(opCol),
+        emptyDims, path, batch = b, writer = checkpoint,
+        factDeletes = batchDf.filter(col(opCol).eqNullSafe("d")).select(col(factKey)))
     }
-  }
+
+  /** Compact every subtable in place ([[ViewStore.compact]], kb/batch
+    * layout preserved): merges fragment files and bounds file counts. It
+    * keeps every row — a CDC recompute's -1/+1 pairs stay and sign-sum
+    * reads resolve them; only [[JoinView.foldCdc]] folds signed pairs.
+    */
+  def compact(spark: SparkSession, path: String): Unit =
+    ViewStore.compact(spark, path, subs(meta(spark, path)._2))
 }

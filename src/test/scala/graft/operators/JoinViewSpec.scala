@@ -235,6 +235,28 @@ class JoinViewSpec extends SparkSpec {
     assert(viewSet(path) == joinSet(A.take(28), B))
   }
 
+  test("a plain ingest whose delta hits all three terms lands one file per view bucket") {
+    val path = Files.createTempDirectory("graft_jv_files_").toString
+    JoinView.build(mkA(A.take(14)), mkB(B.take(10)), "k", path)
+    // new A rows meet stored B, new B rows meet stored A, and new A meets
+    // new B — three union branches, each spread over several partitions
+    val da = mkA(A.slice(14, 28)).repartition(4)
+    val db = mkB(B.slice(10, 20)).repartition(4)
+    assert(JoinView.deltaView(spark, path, da, db, "k").count() >
+      joinSet(A.slice(14, 28), B.take(10)).size + joinSet(A.take(14), B.slice(10, 20)).size,
+      "fixture must hit the new-a x new-b term too")
+    JoinView.ingest(da, db, "k", path)
+    val glob = new org.apache.hadoop.fs.Path(s"$path/view/kb=*/batch=1")
+    val fs = glob.getFileSystem(spark.sessionState.newHadoopConf())
+    val dirs = fs.globStatus(glob)
+    assert(dirs.nonEmpty)
+    for (d <- dirs) {
+      val files = fs.listStatus(d.getPath).map(_.getPath.getName).filter(_.endsWith(".parquet"))
+      assert(files.length <= 1, s"${d.getPath} holds ${files.length} files")
+    }
+    assert(viewSet(path) == joinSet(A.take(28), B.take(20)))
+  }
+
   test("a mismatched persisted bucket count fails loudly at the writer") {
     val path = Files.createTempDirectory("graft_jv_nb_").toString
     JoinView.build(mkA(A.take(14)), mkB(B.take(10)), "k", path)

@@ -8,8 +8,9 @@ import org.apache.hadoop.fs.Path
 import graft.SparkSpec
 
 /** The shared sidecar protocol: atomic publish leaves nothing behind,
-  * both commit-ledger forms keep their exact bytes, corrupt integer
-  * markers fail naming the file, and the pin GC reaps crashed readers.
+  * a write-once publish keeps its first writer, both commit-ledger forms
+  * keep their exact bytes, corrupt integer markers fail naming the file,
+  * and the pin GC reaps crashed readers.
   */
 class LedgerSpec extends SparkSpec {
 
@@ -61,6 +62,62 @@ class LedgerSpec extends SparkSpec {
         s"$name ('$body'): message does not name the file: ${e.getMessage}")
     }
   }
+
+  private def tmpsIn(root: String): Seq[String] =
+    Option(new java.io.File(root).list()).getOrElse(Array.empty[String])
+      .toSeq.filter(_.contains(".tmp"))
+
+  test("writeOnce: a second publish throws and leaves the first body intact") {
+    val root = tmpRoot("once_")
+    val f = new Path(root, "graft_base_batch")
+    Ledger.writeOnce(spark, f, "3")
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      Ledger.writeOnce(spark, f, "5")
+    }
+    assert(new String(Files.readAllBytes(Paths.get(root, "graft_base_batch")), UTF_8) == "3")
+  }
+
+  test("writeOnce leaves no tmp file behind, after a win or a loss") {
+    val root = tmpRoot("once_tmp_")
+    val f = new Path(root, "graft_base_batch")
+    Ledger.writeOnce(spark, f, "3")
+    assert(tmpsIn(root).isEmpty, s"tmp file left behind: ${tmpsIn(root).mkString(", ")}")
+    intercept[org.apache.hadoop.fs.FileAlreadyExistsException] {
+      Ledger.writeOnce(spark, f, "5")
+    }
+    assert(tmpsIn(root).isEmpty, s"tmp file left behind: ${tmpsIn(root).mkString(", ")}")
+  }
+
+  test("a tmp stranded by a dead writeOnce does not block a later publish") {
+    val root = tmpRoot("once_dead_")
+    Files.write(Paths.get(root, ".graft_base_batch-dead.tmp"), "9".getBytes(UTF_8))
+    val f = new Path(root, "graft_base_batch")
+    Ledger.writeOnce(spark, f, "4")
+    assert(Ledger.readInt(spark, f).contains(4))
+    assert(IndexStream.pinnedBase(spark.emptyDataFrame, 7, root) == 4,
+      "a pinned base must keep the first writer's value")
+  }
+
+  // one case per integer-bearing marker: a non-integer body fails with an
+  // IllegalStateException naming the file, not a bare NumberFormatException
+  private val intMarkers: Seq[(String, String, String => Any)] = Seq(
+    ("_graft_max_batch", "x7", r => IndexMaintenance.readMaxBatchMarker(spark, r)),
+    ("_graft_tau", "x7", r => RadiusMarker.stored(spark, r, 1)),
+    ("_graft_asof_floor", "x7\nforget", r => AsofFloor.read(spark, r)),
+    ("_graft_buckets", s"x7\nhash=${KeyBuckets.HashVersion}", r => KeyBuckets.validate(spark, r)),
+    ("graft_base_batch", "x7", r => IndexStream.pinnedBase(spark.emptyDataFrame, 0, r)),
+    ("graft_applied_batchid", "x7", r => IndexStream.readApplied(spark, r)),
+    ("_graft_view_day_col", "ts\npdb=x7\nhash=v1-daystr\ntz=UTC",
+      r => JoinView.viewDayCol(spark, r)))
+
+  for ((name, body, readIt) <- intMarkers)
+    test(s"a non-integer $name fails naming its file") {
+      val root = tmpRoot("int_")
+      Files.write(Paths.get(root, name), body.getBytes(UTF_8))
+      val e = intercept[IllegalStateException](readIt(root))
+      assert(e.getMessage.contains(new Path(root, name).toString),
+        s"$name: message does not name the file: ${e.getMessage}")
+    }
 
   test("livePins reaps expired pins and stranded tmps, ignores a zero-byte pin") {
     val root = tmpRoot("pins_")

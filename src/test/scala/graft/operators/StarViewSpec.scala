@@ -180,6 +180,76 @@ class StarViewSpec extends SparkSpec {
     }
   }
 
+  /** A fact changefeed trigger: row images plus 'd' rows (only pk read). */
+  private def feed(ups: Seq[(Long, Long, Long, String)], dels: Seq[Long]): DataFrame = {
+    val spark0 = spark
+    import spark0.implicits._
+    (ups.map { case (pk, c, p, fv) => (pk, c, p, fv, "u") } ++
+      dels.map(pk => (pk, 0L, 0L, "", "d"))).toDF("pk", "c", "p", "fv", "op")
+  }
+
+  private def streamFiles(src: String): DataFrame =
+    spark.readStream.schema(feed(Nil, Nil).schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$src/f*")
+
+  private def messages(t: Throwable): Seq[String] =
+    if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+
+  test("a streamed fact changefeed equals the same batches applied by ingestCdc") {
+    val streamed = Files.createTempDirectory("graft_star_stream_").toString
+    val batched = Files.createTempDirectory("graft_star_batched_").toString
+    val src = Files.createTempDirectory("graft_star_stream_src_").toString
+    val cp = Files.createTempDirectory("graft_star_stream_cp_").toString
+    for (path <- Seq(streamed, batched))
+      StarView.build(mkF(F0), "pk", Seq("c" -> mkC(C0), "p" -> mkP(P0)), path, cdc = true)
+    // three triggers; pk 21 is inserted, then updated, and pk 3 updated,
+    // then deleted, so the triggers must apply in order
+    val triggers = Seq(
+      (Seq((3L, 3L, 0L, "f3'"), (21L, 1L, 1L, "f21")), Seq(5L)),
+      (Seq((21L, 2L, 2L, "f21'")), Seq(7L)),
+      (Seq((22L, 4L, 2L, "f22")), Seq(3L)))
+    triggers.zipWithIndex.foreach { case ((ups, dels), i) =>
+      feed(ups, dels).coalesce(1).write.parquet(s"$src/f$i")
+    }
+    val q = StarView.cdcStream(streamFiles(src), streamed, cp)
+    try q.processAllAvailable() finally q.stop()
+    val spark0 = spark
+    import spark0.implicits._
+    for ((ups, dels) <- triggers)
+      StarView.ingestCdc(mkF(ups), Seq(mkC(Nil), mkP(Nil)), batched,
+        factDeletes = dels.toDF("pk"))
+    assert(viewSet(streamed) == viewSet(batched))
+    val expF = F0.filterNot(r => Set(3L, 5L, 7L).contains(r._1)) ++
+      Seq((21L, 2L, 2L, "f21'"), (22L, 4L, 2L, "f22"))
+    assert(viewSet(streamed) == oneShot(expF, C0, P0))
+  }
+
+  test("a restarted changefeed whose id space a batch ingestCdc took fails loudly") {
+    val path = Files.createTempDirectory("graft_star_taken_").toString
+    val src = Files.createTempDirectory("graft_star_taken_src_").toString
+    val cp = Files.createTempDirectory("graft_star_taken_cp_").toString
+    StarView.build(mkF(F0), "pk", Seq("c" -> mkC(C0), "p" -> mkP(P0)), path, cdc = true)
+    feed(Seq((3L, 3L, 0L, "f3'")), Nil).coalesce(1).write.parquet(s"$src/f0")
+    val q1 = StarView.cdcStream(streamFiles(src), path, cp)
+    try q1.processAllAvailable() finally q1.stop()
+    // a batch-API write while the stream is stopped takes the next id
+    StarView.ingestCdc(mkF(Seq((4L, 4L, 1L, "f4'"))), Seq(mkC(Nil), mkP(Nil)), path)
+    feed(Seq((6L, 1L, 0L, "f6'")), Nil).coalesce(1).write.parquet(s"$src/f1")
+    val q2 = StarView.cdcStream(streamFiles(src), path, cp)
+    val e = intercept[Exception] {
+      try q2.processAllAvailable() finally q2.stop()
+    }
+    assert(messages(e).exists(_.contains("FRESH checkpoint")),
+      s"expected the loud id-space guard, got: ${messages(e).mkString(" | ")}")
+    // nothing was silently dropped or duplicated up to the guard
+    val expF = F0.map {
+      case (3L, _, _, _) => (3L, 3L, 0L, "f3'")
+      case (4L, _, _, _) => (4L, 4L, 1L, "f4'")
+      case r => r
+    }
+    assert(viewSet(path) == oneShot(expF, C0, P0))
+  }
+
   test("CDC stored reads are bucket-pruned to the affected pks") {
     val path = Files.createTempDirectory("graft_star_cdcprune_").toString
     // spread pks over many buckets so pruning is observable
