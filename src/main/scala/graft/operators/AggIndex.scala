@@ -133,8 +133,7 @@ object AggIndex {
     */
   def partials(events: DataFrame): DataFrame =
     events
-      .select(col("event_type"),
-        date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
+      .select(col("event_type"), JoinView.dayOf(col("ts")).as("day"),
         col("value"), col("user_id"))
       .groupBy("event_type", "day")
       .agg(
@@ -182,6 +181,20 @@ object AggIndex {
   private lazy val mgAgg = udaf(new graft.functions.MisraGries.MisraGriesAgg(MgK))
   private lazy val mgMerge = udaf(new graft.functions.MisraGries.MisraGriesMergeAgg(MgK))
 
+  /** `events`' partials as the stored rows of `batch` — the one shape
+    * every append path writes: layout `version`'s columns
+    * ([[CurrentLayout]] scaladoc), stamped `rep = false` on a CDC table
+    * ([[ingestCdc]]).
+    */
+  private def storedPartials(events: DataFrame, version: Int, batch: Int,
+                             cdc: Boolean): DataFrame = {
+    require(version >= 1 && version <= CurrentLayout,
+      s"unknown layout version $version (this code writes 1..$CurrentLayout)")
+    val p = partials(events).select((Keys ++ layoutCols(version)).map(col): _*)
+      .withColumn("batch", lit(batch))
+    if (cdc) p.withColumn("rep", lit(false)) else p
+  }
+
   /** The commit ledger ([[Ledger.commit]]): rows with batch > its value
     * are orphans of a writer that died mid-batch — harmless when the
     * writer's own checkpoint resumes (replay lands byte-identical under
@@ -212,14 +225,9 @@ object AggIndex {
     */
   def build(events: DataFrame, path: String, cdc: Boolean = false,
             schemaVersion: Int = CurrentLayout): Unit = {
-    require(schemaVersion >= 1 && schemaVersion <= CurrentLayout,
-      s"unknown layout version $schemaVersion (this code writes 1..$CurrentLayout)")
-    val p0 = partials(events)
-      .select((Keys ++ layoutCols(schemaVersion)).map(col): _*)
-      .withColumn("batch", lit(0))
-    (if (cdc) p0.withColumn("rep", lit(false)) else p0)
+    storedPartials(events, schemaVersion, batch = 0, cdc)
       .write.mode("overwrite").parquet(path)
-    modeCache.remove(path) // build is the only mode transition
+    SchemaCache.invalidate(path) // build is the only mode transition
     writeLayoutMarker(events.sparkSession, path, schemaVersion)
     markCommitted(events.sparkSession, path, 0)
   }
@@ -228,15 +236,11 @@ object AggIndex {
     * schema (the `rep` column is the marker).
     */
   def isCdcTable(spark: SparkSession, path: String): Boolean =
-    // memoized (r18): the rep-column mode marker is fixed at build, and
-    // this consult was a full-table footer-inference job per call (every
-    // ingest and every merged read makes it)
-    modeCache.computeIfAbsent(path, p =>
-      try spark.read.parquet(p).schema.fieldNames.contains("rep")
-      catch { case _: org.apache.spark.sql.AnalysisException => false })
-
-  private val modeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
+    // memoized ([[SchemaCache]], r18): the rep-column mode marker is fixed
+    // at build, and this consult was a full-table footer-inference job per
+    // call (every ingest and every merged read makes it)
+    try SchemaCache.parquetSchema(spark, path).fieldNames.contains("rep")
+    catch { case _: org.apache.spark.sql.AnalysisException => false }
 
   /** The CURRENT code layout's partial-row schema, derived from
     * [[partials]] itself (one empty plan, cached) so column types can
@@ -279,13 +283,7 @@ object AggIndex {
     */
   def ingest(events: DataFrame, path: String, batch: Int,
              schemaVersion: Int = CurrentLayout): Unit = {
-    require(schemaVersion >= 1 && schemaVersion <= CurrentLayout,
-      s"unknown layout version $schemaVersion (this code writes 1..$CurrentLayout)")
-    val p = partials(events)
-      .select((Keys ++ layoutCols(schemaVersion)).map(col): _*)
-      .withColumn("batch", lit(batch))
-    (if (isCdcTable(events.sparkSession, path)) p.withColumn("rep", lit(false))
-     else p)
+    storedPartials(events, schemaVersion, batch, isCdcTable(events.sparkSession, path))
       .write.mode("append").parquet(path)
     bumpLayout(events.sparkSession, path, schemaVersion)
     markCommitted(events.sparkSession, path, batch)
@@ -356,8 +354,7 @@ object AggIndex {
     if (batch <= c) return // fully-committed replay: exactly-once by no-op
     require(batch == c + 1,
       s"batch $batch skips ahead of ledger $c at $path — a foreign writer is interleaving")
-    val keyed = changes.select(col("event_type"),
-      date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"),
+    val keyed = changes.select(col("event_type"), JoinView.dayOf(col("ts")).as("day"),
       col("ts"), col("value"), col("user_id"), col("sgn"))
     // persisted: the retraction key set is reused FOUR times below (the
     // insert-path anti-join, the affected-days collect, the recompute
@@ -384,7 +381,7 @@ object AggIndex {
           else stateForDays(days)
         }
       val repInput = stateSrc
-        .withColumn("_day", date_format(date_trunc("day", col("ts")), "yyyy-MM-dd"))
+        .withColumn("_day", JoinView.dayOf(col("ts")))
         .join(retractKeys.withColumnRenamed("day", "_day"),
           Seq("event_type", "_day"), "left_semi")
         .drop("_day")
@@ -466,8 +463,7 @@ object AggIndex {
     val cdcMode = isCdcTable(events.sparkSession, path)
     events.writeStream
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val p = partials(df).withColumn("batch", lit(base + batchId.toInt))
-        (if (cdcMode) p.withColumn("rep", lit(false)) else p)
+        storedPartials(df, CurrentLayout, base + batchId.toInt, cdcMode)
           .write.mode("append").parquet(path)
         markCommitted(df.sparkSession, path, base + batchId.toInt)
       }
@@ -541,20 +537,25 @@ object AggIndex {
     * was).
     */
   private def resolved(spark: SparkSession, path: String,
-                       upToBatch: Int): DataFrame = {
-    val raw = readPartials(spark, path)
+                       upToBatch: Int): DataFrame =
+    visible(readPartials(spark, path)
       .filter(col("batch") <= upToBatch)
-      .dropDuplicates(Keys :+ "batch")
-    if (!raw.columns.contains("rep")) raw
+      .dropDuplicates(Keys :+ "batch"))
+
+  /** Replacement visibility over deduped stored rows: on a CDC table each
+    * key keeps its newest `rep = true` row and the later batches, and
+    * `rep` is dropped; a plain table (no `rep` column) passes through.
+    */
+  private def visible(rows: DataFrame): DataFrame =
+    if (!rows.columns.contains("rep")) rows
     else {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(Keys.map(col): _*)
-      raw.withColumn("_repb", max(when(col("rep"), col("batch"))).over(w))
+      rows.withColumn("_repb", max(when(col("rep"), col("batch"))).over(w))
         .filter(col("_repb").isNull || col("batch") > col("_repb") ||
           (col("batch") === col("_repb") && col("rep")))
         .drop("_repb", "rep")
     }
-  }
 
   /** Value quantiles per key, entirely from the stored partial table —
     * the dashboard percentile ("p50/p95 per day") answered by merging the
@@ -666,7 +667,9 @@ object AggIndex {
     * parity spec-pinned in AggIndexSpec (the SignatureIndexSpec forget
     * contract, rollup edition). Maintenance-window contract: requires the
     * stored max batch to be COMMITTED (no in-flight writer — fail-loud
-    * otherwise) and the crash-safe trash swap of [[compact]].
+    * otherwise) and runs in the crash-safe swap of
+    * [[IndexMaintenance.rewrite]], which also carries the `_graft_layout`
+    * marker across.
     *
     * `correctedEvents` must be the full CURRENT event log this index's
     * state derives from (the index stores aggregates; only the log can
@@ -678,53 +681,45 @@ object AggIndex {
     * the parameter's name on purpose).
     */
   def forgetUsers(spark: SparkSession, path: String, correctedEvents: DataFrame,
-                  userIds: DataFrame): Unit = {
-    val events = correctedEvents
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    IndexMaintenance.recover(spark, path)
-    val maxBatch = nextBatch(spark, path) - 1
-    committedBatch(spark, path) match {
-      case Some(c) => require(c >= maxBatch,
-        s"forgetUsers at $path: stored max batch $maxBatch is not committed " +
-          s"(ledger $c) — a writer is in flight or died mid-batch; quiesce or " +
-          "resume it first")
-      case None => throw new IllegalStateException(
-        s"forgetUsers at $path: no commit ledger — not an AggIndex-managed table")
+                  userIds: DataFrame): Unit =
+    IndexMaintenance.rewrite(spark, path) { (tmp, _) =>
+      val events = correctedEvents
+      val maxBatch = nextBatch(spark, path) - 1
+      committedBatch(spark, path) match {
+        case Some(c) => require(c >= maxBatch,
+          s"forgetUsers at $path: stored max batch $maxBatch is not committed " +
+            s"(ledger $c) — a writer is in flight or died mid-batch; quiesce or " +
+            "resume it first")
+        case None => throw new IllegalStateException(
+          s"forgetUsers at $path: no commit ledger — not an AggIndex-managed table")
+      }
+      val users = userIds.select("user_id").distinct()
+      val affectedKeys = events.join(users, "user_id")
+        .select(col("event_type"), JoinView.dayOf(col("ts")).as("day"))
+        .distinct()
+      val all = readPartials(spark, path).dropDuplicates(Keys :+ "batch")
+      val kept = all.join(affectedKeys, Keys, "left_anti")
+      val recomputed0 = partials(events.join(users, Seq("user_id"), "left_anti"))
+        .join(affectedKeys, Keys, "left_semi")
+        .withColumn("batch", lit(maxBatch + 1))
+      // on a CDC table ([[ingestCdc]]) the recomputed rows are full-state
+      // replacements by definition (rep = true: nothing earlier survives
+      // for these keys anyway — the physical drop above made sure — but
+      // the flag keeps the layout homogeneous and the semantics honest);
+      // `events` must then be the CURRENT CORRECTED log (e.g. the upstream
+      // CDC view's merged state), not the raw pre-correction feed
+      val recomputed = if (all.columns.contains("rep"))
+        recomputed0.withColumn("rep", lit(true)) else recomputed0
+      kept.unionByName(recomputed).coalesce(1)
+        .write.mode("overwrite").parquet(tmp)
+      Ledger.commit(spark, tmp, maxBatch + 1, writer = None)
+      // retention floor rides the swap ([[AsofFloor]]): affected keys'
+      // history was dropped from EVERY batch and recomputed under
+      // maxBatch + 1 — any as-of below that would silently show history
+      // missing those keys entirely
+      AsofFloor.carryInto(spark, path, tmp, floor = maxBatch + 1,
+        rewrite = s"forgetUsers (affected keys recomputed under batch ${maxBatch + 1})")
     }
-    val users = userIds.select("user_id").distinct()
-    val affectedKeys = events.join(users, "user_id")
-      .select(col("event_type"),
-        date_format(date_trunc("day", col("ts")), "yyyy-MM-dd").as("day"))
-      .distinct()
-    val all = readPartials(spark, path).dropDuplicates(Keys :+ "batch")
-    val kept = all.join(affectedKeys, Keys, "left_anti")
-    val recomputed0 = partials(events.join(users, Seq("user_id"), "left_anti"))
-      .join(affectedKeys, Keys, "left_semi")
-      .withColumn("batch", lit(maxBatch + 1))
-    // on a CDC table ([[ingestCdc]]) the recomputed rows are full-state
-    // replacements by definition (rep = true: nothing earlier survives
-    // for these keys anyway — the physical drop above made sure — but
-    // the flag keeps the layout homogeneous and the semantics honest);
-    // `events` must then be the CURRENT CORRECTED log (e.g. the upstream
-    // CDC view's merged state), not the raw pre-correction feed
-    val recomputed = if (all.columns.contains("rep"))
-      recomputed0.withColumn("rep", lit(true)) else recomputed0
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact_tmp")
-    kept.unionByName(recomputed).coalesce(1)
-      .write.mode("overwrite").parquet(tmp.toString)
-    Ledger.commit(spark, tmp.toString, maxBatch + 1, writer = None)
-    // retention floor rides the swap ([[AsofFloor]]): affected keys'
-    // history was dropped from EVERY batch and recomputed under
-    // maxBatch + 1 — any as-of below that would silently show history
-    // missing those keys entirely
-    AsofFloor.carryInto(spark, path, tmp.toString, floor = maxBatch + 1,
-      rewrite = s"forgetUsers (affected keys recomputed under batch ${maxBatch + 1})")
-    val trash = new org.apache.hadoop.fs.Path(path + ".compact_trash")
-    require(fs.rename(p, trash), s"failed to move $path aside for the swap")
-    require(fs.rename(tmp, p), s"failed to swap retracted table into $path")
-    fs.delete(trash, true)
-  }
 
   /** Collapse COMMITTED history to one consolidated row per key while
     * keeping the LATEST batch's rows byte-identical, preserving
@@ -747,66 +742,41 @@ object AggIndex {
     *
     * Bounds the table at <= 2 rows per key ([[IndexMaintenance.compact]]
     * bounds FILE count); max(batch) survives so [[nextBatch]] and later
-    * ingests continue the sequence. Maintenance-window single-writer
-    * contract otherwise as documented there.
+    * ingests continue the sequence. Runs in [[IndexMaintenance.rewrite]]'s
+    * crash-safe swap under its maintenance-window single-writer contract.
     */
-  def compact(spark: SparkSession, path: String): Unit = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact_tmp")
-    // writer entry point under the maintenance-window contract: heal any
-    // crashed earlier swap first (same live->trash->delete scheme as
-    // IndexMaintenance.compact, so its recover applies — ADVICE r10
-    // replaced the old crash-unsafe delete+rename swap here)
-    IndexMaintenance.recover(spark, path)
-    val maxBatch = nextBatch(spark, path) - 1
-    val all = readPartials(spark, path).dropDuplicates(Keys :+ "batch")
-    val cdcMode = all.columns.contains("rep")
-    val last = all.filter(col("batch") === maxBatch)
-    // CDC tables resolve REPLACEMENT visibility inside the prefix before
-    // consolidating ([[resolved]]'s rule at upTo = maxBatch - 1): merging
-    // a replacement row with the batches it supersedes would double-count
-    // at read time. The consolidated row is itself marked rep = true —
-    // it REPLACES the key's whole prefix by construction, and a rep row
-    // in the untouched max batch still supersedes it, exactly as before.
-    val histPrefix = {
-      val raw = all.filter(col("batch") < maxBatch)
-      if (!cdcMode) raw
-      else {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(Keys.map(col): _*)
-        raw.withColumn("_repb", max(when(col("rep"), col("batch"))).over(w))
-          .filter(col("_repb").isNull || col("batch") > col("_repb") ||
-            (col("batch") === col("_repb") && col("rep")))
-          .drop("_repb", "rep")
-      }
+  def compact(spark: SparkSession, path: String): Unit =
+    IndexMaintenance.rewrite(spark, path) { (tmp, _) =>
+      val maxBatch = nextBatch(spark, path) - 1
+      val all = readPartials(spark, path).dropDuplicates(Keys :+ "batch")
+      val cdcMode = all.columns.contains("rep")
+      val last = all.filter(col("batch") === maxBatch)
+      // CDC tables resolve REPLACEMENT visibility inside the prefix before
+      // consolidating ([[resolved]]'s rule at upTo = maxBatch - 1): merging
+      // a replacement row with the batches it supersedes would double-count
+      // at read time. The consolidated row is itself marked rep = true —
+      // it REPLACES the key's whole prefix by construction, and a rep row
+      // in the untouched max batch still supersedes it, exactly as before.
+      val history0 = visible(all.filter(col("batch") < maxBatch))
+        .groupBy(Keys.map(col): _*)
+        .agg(mergeCols.head, mergeCols.tail: _*)
+        .withColumn("batch", lit(math.max(maxBatch - 1, 0)))
+      val history = if (cdcMode) history0.withColumn("rep", lit(true)) else history0
+      // <= 2 rows per key: a single right-sized file unless keys are huge
+      last.unionByName(history).coalesce(1)
+        .write.mode("overwrite").parquet(tmp)
+      // the old directory's ledger rides to trash with the swap; write the
+      // new one INTO tmp BEFORE the swap so the guard's ledger is never
+      // absent, however the process dies (everything in the compacted table
+      // is committed by the maintenance-window contract)
+      Ledger.commit(spark, tmp, maxBatch, writer = None)
+      // retention floor rides the swap ([[AsofFloor]]): batches below
+      // maxBatch now live only inside the consolidated batch maxBatch - 1
+      // row — an as-of below that point would silently return an empty or
+      // partial prefix. Reads at maxBatch - 1 and above stay exact (the
+      // consolidated row IS the full pre-maxBatch history).
+      AsofFloor.carryInto(spark, path, tmp,
+        floor = math.max(maxBatch - 1, 0),
+        rewrite = s"compact (history below batch $maxBatch consolidated)")
     }
-    val history0 = histPrefix
-      .groupBy(Keys.map(col): _*)
-      .agg(mergeCols.head, mergeCols.tail: _*)
-      .withColumn("batch", lit(math.max(maxBatch - 1, 0)))
-    val history = if (cdcMode) history0.withColumn("rep", lit(true)) else history0
-    // <= 2 rows per key: a single right-sized file unless keys are huge
-    val collapsed = last.unionByName(history).coalesce(1)
-    collapsed.write.mode("overwrite").parquet(tmp.toString)
-    // the old directory's ledger rides to trash with the swap; write the
-    // new one INTO tmp BEFORE the swap so the guard's ledger is never
-    // absent, however the process dies (everything in the compacted table
-    // is committed by the maintenance-window contract)
-    Ledger.commit(spark, tmp.toString, maxBatch, writer = None)
-    // retention floor rides the swap ([[AsofFloor]]): batches below
-    // maxBatch now live only inside the consolidated batch maxBatch - 1
-    // row — an as-of below that point would silently return an empty or
-    // partial prefix. Reads at maxBatch - 1 and above stay exact (the
-    // consolidated row IS the full pre-maxBatch history).
-    AsofFloor.carryInto(spark, path, tmp.toString,
-      floor = math.max(maxBatch - 1, 0),
-      rewrite = s"compact (history below batch $maxBatch consolidated)")
-    // crash-safe swap: live aside, tmp in, trash out — a complete copy
-    // (data + ledger) exists at every instant; recover() heals any window
-    val trash = new org.apache.hadoop.fs.Path(path + ".compact_trash")
-    require(fs.rename(p, trash), s"failed to move $path aside for the swap")
-    require(fs.rename(tmp, p), s"failed to swap compacted table into $path")
-    fs.delete(trash, true)
-  }
 }

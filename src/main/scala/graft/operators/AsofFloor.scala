@@ -15,9 +15,12 @@ import org.apache.spark.sql.SparkSession
   * older than the rewrite would silently return post-rewrite history as
   * if it were the past. This marker makes that contract ENFORCED instead
   * of documented: every rewrite persists the oldest batch id its table
-  * can still answer exactly (riding the rewrite's atomic swap, so the
-  * floor is never published without its rewrite or vice versa), and
-  * stale reads `require`-fail naming the rewrite that retired them.
+  * can still answer exactly, and stale reads `require`-fail naming the
+  * rewrite that retired them. AggIndex's two rewrites write the floor into
+  * [[IndexMaintenance.rewrite]]'s tmp dir, so it publishes with their swap
+  * — never without its rewrite or vice versa; JoinView's forget and
+  * foldCdc raise it at the root BEFORE rewriting, so a crash leaves a
+  * floor without its rewrite (loud), never the reverse.
   *
   * The marker only ever advances (writers take max with the existing
   * floor), and absence means "no rewrite yet" — every as-of is exact.
@@ -28,7 +31,8 @@ private[operators] object AsofFloor {
 
   /** Write `floor` + the human-readable rewrite description into `dir` —
     * callers pass the REWRITE'S tmp dir pre-swap (atomic publish) or the
-    * live root when the rewrite itself is in-place (tombstone appends).
+    * live root ahead of the rewrite (tombstone appends, the subtable
+    * folds).
     * Monotone: an existing floor at or above `floor` is kept.
     */
   def write(spark: SparkSession, dir: String, floor: Int, rewrite: String): Unit = {

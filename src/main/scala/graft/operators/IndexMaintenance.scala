@@ -5,7 +5,10 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Small-files compaction for the persisted index tables
-  * ([[SignatureIndex]], [[SubstringIndex]], [[PqIndex]], [[IvfPqIndex]]).
+  * ([[SignatureIndex]], [[SubstringIndex]], [[PqIndex]], [[IvfPqIndex]]),
+  * and the one crash-safe in-place rewrite ([[rewrite]]) that compaction,
+  * [[AggIndex.compact]], [[AggIndex.forgetUsers]] and [[JoinView.foldCdc]]
+  * all swap through.
   *
   * Every ingest — and every streamed micro-batch ([[IndexStream]]) —
   * appends at least one parquet file, so a continuously-fed index
@@ -24,21 +27,22 @@ import org.apache.spark.sql.functions.col
   * written back `partitionBy` the same columns, so the directory layout —
   * and therefore the nProbe partition pruning — is preserved.
   *
-  * CRASH SAFETY (the swap): the rewrite lands in `<path>.compact_tmp`,
-  * the live directory is renamed aside to `<path>.compact_trash`, tmp is
-  * renamed into place, and trash is deleted — at every instant a COMPLETE
-  * copy of the table exists under exactly one of (live, tmp, trash), and
-  * [[recover]] deterministically restores the live directory from
-  * whichever holds it. recover runs ONLY from writer entry points — the
-  * head of [[compact]], of [[IndexStream.appendWithBatchIds]] (so a
-  * stream restarting over a crashed in-stream compaction heals BEFORE its
-  * first append can recreate a truncated live dir), and of each index's
-  * probeStream. Read-side callers ([[SignatureIndex.nextBatch]], probes)
-  * never recover: a reader racing a LIVE compaction could delete the
-  * writer's fully-written tmp or steal its rename (ADVICE r10) — they
-  * fail loudly on a stranded state instead ([[crashRemnants]]).
+  * CRASH SAFETY (the swap, [[rewrite]]): the rewrite lands in
+  * `<path>.compact_tmp`, the live directory is renamed aside to
+  * `<path>.compact_trash`, tmp is renamed into place, and trash is
+  * deleted — at every instant a COMPLETE copy of the table exists under
+  * exactly one of (live, tmp, trash), and [[recover]] deterministically
+  * restores the live directory from whichever holds it. recover runs ONLY
+  * from writer entry points — the head of every [[rewrite]], of
+  * [[IndexStream.appendWithBatchIds]] (so a stream restarting over a
+  * crashed in-stream compaction heals BEFORE its first append can
+  * recreate a truncated live dir), and of each index's probeStream.
+  * Read-side callers ([[SignatureIndex.nextBatch]], probes) never
+  * recover: a reader racing a LIVE compaction could delete the writer's
+  * fully-written tmp or steal its rename (ADVICE r10) — they fail loudly
+  * on a stranded state instead ([[crashRemnants]]).
   *
-  * Writer contract: compaction runs under the index's single-writer
+  * Writer contract: a rewrite runs under the table's single-writer
   * discipline (see [[IndexStream]]) — no concurrent appender during the
   * swap. An object-store deployment would write a new versioned directory
   * and flip a pointer instead, which changes nothing about the rewrite.
@@ -175,6 +179,50 @@ object IndexMaintenance {
     }
   }
 
+  /** The crash-safe in-place rewrite of the table at `path`, every
+    * caller's one copy of the swap: [[recover]] heals a crashed earlier
+    * swap, the pending `_tombstones` files are snapshotted, `fill(tmp,
+    * snapshot)` writes the complete new table (data and markers) into
+    * `<path>.compact_tmp`, live moves to `.compact_trash`, tmp moves in,
+    * and trash is deleted once the tombstone files that arrived after the
+    * snapshot and the sidecars the rewrite did not produce are rescued
+    * into the new live dir. `fill` builds its frames itself, so nothing
+    * reads the table before it is healed; `snapshot` lists the tombstone
+    * files (full paths) that retire with the swap — a rewrite that
+    * tombstones apply to must apply at least those.
+    */
+  private[operators] def rewrite[T](spark: SparkSession, path: String)(
+      fill: (String, Seq[String]) => T): T = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    recover(spark, path)
+    // the tombstone set is pinned to a SNAPSHOT of the files present when
+    // the rewrite starts: with auto-compaction running INSIDE ingest
+    // streams (IndexStream.appendWithBatchIds) there is no externally
+    // observable maintenance window, so a forget() may append a tombstone
+    // file while the rewrite job runs. Retiring the directory loosely
+    // would let the trash delete silently destroy that unapplied file —
+    // the forgotten docs would REAPPEAR in the live view (ADVICE r10).
+    // Instead the snapshot retires, and any tombstone file that arrived
+    // later moves from trash into the new live dir, still pending.
+    val tombDir = new Path(p, "_tombstones")
+    val snapshot: Seq[Path] =
+      if (!fs.exists(tombDir)) Nil
+      else fs.listStatus(tombDir).toSeq
+        .filter(f => f.isFile && isDataFile(tombDir, f)).map(_.getPath).sortBy(_.getName)
+    val tmp = tmpPath(path)
+    val out = fill(tmp.toString, snapshot.map(_.toString))
+    // the swap (crash-safe order — scaladoc above): live aside, tmp in,
+    // trash out. A complete copy exists at every instant.
+    val trash = trashPath(path)
+    require(fs.rename(p, trash), s"failed to move $path aside for the swap")
+    require(fs.rename(tmp, p), s"failed to swap the rewritten table into $path")
+    rescueUnappliedTombstones(fs, trash, p, snapshot.map(_.getName).toSet)
+    rescueSidecars(fs, trash, p)
+    fs.delete(trash, true)
+    out
+  }
+
   /** Rewrite the parquet table at `path` into ~`targetBytes` files.
     * Returns (dataFilesBefore, dataFilesAfter).
     *
@@ -198,85 +246,56 @@ object IndexMaintenance {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    recover(spark, path)
+    val before = rewrite(spark, path) { (tmp, tombSnapshot) =>
+      val files = dataFiles(fs, p)
+      val nFiles =
+        math.max(1L, (files.map(_.getLen).sum + targetBytes - 1) / targetBytes).toInt
+      // tombstone-aware: if a _tombstones delete-vector table exists
+      // (SignatureIndex.forget), the rewrite RECLAIMS the snapshot's
+      // deleted rows — anti-join on the tombstone table's own columns —
+      // and the swap retires those tombstones with the old directory (they
+      // are applied, not lost). This is the compaction half of the
+      // deletion-vector design: forget is O(deletes), reclamation rides
+      // the rewrite that was happening anyway.
+      val raw = spark.read.parquet(path)
+      val df =
+        if (tombSnapshot.isEmpty) raw
+        else {
+          val t = spark.read.parquet(tombSnapshot: _*).distinct()
+          raw.join(t, t.columns.toSeq, "left_anti")
+        }
+      val clusterCols = partitionCols ++ sortCols
+      val clustered =
+        if (sortCols.isEmpty) {
+          if (partitionCols.isEmpty) df.repartition(nFiles)
+          else df.repartition(nFiles, partitionCols.map(col): _*)
+        } else
+          // range partitioning (not hash) so each output file covers a
+          // CONTIGUOUS sortCols range — file-level min/max skipping, not
+          // just within-file row groups
+          df.repartitionByRange(nFiles, clusterCols.map(col): _*)
+            .sortWithinPartitions(clusterCols.map(col): _*)
+      val writer =
+        if (partitionCols.isEmpty) clustered.write
+        else clustered.write.partitionBy(partitionCols: _*)
+      writer.mode("overwrite").parquet(tmp)
 
-    val before = dataFiles(fs, p)
-    val nFiles =
-      math.max(1L, (before.map(_.getLen).sum + targetBytes - 1) / targetBytes).toInt
-
-    // tombstone-aware: if a _tombstones delete-vector table exists
-    // (SignatureIndex.forget), the rewrite RECLAIMS the deleted rows —
-    // anti-join on the tombstone table's own columns — and the swap
-    // retires the tombstones with the old directory (they are applied,
-    // not lost). This is the compaction half of the deletion-vector
-    // design: forget is O(deletes), reclamation rides the rewrite that
-    // was happening anyway.
-    //
-    // The tombstone read is pinned to a SNAPSHOT of the files present when
-    // the rewrite starts: with auto-compaction running INSIDE ingest
-    // streams (IndexStream.appendWithBatchIds) there is no externally
-    // observable maintenance window, so a forget() may append a tombstone
-    // file while the rewrite job runs. Reading the directory loosely would
-    // let the final trash delete silently destroy that unapplied file —
-    // the forgotten docs would REAPPEAR in the live view (ADVICE r10).
-    // Instead: apply exactly the snapshot, and after the swap move any
-    // tombstone file that arrived later from trash into the new live dir,
-    // still pending for the next compaction.
-    val raw = spark.read.parquet(path)
-    val tombDir = new Path(path + "/_tombstones")
-    val tombSnapshot: Set[String] =
-      if (!fs.exists(tombDir)) Set.empty
-      else fs.listStatus(tombDir).iterator
-        .filter(f => f.isFile && isDataFile(tombDir, f))
-        .map(_.getPath.getName).toSet
-    val df =
-      if (tombSnapshot.isEmpty) raw
-      else {
-        val t = spark.read
-          .parquet(tombSnapshot.toSeq.sorted.map(n => new Path(tombDir, n).toString): _*)
-          .distinct()
-        raw.join(t, t.columns.toSeq, "left_anti")
+      // preserve the monotone batch-id high-water mark across reclamation:
+      // if tombstones dropped rows and the table carries batch ids, the
+      // pre-compaction max(batch) rides into tmp as a sidecar marker (see
+      // MaxBatchMarker scaladoc) so nextBatch can never re-issue an id whose
+      // rows were all reclaimed. An existing marker (earlier compactions)
+      // must survive the swap too.
+      val priorMarker = readMaxBatchMarker(spark, path)
+      if (raw.columns.contains("batch") && (tombSnapshot.nonEmpty || priorMarker.nonEmpty)) {
+        val r = raw.agg(org.apache.spark.sql.functions.max("batch")).first()
+        val dataMax = if (r.isNullAt(0)) None else Some(r.getInt(0))
+        (dataMax ++ priorMarker).reduceOption(_ max _)
+          .foreach(m => Ledger.write(spark, new Path(tmp, MaxBatchMarker), m.toString))
       }
-    val tmp = tmpPath(path)
-    val clusterCols = partitionCols ++ sortCols
-    val clustered =
-      if (sortCols.isEmpty) {
-        if (partitionCols.isEmpty) df.repartition(nFiles)
-        else df.repartition(nFiles, partitionCols.map(col): _*)
-      } else
-        // range partitioning (not hash) so each output file covers a
-        // CONTIGUOUS sortCols range — file-level min/max skipping, not
-        // just within-file row groups
-        df.repartitionByRange(nFiles, clusterCols.map(col): _*)
-          .sortWithinPartitions(clusterCols.map(col): _*)
-    val writer =
-      if (partitionCols.isEmpty) clustered.write
-      else clustered.write.partitionBy(partitionCols: _*)
-    writer.mode("overwrite").parquet(tmp.toString)
-
-    // preserve the monotone batch-id high-water mark across reclamation:
-    // if tombstones dropped rows and the table carries batch ids, the
-    // pre-compaction max(batch) rides into tmp as a sidecar marker (see
-    // MaxBatchMarker scaladoc) so nextBatch can never re-issue an id whose
-    // rows were all reclaimed. An existing marker (earlier compactions)
-    // must survive the swap too.
-    val priorMarker = readMaxBatchMarker(spark, path)
-    if (raw.columns.contains("batch") && (tombSnapshot.nonEmpty || priorMarker.nonEmpty)) {
-      val r = raw.agg(org.apache.spark.sql.functions.max("batch")).first()
-      val dataMax = if (r.isNullAt(0)) None else Some(r.getInt(0))
-      (dataMax ++ priorMarker).reduceOption(_ max _)
-        .foreach(m => Ledger.write(spark, new Path(tmp, MaxBatchMarker), m.toString))
+      files.size
     }
-
-    // the swap (crash-safe order — scaladoc above): live aside, tmp in,
-    // trash out. A complete copy exists at every instant.
-    val trash = trashPath(path)
-    require(fs.rename(p, trash), s"failed to move $path aside for the swap")
-    require(fs.rename(tmp, p), s"failed to swap compacted index into $path")
-    rescueUnappliedTombstones(fs, trash, p, tombSnapshot)
-    rescueSidecars(fs, trash, p)
-    fs.delete(trash, true)
-    (before.size, dataFiles(fs, p).size)
+    (before, dataFiles(fs, p).size)
   }
 
   /** Preserve hidden sidecar entries the rewrite did not produce — e.g.

@@ -81,13 +81,14 @@ object JoinView {
     new org.apache.hadoop.fs.Path(path, "_graft_view_day_col")
 
   /** The day string a timestamp payload column rolls up to — rendered in
-    * the SESSION time zone, matching the day-keyed consumer's rollup key
-    * (AggIndex's `date_format(date_trunc(...))`); the zone is recorded in
-    * the day marker and validated on every write and pruned read, because
-    * a zone change re-days rows near midnight and would silently
-    * mis-bucket them.
+    * the SESSION time zone. The one definition of the day key: the
+    * day-keyed consumer's rollup key ([[AggIndex]]'s `day`) is this
+    * expression, so [[mergedForDays]]' residual filter matches it byte for
+    * byte. The zone is recorded in the day marker and validated on every
+    * write and pruned read, because a zone change re-days rows near
+    * midnight and would silently mis-bucket them.
     */
-  private def dayOf(c: Column): Column =
+  private[operators] def dayOf(c: Column): Column =
     date_format(date_trunc("day", c), "yyyy-MM-dd")
 
   private[operators] def pdOf(c: Column, pdb: Int): Column =
@@ -560,33 +561,25 @@ object JoinView {
     * ledger FIRST — [[AggIndex.compact]]'s consolidation contract and
     * [[forget]]'s crash order: a crash leaves floor-without-rewrite
     * (loud on reads that would have been exact), never the reverse.
-    * Each subtable swaps via the `.compact_tmp`/`.compact_trash` scheme,
-    * so [[IndexMaintenance.recover]] (run here per subtable on entry)
-    * heals any crash window; a crash BETWEEN subtable swaps is benign —
-    * each subtable's fold independently preserves every read. Runs under
-    * the single-writer maintenance-window contract.
+    * Each subtable swaps through [[IndexMaintenance.rewrite]], which heals
+    * a crashed earlier swap before the fold reads it and retires the
+    * tombstones the fold applied; a crash BETWEEN subtable swaps is
+    * benign — each subtable's fold independently preserves every read.
+    * Runs under the single-writer maintenance-window contract.
     */
   def foldCdc(spark: SparkSession, path: String): Unit = {
     require(isCdc(spark, path),
       s"foldCdc only applies to CDC views — $path has no signed view")
     val key = joinKey(spark, path)
-    for (sub <- Subs)
-      IndexMaintenance.recover(spark, s"$path/$sub")
     val c = ViewStore.committed(spark, path)
     AsofFloor.write(spark, path, floor = c,
       rewrite = s"foldCdc (signed history at or below batch $c consolidated)")
-    val conf = spark.sessionState.newHadoopConf()
-    def swapIn(sub: String, folded: DataFrame,
-               partCols: Seq[String] = Seq("kb", "batch")): Unit = {
-      val liveP = new org.apache.hadoop.fs.Path(sub)
-      val fs = liveP.getFileSystem(conf)
-      val tmp = new org.apache.hadoop.fs.Path(sub + ".compact_tmp")
-      val trash = new org.apache.hadoop.fs.Path(sub + ".compact_trash")
-      folded.write.partitionBy(partCols: _*).mode("overwrite").parquet(tmp.toString)
-      require(fs.rename(liveP, trash), s"failed to move $sub aside for the fold swap")
-      require(fs.rename(tmp, liveP), s"failed to swap folded table into $sub")
-      fs.delete(trash, true)
-    }
+    // the subtable's folded rows, built inside the swap (after its heal)
+    def rewriteSub(sub: String, partCols: Seq[String] = Seq("kb", "batch"))(
+        folded: => DataFrame): Unit =
+      IndexMaintenance.rewrite(spark, sub) { (tmp, _) =>
+        folded.write.partitionBy(partCols: _*).mode("overwrite").parquet(tmp)
+      }
     def liveRows(sub: String) =
       live(ViewStore.readSub(spark, sub).filter(col("batch") <= c), spark, sub, key)
     // the three subtable folds read/write disjoint directories and each
@@ -595,21 +588,21 @@ object JoinView {
     val folds: Seq[() => Unit] = Seq[() => Unit](
       () => {
         val vsub = s"$path/view"
-        // pd rides through the fold as an ordinary grouping column (it is
-        // a pure function of the payload timestamp, so grouping is
-        // unchanged) and the rewrite keeps the day layout
-        val resolved = ViewStore.resolve(liveRows(vsub).drop("kb", "batch"))
-          .withColumn("sgn", lit(1))
         val vparts = viewPartCols(spark, path)
-        swapIn(vsub,
+        rewriteSub(vsub, partCols = vparts) {
+          // pd rides through the fold as an ordinary grouping column (it
+          // is a pure function of the payload timestamp, so grouping is
+          // unchanged) and the rewrite keeps the day layout
+          val resolved = ViewStore.resolve(liveRows(vsub).drop("kb", "batch"))
+            .withColumn("sgn", lit(1))
           (if (vparts.contains("kb")) resolved.withColumn("kb", KeyBuckets.kbFor(resolved, key))
-           else resolved).withColumn("batch", lit(c)),
-          partCols = vparts)
+           else resolved).withColumn("batch", lit(c))
+        }
       }) ++ Seq("a", "b").map(side => () => {
         val sub = s"$path/$side"
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy(col(key)).orderBy(col("batch").desc)
-        swapIn(sub, liveRows(sub)
+        rewriteSub(sub)(liveRows(sub)
           .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
           .drop("_rn")
           // a key whose latest row is a -1 delete marker has left the

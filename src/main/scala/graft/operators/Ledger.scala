@@ -45,12 +45,23 @@ private[operators] object Ledger {
     * body lands completely in a uniquely named tmp that a rename WITHOUT
     * OVERWRITE then publishes, so a racing reader sees no file or the
     * whole body, never an empty one; a tmp stranded by a dead writer
-    * carries another name and blocks nobody.
+    * carries another name and blocks nobody. Once `file` exists no
+    * `.<name>-*.tmp` beside it can ever publish, so every writer, winner
+    * or loser, reaps them all after its attempt (a racing loser whose tmp
+    * goes fails its rename all the same); before that it deletes only its
+    * own.
     */
   def writeOnce(spark: SparkSession, file: Path, body: String): Unit = {
-    val tmp = new Path(file.getParent, s".${file.getName}-${java.util.UUID.randomUUID()}.tmp")
+    val prefix = s".${file.getName}-"
+    val tmp = new Path(file.getParent, s"$prefix${java.util.UUID.randomUUID()}.tmp")
     try publish(spark, tmp, file, body, Rename.NONE)
-    finally tmp.getFileSystem(spark.sessionState.newHadoopConf()).delete(tmp, false)
+    finally {
+      val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
+      if (!fs.exists(file)) fs.delete(tmp, false)
+      else fs.listStatus(file.getParent, (p: Path) =>
+          p.getName.startsWith(prefix) && p.getName.endsWith(".tmp"))
+        .foreach(st => fs.delete(st.getPath, false))
+    }
   }
 
   private def publish(spark: SparkSession, tmp: Path, file: Path, body: String,

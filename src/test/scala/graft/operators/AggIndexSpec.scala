@@ -336,10 +336,17 @@ class AggIndexSpec extends SparkSpec {
       .collect().map(r => (r.getString(0), r.getString(1),
         Option(r.getAs[Any]("vals")), r.getLong(3))).toSet
     assert(valsAfter == valsBefore, "compact changed the v2 coverage")
+    // both rewrites carry the layout marker across their swap: dropping it
+    // would read the v2 table as v1 and disarm the newer-layout guard below
+    assert(AggIndex.layoutVersion(spark, p) == 2, "compact dropped the layout marker")
+    AggIndex.forgetUsers(spark, p, events,
+      events.filter(col("user_id") % 7 === 0).select("user_id"))
+    assert(AggIndex.layoutVersion(spark, p) == 2, "forgetUsers dropped the layout marker")
 
-    // FOREIGN (newer) layout fails loudly, read and write
-    val mp = java.nio.file.Paths.get(p, "_graft_layout")
-    java.nio.file.Files.write(mp, "3".getBytes)
+    // FOREIGN (newer) layout fails loudly, read and write. The newer
+    // writer publishes its marker as every writer does, through Ledger: a
+    // raw overwrite of the carried marker would leave its checksum stale
+    Ledger.write(spark, new org.apache.hadoop.fs.Path(p, "_graft_layout"), "3")
     val e = intercept[IllegalArgumentException] {
       AggIndex.merged(spark, p).collect()
     }

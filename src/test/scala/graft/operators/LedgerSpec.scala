@@ -94,6 +94,7 @@ class LedgerSpec extends SparkSpec {
     val f = new Path(root, "graft_base_batch")
     Ledger.writeOnce(spark, f, "4")
     assert(Ledger.readInt(spark, f).contains(4))
+    assert(tmpsIn(root).isEmpty, s"stranded tmp not reaped: ${tmpsIn(root).mkString(", ")}")
     assert(IndexStream.pinnedBase(spark.emptyDataFrame, 7, root) == 4,
       "a pinned base must keep the first writer's value")
   }
