@@ -415,12 +415,6 @@ object AggIndex {
     markCommitted(spark, path, batch)
   }
 
-  /** Next free batch id (max(batch) + 1; 0 for a fresh path) — delegates
-    * to the shared fail-loud implementation.
-    */
-  def nextBatch(spark: SparkSession, path: String): Int =
-    SignatureIndex.nextBatch(spark, path)
-
   /** Streamed ingest of an events stream: each micro-batch is aggregated
     * to partials and appended under a REAL monotone batch id (the
     * [[IndexStream]] checkpoint-pinned-base discipline) — the rollup
@@ -444,10 +438,11 @@ object AggIndex {
     // batch's events under a new id and double-count them — only a
     // RESUMED checkpoint replays idempotently. Detect via the commit
     // ledger: stored rows above the last committed batch mean an orphan.
-    // Writer entry point: heal a crashed compact() swap before any read.
+    // Writer entry point: heal a crashed compact() swap before any read
+    // (appendWithBatchIds heals again; a no-op by then).
     IndexMaintenance.recover(events.sparkSession, path)
     if (!IndexStream.baseMarkerExists(events, checkpoint)) {
-      val storedMax = nextBatch(events.sparkSession, path) - 1
+      val storedMax = IndexStream.nextBatch(events.sparkSession, path) - 1
       committedBatch(events.sparkSession, path).foreach { c =>
         require(storedMax <= c,
           s"orphaned uncommitted batch at $path: stored max batch $storedMax > " +
@@ -457,18 +452,13 @@ object AggIndex {
             s"rows (batch > $c) before re-ingesting.")
       }
     }
-    val base = IndexStream.pinnedBase(events,
-      nextBatch(events.sparkSession, path), checkpoint)
     // mode is immutable once built, so probe it once at wiring time
     val cdcMode = isCdcTable(events.sparkSession, path)
-    events.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        storedPartials(df, CurrentLayout, base + batchId.toInt, cdcMode)
-          .write.mode("append").parquet(path)
-        markCommitted(df.sparkSession, path, base + batchId.toInt)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IndexStream.appendWithBatchIds(events, path, checkpoint,
+        autoCompactFragments = 0) { (df, b) =>
+      storedPartials(df, CurrentLayout, b, cdcMode).write.mode("append").parquet(path)
+      markCommitted(df.sparkSession, path, b)
+    }
   }
 
   private val mergeCols = Seq(
@@ -684,7 +674,7 @@ object AggIndex {
                   userIds: DataFrame): Unit =
     IndexMaintenance.rewrite(spark, path) { (tmp, _) =>
       val events = correctedEvents
-      val maxBatch = nextBatch(spark, path) - 1
+      val maxBatch = IndexStream.nextBatch(spark, path) - 1
       committedBatch(spark, path) match {
         case Some(c) => require(c >= maxBatch,
           s"forgetUsers at $path: stored max batch $maxBatch is not committed " +
@@ -741,13 +731,14 @@ object AggIndex {
     *     silently double-counting or dropping history.)
     *
     * Bounds the table at <= 2 rows per key ([[IndexMaintenance.compact]]
-    * bounds FILE count); max(batch) survives so [[nextBatch]] and later
-    * ingests continue the sequence. Runs in [[IndexMaintenance.rewrite]]'s
-    * crash-safe swap under its maintenance-window single-writer contract.
+    * bounds FILE count); max(batch) survives so
+    * [[IndexStream.nextBatch]] and later ingests continue the sequence.
+    * Runs in [[IndexMaintenance.rewrite]]'s crash-safe swap under its
+    * maintenance-window single-writer contract.
     */
   def compact(spark: SparkSession, path: String): Unit =
     IndexMaintenance.rewrite(spark, path) { (tmp, _) =>
-      val maxBatch = nextBatch(spark, path) - 1
+      val maxBatch = IndexStream.nextBatch(spark, path) - 1
       val all = readPartials(spark, path).dropDuplicates(Keys :+ "batch")
       val cdcMode = all.columns.contains("rep")
       val last = all.filter(col("batch") === maxBatch)

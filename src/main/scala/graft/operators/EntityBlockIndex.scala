@@ -53,21 +53,6 @@ import org.apache.spark.sql.functions._
   */
 object EntityBlockIndex {
 
-  /** Block-bucket count for the stored `bb=` partition layout — the
-    * [[JoinView]] kb= trick applied to the blocking key: a trigger's
-    * candidate join needs only the stored blocks whose (part, v, len)
-    * hash-bucket some batch block also lands in, so the stored side is
-    * PARTITION-PRUNED to the batch's buckets at planning time
-    * (<= min(2 x batch, BB) of BB directories) instead of scanning and
-    * shuffling the whole master's blocks every trigger. Fixture-sized;
-    * a production index picks thousands so a small screening batch reads
-    * a sliver of the master.
-    */
-  val BB = 64
-
-  private def bbCol: org.apache.spark.sql.Column =
-    pmod(xxhash64(col("part"), col("len"), col("v")), lit(BB)).cast("int")
-
   /** Blocking rows for `(key, name)` entities: one row per parity class —
     * `(key, name, len, part, v, bb)`, two per entity. The ONLY place the
     * blocking kernel runs in this lifecycle.
@@ -84,7 +69,8 @@ object EntityBlockIndex {
           struct(lit(1).as("part"), parityStr(1).as("v")))).as("p"))
       .select(col("key"), col("name"), col("len"),
         col("p.part").as("part"), col("p.v").as("v"))
-    b.withColumn("bb", bbCol)
+    // the [[BatchBuckets]] layout, bucketed on the (part, len, v) block key
+    b.withColumn("bb", BatchBuckets.bucket(xxhash64(col("part"), col("len"), col("v"))))
   }
 
   /** Exact verification tail over candidate pairs `(a_key, b_key, a_name,
@@ -134,20 +120,17 @@ object EntityBlockIndex {
   /** Block the base master list once; write the index as batch 0 under
     * the `bb=` bucket layout.
     */
-  def build(entities: DataFrame, path: String): Unit =
+  def build(entities: DataFrame, path: String): Unit = {
+    BatchBuckets.truncate(entities.sparkSession, path)
     // the shared append discipline ([[BatchBuckets.appendBatch]]): one
     // kernel run lands the data AND the bucket manifest probes use for
     // discovery instead of scanning every bb= partition's footers
-    BatchBuckets.appendBatch(blocks(entities), path, batch = 0,
-      nBuckets = BB, overwriteData = true, overwriteManifest = true)
+    BatchBuckets.appendBatch(blocks(entities), path, batch = 0)
+  }
 
   /** Block ONLY the delta; append its rows as `batch`. */
   def ingest(entities: DataFrame, path: String, batch: Int): Unit =
-    BatchBuckets.appendBatch(blocks(entities), path, batch, nBuckets = BB)
-
-  /** Next free batch id — the shared fail-loud implementation. */
-  def nextBatch(spark: SparkSession, path: String): Int =
-    SignatureIndex.nextBatch(spark, path)
+    BatchBuckets.appendBatch(blocks(entities), path, batch)
 
   /** Candidate typo pairs for batch `batch`, entirely from the stored
     * index: normalized `(a_key, b_key, a_name, b_name)` with a_key <
@@ -223,18 +206,6 @@ object EntityBlockIndex {
       .dropDuplicates("a_key", "b_key")
   }
 
-  /** Streamed ingest (no probe): blocks appended under real monotone
-    * batch ids ([[IndexStream]]'s checkpoint-pinned base, auto-compaction
-    * included).
-    */
-  def ingestStream(entities: DataFrame, path: String, checkpoint: String,
-                   autoCompactFragments: Int = IndexStream.DefaultAutoCompactFragments)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    IndexStream.appendWithBatchIds(blocks(entities),
-      nextBatch(entities.sparkSession, path), path, checkpoint,
-      autoCompactFragments, partitionCols = Seq("bb"),
-      onBatchAppended = Some((df, b) => BatchBuckets.write(df, path, b)))
-
   /** Streamed ingest AND screen — the real-time record-linkage gate.
     * Each micro-batch: the BATCH alone is blocked and appended under a
     * real pinned batch id, then its verified typo pairs — candidates from
@@ -250,25 +221,16 @@ object EntityBlockIndex {
     * the family's contract.
     */
   def screenStream(entities: DataFrame, path: String, outPath: String,
-                   checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = entities.sparkSession
-    // writer entry point: heal a crashed swap BEFORE reading or appending
-    IndexMaintenance.recover(spark, path)
-    val base = IndexStream.pinnedBase(entities, nextBatch(spark, path), checkpoint)
-    entities.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val b = base + batchId.toInt
-        // the shared discipline persists the trigger's blocks across the
-        // append, the manifest, AND the probe (`use`) — one kernel run,
-        // no per-trigger index re-read to rediscover just-written rows
-        BatchBuckets.appendBatch(blocks(df), path, b, nBuckets = BB, use = blk =>
-          verifyTypo(candidates(df.sparkSession, path, b, Some(blk)))
-            .withColumn("batch", lit(b))
-            .write.mode("append").parquet(outPath))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+                   checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    IndexStream.appendWithBatchIds(entities, path, checkpoint,
+        autoCompactFragments = 0) { (df, b) =>
+      // the shared discipline persists the trigger's blocks across the
+      // append, the manifest, AND the probe (`use`) — one kernel run,
+      // no per-trigger index re-read to rediscover just-written rows
+      BatchBuckets.appendBatch(blocks(df), path, b, use = blk =>
+        IndexStream.append(
+          verifyTypo(candidates(df.sparkSession, path, b, Some(blk))), outPath, b))
+    }
 
   /** Right-to-be-forgotten: tombstone the entity — candidates stop
     * surfacing it immediately (both join sides anti-join the delete

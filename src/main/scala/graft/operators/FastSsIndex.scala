@@ -51,12 +51,6 @@ import org.apache.spark.sql.functions._
   */
 object FastSsIndex {
 
-  /** Block-bucket count for the stored `bb=` layout ([[EntityBlockIndex
-    * .BB]]'s rationale): a probe restricts the stored-side scan to the
-    * batch's signature buckets at planning time.
-    */
-  val BB = 64
-
   /** The deletion-neighborhood signature hashes of `name`: identity plus
     * each single-character deletion, hashed (xxhash64 — deterministic,
     * fixed seed). Distinct-folded (a run of equal characters yields
@@ -89,7 +83,7 @@ object FastSsIndex {
     */
   def signatures(entities: DataFrame): DataFrame =
     spread(entities).select(col("key"), col("name"), explode(expr(sigExpr)).as("sig"))
-      .withColumn("bb", pmod(col("sig"), lit(BB)).cast("int"))
+      .withColumn("bb", BatchBuckets.bucket(col("sig")))
 
   /** The tau = 2 deletion neighborhood: identity, every single-character
     * deletion, and every two-position deletion — C(L,2) + L + 1
@@ -126,7 +120,7 @@ object FastSsIndex {
     */
   def signatures2(entities: DataFrame): DataFrame =
     spread(entities).select(col("key"), col("name"), explode(expr(sig2Expr)).as("sig"))
-      .withColumn("bb", pmod(col("sig"), lit(BB)).cast("int"))
+      .withColumn("bb", BatchBuckets.bucket(col("sig")))
 
   /** The kernel for a given radius — tau = 1 ([[signatures]]) or tau = 2
     * ([[signatures2]]); the stored lifecycle below is radius-generic
@@ -140,33 +134,16 @@ object FastSsIndex {
         "beyond 2 the C(L,tau) signature count is infeasible even for names)")
   }
 
-  /** Radius marker — the [[KeyBuckets]] versioning discipline applied to
-    * the kernel choice: an index built at one tau probed or ingested at
-    * another would silently return the WRONG edit-distance contract
-    * (tau-1 signatures of a delta never collide with the stored tau-2
-    * rows they should), so the radius is persisted at build and every
-    * kerneling writer validates it. A marker-less index (pre-r14) is
-    * tau = 1, the only radius that existed.
+  /** The index's persisted radius ([[RadiusMarker]]): tau = 1 for a
+    * marker-less (pre-r14) artifact, the only radius that existed.
     */
-  private def tauMarkerPath(path: String) = RadiusMarker.markerPath(path)
-
-  private def writeTauMarker(spark: SparkSession, path: String, tau: Int): Unit =
-    RadiusMarker.write(spark, path, tau)
-
-  /** The index's persisted radius (tau = 1 for pre-marker artifacts). */
   def storedTau(spark: SparkSession, path: String): Int =
     RadiusMarker.stored(spark, path, default = 1)
-
-  private def validateTau(spark: SparkSession, path: String, tau: Int): Unit =
-    RadiusMarker.validate(spark, path, tau, default = 1)
 
   /** Hash the base master list once; write the index as batch 0 under
     * the `bb=` bucket layout.
     */
   def build(entities: DataFrame, path: String, tau: Int = 1): Unit = {
-    val spark = entities.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     // radius marker BEFORE the data (so mode is append into the manually
     // cleared dir, not overwrite): a crash between the two leaves
     // marker-without-data — a half-built index that fails LOUDLY on any
@@ -174,21 +151,16 @@ object FastSsIndex {
     // marker-less tau-2 index silently validating tau-1 writers, the
     // exact mixed-radius hole the marker closes. (A crashed build must
     // be re-run either way, the mode-overwrite family's contract.)
-    fs.delete(root, true)
-    writeTauMarker(spark, path, tau)
-    BatchBuckets.appendBatch(sigsFor(entities, tau), path, batch = 0,
-      nBuckets = BB, overwriteManifest = true)
+    BatchBuckets.truncate(entities.sparkSession, path)
+    RadiusMarker.write(entities.sparkSession, path, tau)
+    BatchBuckets.appendBatch(sigsFor(entities, tau), path, batch = 0)
   }
 
   /** Hash ONLY the delta; append its rows as `batch`. */
   def ingest(entities: DataFrame, path: String, batch: Int, tau: Int = 1): Unit = {
-    validateTau(entities.sparkSession, path, tau)
-    BatchBuckets.appendBatch(sigsFor(entities, tau), path, batch, nBuckets = BB)
+    RadiusMarker.validate(entities.sparkSession, path, tau, default = 1)
+    BatchBuckets.appendBatch(sigsFor(entities, tau), path, batch)
   }
-
-  /** Next free batch id — the shared fail-loud implementation. */
-  def nextBatch(spark: SparkSession, path: String): Int =
-    SignatureIndex.nextBatch(spark, path)
 
   def candidates(spark: SparkSession, path: String, batch: Int): DataFrame =
     candidates(spark, path, batch, batchSigs = None)
@@ -310,38 +282,6 @@ object FastSsIndex {
     }
   }
 
-  /** Streamed ingest (no probe): signature rows appended under real
-    * monotone batch ids, auto-compaction preserving the bucket layout.
-    */
-  def ingestStream(entities: DataFrame, path: String, checkpoint: String,
-                   autoCompactFragments: Int = IndexStream.DefaultAutoCompactFragments,
-                   tau: Int = 1)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = entities.sparkSession
-    // heal a crashed compaction BEFORE touching the root: the marker
-    // write below may create the dir, which would confuse recover's
-    // live-dir-absent detection if it ran after
-    IndexMaintenance.recover(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(root)) validateTau(spark, path, tau)
-    // radius marker BEFORE any data lands (r14 ADVICE): the old
-    // first-trigger afterData write left a one-trigger crash window —
-    // data appended, marker not yet written — that a restart REJECTED
-    // loudly as a tau mismatch (storedTau defaults to 1 on a marker-less
-    // dir), costing a fresh tau=2 index its whole first batch. build()'s
-    // marker-first ordering now applies to the streamed writers too:
-    // nextBatch treats a data-less marker-only dir as fresh, so the
-    // worst crash leaves a loud-on-mismatch half-built index, never a
-    // rejected healthy one. (Also upgrades a just-validated pre-r14
-    // tau=1 artifact in place.)
-    if (!fs.exists(tauMarkerPath(path))) writeTauMarker(spark, path, tau)
-    IndexStream.appendWithBatchIds(sigsFor(entities, tau),
-      nextBatch(spark, path), path, checkpoint,
-      autoCompactFragments, partitionCols = Seq("bb"),
-      onBatchAppended = Some((df, b) => BatchBuckets.write(df, path, b)))
-  }
-
   /** Streamed ingest AND cross-length screen — [[EntityBlockIndex
     * .screenStream]]'s discipline with deletion-neighborhood blocking:
     * per trigger, the batch alone is hashed and appended under a real
@@ -363,30 +303,17 @@ object FastSsIndex {
                    checkpoint: String, tau: Int = 1,
                    emit: (DataFrame, DataFrame) => DataFrame = (pairs, _) => pairs)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = entities.sparkSession
-    IndexMaintenance.recover(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(root)) validateTau(spark, path, tau)
-    // marker BEFORE any data lands — [[ingestStream]]'s rationale (r14
-    // ADVICE: the afterData ordering left a one-trigger crash window a
-    // restart rejected loudly instead of healing)
-    if (!fs.exists(tauMarkerPath(path))) writeTauMarker(spark, path, tau)
-    val base = IndexStream.pinnedBase(entities, nextBatch(spark, path), checkpoint)
-    entities.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val b = base + batchId.toInt
-        // shared discipline ([[BatchBuckets.appendBatch]]): append,
-        // bucket manifest, and probe share one kernel run
-        BatchBuckets.appendBatch(sigsFor(df, tau), path, b, nBuckets = BB,
-          use = sigs =>
-            emit(EntityBlockIndex.verifyTypo(
-                candidates(df.sparkSession, path, b, Some(sigs)), tau = tau), df)
-              .withColumn("batch", lit(b))
-              .write.mode("append").parquet(outPath))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    RadiusMarker.claim(entities.sparkSession, path, tau, default = 1)
+    IndexStream.appendWithBatchIds(entities, path, checkpoint,
+        autoCompactFragments = 0) { (df, b) =>
+      // shared discipline ([[BatchBuckets.appendBatch]]): append,
+      // bucket manifest, and probe share one kernel run
+      BatchBuckets.appendBatch(sigsFor(df, tau), path, b, use = sigs =>
+        IndexStream.append(
+          emit(EntityBlockIndex.verifyTypo(
+            candidates(df.sparkSession, path, b, Some(sigs)), tau = tau), df),
+          outPath, b))
+    }
   }
 
   /** Right-to-be-forgotten: tombstone the entity ([[Tombstones]]);

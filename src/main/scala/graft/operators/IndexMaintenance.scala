@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions.col
   * stored rows into ceil(bytes/targetBytes) right-sized files WITHOUT
   * changing a single row (tombstoned rows excepted — see below): every
   * column (including `batch` ids and replayed duplicate rows) survives
-  * byte-for-byte, so probe answers, [[SignatureIndex.nextBatch]], and the
+  * byte-for-byte, so probe answers, [[IndexStream.nextBatch]], and the
   * at-least-once replay semantics are all invariant — pinned in
   * IndexMaintenanceSpec.
   *
@@ -34,10 +34,12 @@ import org.apache.spark.sql.functions.col
   * exactly one of (live, tmp, trash), and [[recover]] deterministically
   * restores the live directory from whichever holds it. recover runs ONLY
   * from writer entry points — the head of every [[rewrite]], of
-  * [[IndexStream.appendWithBatchIds]] (so a stream restarting over a
-  * crashed in-stream compaction heals BEFORE its first append can
-  * recreate a truncated live dir), and of each index's probeStream.
-  * Read-side callers ([[SignatureIndex.nextBatch]], probes) never
+  * [[IndexStream.appendWithBatchIds]], where every streamed index writer
+  * starts (so a stream restarting over a crashed in-stream compaction
+  * heals BEFORE its first append can recreate a truncated live dir), and
+  * of the two prologues that read or write before it
+  * ([[AggIndex.ingestStream]]'s orphan guard, [[RadiusMarker.claim]]).
+  * Read-side callers ([[IndexStream.nextBatch]], probes) never
   * recover: a reader racing a LIVE compaction could delete the writer's
   * fully-written tmp or steal its rename (ADVICE r10) — they fail loudly
   * on a stranded state instead ([[crashRemnants]]).
@@ -57,7 +59,7 @@ object IndexMaintenance {
   private def trashPath(path: String) = new Path(path + ".compact_trash")
 
   /** True if a crashed swap left tmp/trash remnants beside (or instead of)
-    * the live directory. Read-side callers ([[SignatureIndex.nextBatch]])
+    * the live directory. Read-side callers ([[IndexStream.nextBatch]])
     * use this to FAIL LOUDLY on a stranded state instead of destructively
     * healing it — recover's renames/deletes are writer-only actions (a
     * reader racing a live compaction could delete the writer's

@@ -16,7 +16,10 @@ import org.apache.spark.sql.SparkSession
 private[operators] object Ledger {
 
   /** The trimmed body of `file`, or None when the file is absent (also
-    * when it vanishes between the caller's listing and this open).
+    * when it vanishes between the caller's listing and this open). On a
+    * checksummed filesystem every published marker carries a `.crc`, so a
+    * body edited outside this object fails its checksum; that fails
+    * naming the file, not with Hadoop's bare `ChecksumException`.
     */
   def read(spark: SparkSession, file: Path): Option[String] = {
     val fs = file.getFileSystem(spark.sessionState.newHadoopConf())
@@ -24,7 +27,14 @@ private[operators] object Ledger {
       val in = fs.open(file)
       try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
       finally in.close()
-    } catch { case _: java.io.FileNotFoundException => None }
+    } catch {
+      case _: java.io.FileNotFoundException => None
+      case e: org.apache.hadoop.fs.ChecksumException =>
+        throw new IllegalStateException(
+          s"marker at $file does not match its checksum: it was edited outside the " +
+            "operator that published it. Rebuild the artifact, or republish the " +
+            "marker through its operator, before writing again.", e)
+    }
   }
 
   /** Publish `body` at `file` via a `<name>.tmp` sibling and an
@@ -82,7 +92,8 @@ private[operators] object Ledger {
   def int(file: Path, body: String, field: String): Int =
     field.trim.toIntOption.getOrElse(throw new IllegalStateException(
       s"corrupt marker at $file (contents: '$body'): '$field' is not an integer — " +
-        "repair it or rebuild the artifact before writing again"))
+        "rebuild the artifact, or republish the marker through its operator, " +
+        "before writing again"))
 
   /** A one-integer marker; None when absent. */
   def readInt(spark: SparkSession, file: Path): Option[Int] =

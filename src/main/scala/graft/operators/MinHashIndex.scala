@@ -60,20 +60,15 @@ object MinHashIndex {
 
   /** Kernel ONLY the delta; append its band rows as `batch`. */
   def ingest(docs: DataFrame, path: String, batch: Int): Unit =
-    signatures(docs).withColumn("batch", lit(batch))
-      .write.mode("append").parquet(path)
-
-  /** Next free batch id — the shared fail-loud implementation. */
-  def nextBatch(spark: SparkSession, path: String): Int =
-    SignatureIndex.nextBatch(spark, path)
+    IndexStream.append(signatures(docs), path, batch)
 
   /** Streamed ingest: the kernel runs per micro-batch, appended under real
     * monotone batch ids ([[IndexStream]]'s checkpoint-pinned base).
     */
   def ingestStream(docs: DataFrame, path: String, checkpoint: String,
                    autoCompactFragments: Int = IndexStream.DefaultAutoCompactFragments): org.apache.spark.sql.streaming.StreamingQuery =
-    IndexStream.appendWithBatchIds(signatures(docs),
-      nextBatch(docs.sparkSession, path), path, checkpoint, autoCompactFragments)
+    IndexStream.appendWithBatchIds(signatures(docs), path, checkpoint,
+      autoCompactFragments)(IndexStream.append(_, path, _))
 
   /** Exact-Jaccard verification of candidate (id_a, id_b) pairs with ONE
     * shingle-array scan — THE single copy of the verifier (the query-side
@@ -103,6 +98,18 @@ object MinHashIndex {
       .orderBy("id_a", "id_b")
   }
 
+  /** Right-to-be-forgotten for the Jaccard lifecycle: tombstone the doc in
+    * BOTH artifacts — the band index (candidates stop surfacing it) and
+    * the doc store (verification stops reading its text, which is the
+    * part a takedown actually demands). Shared [[Tombstones]] semantics;
+    * reclamation rides the tombstone-aware compact of each path.
+    */
+  def forget(spark: SparkSession, path: String, docStorePath: String,
+             ids: DataFrame): Unit = {
+    Tombstones.forget(spark, path, ids)
+    Tombstones.forget(spark, docStorePath, ids)
+  }
+
   /** Streamed ingest AND probe — the in-flight crawl Jaccard-dedup shape
     * ([[SignatureIndex.probeStream]]'s discipline in the Jaccard regime).
     * Each micro-batch: raw docs append to the DOC STORE (the crawl's
@@ -119,56 +126,34 @@ object MinHashIndex {
     * consumers restore set semantics with dropDuplicates, the ingest
     * queries' contract.
     */
-  /** Right-to-be-forgotten for the Jaccard lifecycle: tombstone the doc in
-    * BOTH artifacts — the band index (candidates stop surfacing it) and
-    * the doc store (verification stops reading its text, which is the
-    * part a takedown actually demands). Shared [[Tombstones]] semantics;
-    * reclamation rides the tombstone-aware compact of each path.
-    */
-  def forget(spark: SparkSession, path: String, docStorePath: String,
-             ids: DataFrame): Unit = {
-    Tombstones.forget(spark, path, ids)
-    Tombstones.forget(spark, docStorePath, ids)
-  }
-
   def probeStream(docs: DataFrame, path: String, docStorePath: String,
                   outPath: String, checkpoint: String,
                   t: Double = 0.7): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = docs.sparkSession
-    // writer entry point: heal a crashed swap BEFORE reading or appending
-    // (nextBatch itself is read-only and must not — ADVICE r10)
-    IndexMaintenance.recover(spark, path)
-    val base = IndexStream.pinnedBase(docs, nextBatch(spark, path), checkpoint)
-    docs.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val b = base + batchId.toInt
-        df.select("doc_id", "text").write.mode("append").parquet(docStorePath)
-        signatures(df).withColumn("batch", lit(b))
-          .write.mode("append").parquet(path)
-        // persist the candidate set: it feeds both the doc-id restriction
-        // and the verifier, and re-running the band join per consumer
-        // would double the probe's only non-trivial stage
-        val cand = candidates(spark, path, b)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          // restrict the doc store to CANDIDATE ids BEFORE any shingling:
-          // verifyJaccard's corpus projection computes char n-grams for
-          // every row it is handed, and the store grows with every
-          // increment — an unrestricted corpus side would make the Nth
-          // probe pay an N-batch scan+kernel for a handful of candidates,
-          // breaking the batch-sized cost model this operator exists for
-          val ids = cand.select(col("id_a").as("doc_id"))
-            .unionByName(cand.select(col("id_b").as("doc_id"))).distinct()
-          val corpus = Tombstones.live(spark, docStorePath)
-            .join(ids, Seq("doc_id"), "left_semi")
-            .dropDuplicates("doc_id")
-          verifyJaccard(cand, corpus, Gram, t)
-            .withColumn("batch", lit(b))
-            .write.mode("append").parquet(outPath)
-        } finally cand.unpersist()
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    IndexStream.appendWithBatchIds(docs, path, checkpoint,
+        autoCompactFragments = 0) { (df, b) =>
+      df.select("doc_id", "text").write.mode("append").parquet(docStorePath)
+      IndexStream.append(signatures(df), path, b)
+      // persist the candidate set: it feeds both the doc-id restriction
+      // and the verifier, and re-running the band join per consumer
+      // would double the probe's only non-trivial stage
+      val cand = candidates(spark, path, b)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        // restrict the doc store to CANDIDATE ids BEFORE any shingling:
+        // verifyJaccard's corpus projection computes char n-grams for
+        // every row it is handed, and the store grows with every
+        // increment — an unrestricted corpus side would make the Nth
+        // probe pay an N-batch scan+kernel for a handful of candidates,
+        // breaking the batch-sized cost model this operator exists for
+        val ids = cand.select(col("id_a").as("doc_id"))
+          .unionByName(cand.select(col("id_b").as("doc_id"))).distinct()
+        val corpus = Tombstones.live(spark, docStorePath)
+          .join(ids, Seq("doc_id"), "left_semi")
+          .dropDuplicates("doc_id")
+        IndexStream.append(verifyJaccard(cand, corpus, Gram, t), outPath, b)
+      } finally cand.unpersist()
+    }
   }
 
   /** Candidate near-dup pairs for batch `batch`, entirely from the stored

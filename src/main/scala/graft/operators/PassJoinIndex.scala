@@ -13,12 +13,12 @@ import org.apache.spark.sql.functions._
   *
   * Stored rows are `(key, name, sig, bb)` — sig = the 8-byte hash of
   * (string length, segment index, segment text) from
-  * [[PassJoin.segmentEntries]], bb = sig mod [[BB]] — the exact layout
-  * the short-string indexes persist, so the WHOLE maintenance surface
-  * (bucket manifests, tombstone forget, compaction, streamed ingest
-  * under pinned batch ids) is the shared [[BatchBuckets]] /
-  * [[Tombstones]] / [[IndexMaintenance]] / [[IndexStream]] machinery,
-  * unchanged.
+  * [[PassJoin.segmentEntries]], bb = sig mod [[BatchBuckets.BB]] — the
+  * exact layout the short-string indexes persist, so the WHOLE
+  * maintenance surface (bucket manifests, tombstone forget, compaction,
+  * the streamed screen under pinned batch ids) is the shared
+  * [[BatchBuckets]] / [[Tombstones]] / [[IndexMaintenance]] /
+  * [[IndexStream]] machinery, unchanged.
   *
   * The PROBE is where PassJoin's asymmetry shows: a batch's pairs come
   * from the batch strings' multi-match-aware probe substrings
@@ -40,18 +40,11 @@ import org.apache.spark.sql.functions._
   */
 object PassJoinIndex {
 
-  /** Block-bucket count for the stored `bb=` layout ([[FastSsIndex.BB]]'s
-    * rationale): probes prune the stored scan to their buckets at
-    * planning time.
-    */
-  val BB = 64
-
   /** The stored row kernel: segment entries + bucket column. The ONLY
     * place the segment kernel runs in this lifecycle.
     */
   private def segsFor(ents: DataFrame, tau: Int): DataFrame =
-    PassJoin.segmentEntries(ents, tau)
-      .withColumn("bb", pmod(col("sig"), lit(BB)).cast("int"))
+    PassJoin.segmentEntries(ents, tau).withColumn("bb", BatchBuckets.bucket(col("sig")))
 
   /** Default radius: 2 — the long-string regime exists because two-edit
     * screening is infeasible there for deletion neighborhoods.
@@ -66,33 +59,26 @@ object PassJoinIndex {
     * crash ordering).
     */
   def build(entities: DataFrame, path: String, tau: Int = DefaultTau): Unit = {
-    val spark = entities.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(root, true)
-    RadiusMarker.write(spark, path, tau)
-    BatchBuckets.appendBatch(segsFor(entities, tau), path, batch = 0,
-      nBuckets = BB, overwriteManifest = true)
+    BatchBuckets.truncate(entities.sparkSession, path)
+    RadiusMarker.write(entities.sparkSession, path, tau)
+    BatchBuckets.appendBatch(segsFor(entities, tau), path, batch = 0)
   }
 
   /** Segment ONLY the delta; append its rows as `batch`. */
   def ingest(entities: DataFrame, path: String, batch: Int,
              tau: Int = DefaultTau): Unit = {
     RadiusMarker.validate(entities.sparkSession, path, tau, default = DefaultTau)
-    BatchBuckets.appendBatch(segsFor(entities, tau), path, batch, nBuckets = BB)
+    BatchBuckets.appendBatch(segsFor(entities, tau), path, batch)
   }
-
-  def nextBatch(spark: SparkSession, path: String): Int =
-    SignatureIndex.nextBatch(spark, path)
 
   /** Candidate long-string pairs for batch `batch`, entirely from stored
     * state: the batch's entities (supplied IN MEMORY by [[screenStream]],
     * else read back one-row-per-key from the batch's bucket-pruned
     * stored rows) generate probe substrings, which equi-join the stored
     * segment rows on the 8-byte context hash — pruned to the probe
-    * entries' buckets (bounded collect, <= [[BB]] ids). Normalized
-    * `(a_key, b_key, a_name, b_name)`; the later-member rule surfaces
-    * each pair once and the deterministic MAX fold collapses
+    * entries' buckets (bounded collect, <= [[BatchBuckets.BB]] ids).
+    * Normalized `(a_key, b_key, a_name, b_name)`; the later-member rule
+    * surfaces each pair once and the deterministic MAX fold collapses
     * multi-segment agreement and replays.
     */
   def candidates(spark: SparkSession, path: String, batch: Int,
@@ -116,7 +102,7 @@ object PassJoinIndex {
         .select("key", "name").dropDuplicates("key")
     }
     val probes = PassJoin.probeEntries(probeSrc, tau)
-      .withColumn("bb", pmod(col("sig"), lit(BB)).cast("int"))
+      .withColumn("bb", BatchBuckets.bucket(col("sig")))
     // probe-bucket pruning: bounded collect over the constant-per-entity
     // probe rows (regenerated for the join — cheaper than a persist at
     // this width)
@@ -150,33 +136,20 @@ object PassJoinIndex {
   def screenStream(entities: DataFrame, path: String, outPath: String,
                    checkpoint: String, tau: Int = DefaultTau)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = entities.sparkSession
-    IndexMaintenance.recover(spark, path)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(root)) RadiusMarker.validate(spark, path, tau, default = DefaultTau)
-    // marker BEFORE any data lands ([[FastSsIndex.ingestStream]]'s r14
-    // crash-ordering rationale)
-    if (!fs.exists(RadiusMarker.markerPath(path)))
-      RadiusMarker.write(spark, path, tau)
-    val base = IndexStream.pinnedBase(entities, nextBatch(spark, path), checkpoint)
-    entities.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val b = base + batchId.toInt
-        BatchBuckets.appendBatch(segsFor(df, tau), path, b, nBuckets = BB,
-          use = segs =>
-            EntityBlockIndex.verifyTypo(
-                candidates(df.sparkSession, path, b,
-                  // single-evaluation discipline: the probe entities are
-                  // re-derived from the MATERIALIZED segment rows, never
-                  // from a second pass over the caller's frame
-                  Some(segs.select("key", "name").dropDuplicates("key"))),
-                tau = tau)
-              .withColumn("batch", lit(b))
-              .write.mode("append").parquet(outPath))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    RadiusMarker.claim(entities.sparkSession, path, tau, default = DefaultTau)
+    IndexStream.appendWithBatchIds(entities, path, checkpoint,
+        autoCompactFragments = 0) { (df, b) =>
+      BatchBuckets.appendBatch(segsFor(df, tau), path, b, use = segs =>
+        IndexStream.append(
+          EntityBlockIndex.verifyTypo(
+            candidates(df.sparkSession, path, b,
+              // single-evaluation discipline: the probe entities are
+              // re-derived from the MATERIALIZED segment rows, never
+              // from a second pass over the caller's frame
+              Some(segs.select("key", "name").dropDuplicates("key"))),
+            tau = tau),
+          outPath, b))
+    }
   }
 
   /** Right-to-be-forgotten: tombstone the entity ([[Tombstones]]);

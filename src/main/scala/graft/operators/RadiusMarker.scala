@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
   */
 private[operators] object RadiusMarker {
 
-  def markerPath(path: String) = new Path(path, "_graft_tau")
+  private def markerPath(path: String) = new Path(path, "_graft_tau")
 
   def write(spark: SparkSession, path: String, tau: Int): Unit =
     Ledger.write(spark, markerPath(path), tau.toString)
@@ -33,5 +33,23 @@ private[operators] object RadiusMarker {
       s"index at $path was built with deletion/partition radius tau=$s but this " +
         s"writer kernels at tau=$tau — mixed radii would silently break the " +
         "edit-distance contract. Rebuild the index at the desired radius.")
+  }
+
+  /** The streamed writers' prologue, run before the stream starts so the
+    * radius lands before any data (r14 ADVICE: a marker written after the
+    * first trigger's data left a crash window a restart rejected loudly
+    * as a tau mismatch; nextBatch reads a data-less marker-only dir as
+    * fresh, so the worst crash now leaves a half-built index that is loud
+    * on mismatch). Heals a crashed compaction first: the marker write may
+    * create the root, and [[IndexMaintenance.recover]] would then take
+    * the trashed table for a finished swap's leftovers and delete it. An existing root
+    * is validated; a marker-less one (a pre-marker artifact just
+    * validated at `default`, or a fresh root) gets the marker.
+    */
+  def claim(spark: SparkSession, path: String, tau: Int, default: Int): Unit = {
+    IndexMaintenance.recover(spark, path)
+    val fs = new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+    if (fs.exists(new Path(path))) validate(spark, path, tau, default)
+    if (!fs.exists(markerPath(path))) write(spark, path, tau)
   }
 }

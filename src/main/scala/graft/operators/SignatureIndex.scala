@@ -55,8 +55,7 @@ object SignatureIndex {
 
   /** Kernel ONLY the delta; append its signatures as `batch`. */
   def ingest(docs: DataFrame, path: String, batch: Int): Unit =
-    signatures(docs).withColumn("batch", lit(batch))
-      .write.mode("append").parquet(path)
+    IndexStream.append(signatures(docs), path, batch)
 
   /** Forget documents — the GDPR/right-to-be-forgotten lifecycle step a
     * training-data index must support; the shared [[Tombstones]]
@@ -70,62 +69,6 @@ object SignatureIndex {
   private[graft] def readIndex(spark: SparkSession, path: String): DataFrame =
     Tombstones.live(spark, path)
 
-  /** The next free batch id in a stored index — max(batch) + 1, or 0 for a
-    * fresh/empty path: the monotone base offset a streamed appender adds to
-    * its micro-batch ids so stream batches continue the batch-API sequence.
-    *
-    * READ-ONLY by design (ADVICE r10): this is called from probe/read-side
-    * paths that may race a live in-stream compaction, so it must never run
-    * [[IndexMaintenance.recover]]'s destructive renames itself — a reader
-    * could delete the writer's fully-written tmp mid-swap. A stranded
-    * crashed-swap state (live dir missing, tmp/trash remnants present)
-    * fails LOUDLY instead of reading as "fresh index" and handing out
-    * batch 0; writer entry points ([[IndexStream.appendWithBatchIds]],
-    * [[probeStream]], [[IndexMaintenance.compact]]) heal it first.
-    *
-    * Consults the [[IndexMaintenance.MaxBatchMarker]] sidecar too: a
-    * tombstone-aware compaction may have reclaimed every row of the
-    * highest batch, and its id must never be re-issued.
-    */
-  def nextBatch(spark: SparkSession, path: String): Int = {
-    val dataMax: Option[Int] =
-      try {
-        val r = spark.read.parquet(path).agg(max("batch")).first()
-        if (r.isNullAt(0)) None else Some(r.getInt(0))
-      } catch {
-        // ONLY a genuinely absent path means "fresh index". Any other
-        // analysis failure — corrupt footer, missing batch column — must
-        // fail loudly: starting over at base 0 would hand out batch ids an
-        // existing half-written index already uses, silently corrupting
-        // the same-batch witness rule.
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "PATH_NOT_FOUND" =>
-          if (IndexMaintenance.crashRemnants(spark, path))
-            throw new IllegalStateException(
-              s"stranded crashed-compaction state at $path: the live directory is " +
-                "absent but .compact_tmp/.compact_trash remnants exist. Refusing to " +
-                "answer batch 0 for a non-fresh index; heal via a writer entry point " +
-                "(IndexMaintenance.recover / compact / a restarted ingest stream).")
-          None
-        // A dir holding ONLY underscore sidecars (no data file at all) is
-        // the known marker-before-data crash window of [[FastSsIndex]]'s
-        // build/streamed entry points (r14 ADVICE: the `_graft_tau` radius
-        // marker lands first so a tau-mismatched writer fails loudly even
-        // on a half-built index). Zero data files means zero batch ids in
-        // use — answering from the max-batch marker alone (or 0) cannot
-        // collide with data. The data-file listing is the defense against
-        // mistaking a CORRUPT-footer failure for this window: any data
-        // file present keeps the loud failure.
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" &&
-              !IndexMaintenance.crashRemnants(spark, path) &&
-              IndexMaintenance.dataFileCount(spark, path) == 0 =>
-          None
-      }
-    val markerMax = IndexMaintenance.readMaxBatchMarker(spark, path)
-    (dataMax ++ markerMax).reduceOption(_ max _).map(_ + 1).getOrElse(0)
-  }
-
   /** Streamed ingest of a documents stream: the fused kernel runs per
     * micro-batch (stateless — no watermark, no aggregation state) and each
     * micro-batch appends under batch = base + batchId — REAL, distinct,
@@ -134,7 +77,7 @@ object SignatureIndex {
     * model as batch ingest.
     *
     * Sink choice, the checkpoint-pinned base offset, and the single-writer
-    * contract are [[IndexStream]]'s (shared with the substring index). A
+    * contract are [[IndexStream]]'s (shared with the stored index family). A
     * recomputed base on restart would land a replayed micro-batch under a
     * fresh id — the same doc in two batches, turning at-least-once replay
     * (harmless: probe's min-witness is duplicate-insensitive) into a
@@ -143,8 +86,8 @@ object SignatureIndex {
     */
   def ingestStream(docs: DataFrame, path: String, checkpoint: String,
                    autoCompactFragments: Int = IndexStream.DefaultAutoCompactFragments): org.apache.spark.sql.streaming.StreamingQuery =
-    IndexStream.appendWithBatchIds(signatures(docs),
-      nextBatch(docs.sparkSession, path), path, checkpoint, autoCompactFragments)
+    IndexStream.appendWithBatchIds(signatures(docs), path, checkpoint,
+      autoCompactFragments)(IndexStream.append(_, path, _))
 
   /** Streamed ingest AND probe — the in-flight crawl-dedup shape. Each
     * micro-batch's signatures land in the index under a real batch id
@@ -164,22 +107,12 @@ object SignatureIndex {
     * `dropDuplicates("doc_id")`, exactly the ingest queries' contract.
     */
   def probeStream(docs: DataFrame, path: String, outPath: String,
-                  checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
-    // writer entry point: heal a crashed swap BEFORE reading or appending
-    // (nextBatch itself is read-only and must not — ADVICE r10)
-    IndexMaintenance.recover(spark, path)
-    val base = IndexStream.pinnedBase(docs, nextBatch(spark, path), checkpoint)
-    signatures(docs).writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val b = base + batchId.toInt
-        df.withColumn("batch", lit(b)).write.mode("append").parquet(path)
-        probe(spark, path, b).withColumn("batch", lit(b))
-          .write.mode("append").parquet(outPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+                  checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
+    IndexStream.appendWithBatchIds(signatures(docs), path, checkpoint,
+        autoCompactFragments = 0) { (df, b) =>
+      IndexStream.append(df, path, b)
+      IndexStream.append(probe(docs.sparkSession, path, b), outPath, b)
+    }
 
   // unrolled, not transform(sequence(...)): higher-order functions don't
   // codegen and would drag the banding Project out of WholeStageCodegen

@@ -55,28 +55,27 @@ object SubstringIndex {
 
   /** Kernel ONLY the delta; append its triples as `batch`. */
   def ingest(docs: DataFrame, path: String, batch: Int, w: Int): Unit =
-    windows(docs, w).withColumn("batch", lit(batch))
-      .write.mode("append").parquet(path)
-
-  /** The next free batch id in a stored index — max(batch) + 1, or 0 for a
-    * genuinely absent path; read-only, marker-aware, and fail-loud on a
-    * stranded crashed swap, exactly as [[SignatureIndex.nextBatch]]
-    * (which it delegates to).
-    */
-  def nextBatch(spark: SparkSession, path: String): Int =
-    SignatureIndex.nextBatch(spark, path)
+    IndexStream.append(windows(docs, w), path, batch)
 
   /** Streamed ingest: the rolling-hash kernel runs per micro-batch
     * (stateless) and each micro-batch's triples append under a REAL
     * monotone batch id — sink choice, checkpoint-pinned base offset, and
     * the single-writer contract are [[IndexStream]]'s, shared with the
-    * signature index. probe() is duplicate-insensitive, so at-least-once
+    * stored index family. probe() is duplicate-insensitive, so at-least-once
     * replays are safe by construction.
     */
   def ingestStream(docs: DataFrame, path: String, checkpoint: String, w: Int,
                    autoCompactFragments: Int = IndexStream.DefaultAutoCompactFragments): org.apache.spark.sql.streaming.StreamingQuery =
-    IndexStream.appendWithBatchIds(windows(docs, w),
-      nextBatch(docs.sparkSession, path), path, checkpoint, autoCompactFragments)
+    IndexStream.appendWithBatchIds(windows(docs, w), path, checkpoint,
+      autoCompactFragments)(IndexStream.append(_, path, _))
+
+  /** Right-to-be-forgotten for the window-triple index — shared
+    * [[Tombstones]] delete-vector semantics: forgotten docs' triples
+    * vanish from every probe's live view (their spans stop witnessing
+    * duplication), reclamation rides the tombstone-aware compact.
+    */
+  def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
+    Tombstones.forget(spark, path, ids)
 
   /** Streamed ingest AND probe — the substring twin of
     * [[SignatureIndex.probeStream]]: each micro-batch's window triples
@@ -90,31 +89,13 @@ object SubstringIndex {
     * replayed micro-batch re-appends value-identical span rows; consumers
     * restore set semantics with dropDuplicates.
     */
-  /** Right-to-be-forgotten for the window-triple index — shared
-    * [[Tombstones]] delete-vector semantics: forgotten docs' triples
-    * vanish from every probe's live view (their spans stop witnessing
-    * duplication), reclamation rides the tombstone-aware compact.
-    */
-  def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    Tombstones.forget(spark, path, ids)
-
   def probeStream(docs: DataFrame, path: String, outPath: String,
-                  checkpoint: String, w: Int): org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = docs.sparkSession
-    // writer entry point: heal a crashed swap BEFORE reading or appending
-    // (nextBatch itself is read-only and must not — ADVICE r10)
-    IndexMaintenance.recover(spark, path)
-    val base = IndexStream.pinnedBase(docs, nextBatch(spark, path), checkpoint)
-    windows(docs, w).writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        val b = base + batchId.toInt
-        df.withColumn("batch", lit(b)).write.mode("append").parquet(path)
-        probe(spark, path, b, w).withColumn("batch", lit(b))
-          .write.mode("append").parquet(outPath)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
+                  checkpoint: String, w: Int): org.apache.spark.sql.streaming.StreamingQuery =
+    IndexStream.appendWithBatchIds(windows(docs, w), path, checkpoint,
+        autoCompactFragments = 0) { (df, b) =>
+      IndexStream.append(df, path, b)
+      IndexStream.append(probe(docs.sparkSession, path, b, w), outPath, b)
+    }
 
   /** Maximal duplicated spans `(doc_id, span_start, span_end, n_windows)`
     * for batch `batch`'s docs, entirely from the stored index.

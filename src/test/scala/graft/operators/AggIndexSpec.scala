@@ -37,7 +37,7 @@ class AggIndexSpec extends SparkSpec {
     AggIndex.build(events.filter(col("event_id") % 3 === 0), p)
     AggIndex.ingest(events.filter(col("event_id") % 3 === 1), p, batch = 1)
     AggIndex.ingest(events.filter(col("event_id") % 3 === 2), p, batch = 2)
-    assert(AggIndex.nextBatch(spark, p) == 3)
+    assert(IndexStream.nextBatch(spark, p) == 3)
     val inc = rows(AggIndex.merged(spark, p))
     val one = rows(oneShot)
     // exact columns are split-invariant BY CONSTRUCTION (associative
@@ -85,7 +85,7 @@ class AggIndexSpec extends SparkSpec {
       .collect().map(_.getInt(0)).toSet
     assert(batches == Set(1, 2), s"expected {history=1, last=2}, got $batches")
     // batch id sequence continues after compaction
-    assert(AggIndex.nextBatch(spark, p) == 3)
+    assert(IndexStream.nextBatch(spark, p) == 3)
     assert(rows(AggIndex.merged(spark, p)) == before)
     assert(AggIndex.merged(spark, p)
       .orderBy("event_type", "day").select("users").collect().toSeq == estBefore,
@@ -251,7 +251,7 @@ class AggIndexSpec extends SparkSpec {
       "retraction must equal a never-ingested build (exact cols + HLL estimate)")
 
     // batch-id discipline: recomputed keys land under a FRESH committed id
-    assert(AggIndex.nextBatch(spark, p) == 4,
+    assert(IndexStream.nextBatch(spark, p) == 4,
       "retraction must advance, never reuse, the batch sequence")
     // and the ledger covers it, so a follow-up stream's orphan guard passes
     val stored = spark.read.parquet(p)
@@ -456,7 +456,7 @@ class AggIndexSpec extends SparkSpec {
     val ins = events.filter(col("event_id") % 20 === 3)
       .withColumn("value", col("value") + 7).withColumn("sgn", lit(1))
     val state2 = state1.unionByName(ins.drop("sgn"))
-    AggIndex.ingestCdc(ins, state2, p, batch = AggIndex.nextBatch(spark, p))
+    AggIndex.ingestCdc(ins, state2, p, batch = IndexStream.nextBatch(spark, p))
     val twin = Files.createTempDirectory("graft_aggidx_cdcc_twin_").toString
     AggIndex.build(state2, twin)
     assert(rows(AggIndex.merged(spark, p)) == rows(AggIndex.merged(spark, twin)),

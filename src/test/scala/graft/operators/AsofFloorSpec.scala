@@ -56,7 +56,7 @@ class AsofFloorSpec extends SparkSpec {
     assert(AggIndex.mergedAsOf(spark, p, upToBatch = 2).count() > 0)
     // a later compact must not LOWER the forget's floor (monotone carry)
     AggIndex.ingest(events.filter(col("event_id") % 2 === 1), p,
-      batch = AggIndex.nextBatch(spark, p))
+      batch = IndexStream.nextBatch(spark, p))
     AggIndex.compact(spark, p)
     intercept[IllegalArgumentException] {
       AggIndex.mergedAsOf(spark, p, upToBatch = 1)

@@ -233,7 +233,7 @@ class FastSsIndexSpec extends SparkSpec {
     try out.write("2".getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     assert(FastSsIndex.storedTau(spark, p2) == 2)
-    assert(FastSsIndex.nextBatch(spark, p2) == 0,
+    assert(IndexStream.nextBatch(spark, p2) == 0,
       "a marker-only dir is the known crash window and must restart at batch 0")
     FastSsIndex.ingest(Seq(1L -> "abcdef").toDF("key", "name"), p2, batch = 0, tau = 2)
     assert(FastSsIndex.candidates(spark, p2, 0).collect().isEmpty)

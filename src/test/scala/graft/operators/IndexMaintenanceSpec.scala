@@ -42,7 +42,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     assert(SignatureIndex.probe(spark, path, batch = 4)
       .orderBy("doc_id").collect().toSeq == probeBefore,
       "compaction changed probe answers")
-    assert(SignatureIndex.nextBatch(spark, path) == 5,
+    assert(IndexStream.nextBatch(spark, path) == 5,
       "compaction must preserve the stored batch sequence")
   }
 
@@ -156,11 +156,11 @@ class IndexMaintenanceSpec extends SparkSpec {
     // ADVICE r10): on a stranded state nextBatch fails LOUDLY instead of
     // reading as "fresh index" and handing out batch 0 ...
     fs.rename(new Path(path), new Path(path + ".compact_tmp"))
-    val ex = intercept[IllegalStateException](SignatureIndex.nextBatch(spark, path))
+    val ex = intercept[IllegalStateException](IndexStream.nextBatch(spark, path))
     assert(ex.getMessage.contains("stranded"), ex.getMessage)
     // ... and a writer entry point heals it, after which nextBatch answers
     IndexMaintenance.recover(spark, path)
-    assert(SignatureIndex.nextBatch(spark, path) == 1)
+    assert(IndexStream.nextBatch(spark, path) == 1)
     assert(readBack() == want)
   }
 
@@ -228,7 +228,7 @@ class IndexMaintenanceSpec extends SparkSpec {
     val b = pmod(col("doc_id"), lit(2)).cast("int")
     SignatureIndex.build(docs.filter(b === 0), path)
     SignatureIndex.ingest(docs.filter(b === 1), path, batch = 1)
-    assert(SignatureIndex.nextBatch(spark, path) == 2)
+    assert(IndexStream.nextBatch(spark, path) == 2)
 
     // forget EVERY doc of batch 1, then compact: batch 1's rows are all
     // reclaimed, but its id must stay burned
@@ -238,12 +238,12 @@ class IndexMaintenanceSpec extends SparkSpec {
     val stored = spark.read.parquet(path)
     assert(stored.agg(max("batch")).first().getInt(0) == 0,
       "batch 1 rows should be physically reclaimed")
-    assert(SignatureIndex.nextBatch(spark, path) == 2,
+    assert(IndexStream.nextBatch(spark, path) == 2,
       "nextBatch must never shrink past a reclaimed max batch")
     // and the marker survives a SUBSEQUENT compaction + further ingest
     SignatureIndex.ingest(docs.filter(b === 0).limit(5), path, batch = 2)
     IndexMaintenance.compact(spark, path)
-    assert(SignatureIndex.nextBatch(spark, path) == 3)
+    assert(IndexStream.nextBatch(spark, path) == 3)
   }
 
   test("recover's swap-done branch rescues sidecars and pending tombstones from trash") {

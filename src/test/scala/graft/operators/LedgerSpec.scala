@@ -9,8 +9,9 @@ import graft.SparkSpec
 
 /** The shared sidecar protocol: atomic publish leaves nothing behind,
   * a write-once publish keeps its first writer, both commit-ledger forms
-  * keep their exact bytes, corrupt integer markers fail naming the file,
-  * and the pin GC reaps crashed readers.
+  * keep their exact bytes, corrupt integer markers and markers edited
+  * outside the protocol fail naming the file, and the pin GC reaps
+  * crashed readers.
   */
 class LedgerSpec extends SparkSpec {
 
@@ -61,6 +62,18 @@ class LedgerSpec extends SparkSpec {
       assert(e.getMessage.contains(new Path(root, name).toString),
         s"$name ('$body'): message does not name the file: ${e.getMessage}")
     }
+  }
+
+  test("a published marker edited outside Ledger fails naming the file") {
+    val root = tmpRoot("crc_")
+    val f = new Path(root, "_graft_layout")
+    Ledger.write(spark, f, "2")
+    // the publish left a checksum beside the marker; a raw overwrite
+    // leaves it stale
+    Files.write(Paths.get(root, "_graft_layout"), "3".getBytes(UTF_8))
+    val e = intercept[IllegalStateException](Ledger.read(spark, f))
+    assert(e.getMessage.contains(f.toString),
+      s"message does not name the file: ${e.getMessage}")
   }
 
   private def tmpsIn(root: String): Seq[String] =

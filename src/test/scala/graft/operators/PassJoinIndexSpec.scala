@@ -7,10 +7,10 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The stored PassJoin lifecycle: incremental probes must equal brute
-  * force across batch splits, pairs split across batches surface at the
-  * later member, forget hides, compact preserves, mixed radii fail
-  * loudly.
+/** The stored PassJoin lifecycle: incremental probes and the streamed
+  * screen must equal brute force across batch splits, pairs split across
+  * batches surface at the later member, forget hides, compact preserves,
+  * mixed radii fail loudly.
   */
 class PassJoinIndexSpec extends SparkSpec {
 
@@ -55,6 +55,28 @@ class PassJoinIndexSpec extends SparkSpec {
     PassJoinIndex.build(ents(b0), p, tau = 2)
     PassJoinIndex.ingest(ents(b1), p, batch = 1, tau = 2)
     assert(probeAll(p, 1) == brute(corpus, 2))
+  }
+
+  test("a three-trigger streamed screen equals the one-shot brute force") {
+    val base = Files.createTempDirectory("graft_pjidx_stream_").toString
+    // key mod 3 splits every true pair across two triggers
+    for (sl <- 0 to 2)
+      graft.StreamFixtures.oneFile(ents(corpus.filter(_._1 % 3 == sl)),
+        s"$base/src/s$sl.parquet", 1000000000000L + sl * 60000L)
+    val streamed = spark.readStream
+      .schema(org.apache.spark.sql.types.StructType.fromDDL("key BIGINT, name STRING"))
+      .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
+    val q = PassJoinIndex.screenStream(streamed, s"$base/idx", s"$base/out",
+      s"$base/cp", tau = 2)
+    try q.processAllAvailable() finally q.stop()
+    val got = spark.read.parquet(s"$base/out").dropDuplicates("a_key", "b_key")
+      .select("a_key", "b_key", "dist")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val want = brute(corpus, 2)
+    assert(want.nonEmpty, "fixture has pairs within tau = 2")
+    assert(got == want)
+    assert(spark.read.parquet(s"$base/idx").select("batch").distinct().count() == 3,
+      "one real batch id per trigger")
   }
 
   test("forget hides an entity from probes; compact reclaims, answers unchanged") {

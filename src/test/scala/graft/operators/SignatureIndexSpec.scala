@@ -142,7 +142,7 @@ class SignatureIndexSpec extends SparkSpec {
     val docs = Tables.load(spark, sfDir, "documents")
     val batchOf = pmod(col("doc_id"), lit(3)).cast("int")
     SignatureIndex.build(docs.filter(batchOf === 0), s"$base/idx")
-    assert(SignatureIndex.nextBatch(spark, s"$base/idx") == 1)
+    assert(IndexStream.nextBatch(spark, s"$base/idx") == 1)
 
     def runStream(): Unit = {
       val streamed = spark.readStream.schema(docs.schema)
