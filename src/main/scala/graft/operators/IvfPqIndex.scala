@@ -99,22 +99,19 @@ object IvfPqIndex {
                  cents: Array[(Long, Seq[Float])], cb: Array[Seq[Float]],
                  topN: Int, pred: Column): DataFrame =
     PqIndex.adcRank(
-      PqIndex.readCodes(spark, path)
+      CodeTable.read(spark, path)
         .filter(pred && col("list").isin(probeLists(probe, cents): _*)),
       PqIndex.adcLut(probe, cb), topN)
 
   /** Forget vectors from the partitioned code table — [[PqIndex.forget]]'s
     * semantics (shared [[Tombstones]] machinery on `vec_id`; the query
-    * path already reads the live view via [[PqIndex.readCodes]]).
+    * path already reads the live view via [[CodeTable.read]]).
     * Reclamation: `IndexMaintenance.compact(spark, path, Seq("list"))` —
     * tombstone-aware AND layout-preserving, so a forgotten vec_id's rows
     * leave their `list=` directory physically while pruning keeps working.
     */
   def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
     PqIndex.forget(spark, path, ids)
-
-  private def round9(x: Double): Double =
-    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   private def dotD(a: Seq[Float], b: Seq[Float]): Double = {
     var dot = 0.0; var i = 0
@@ -135,7 +132,7 @@ object IvfPqIndex {
     * build assigned with — K cosines on the driver.
     */
   def probeLists(probe: Seq[Float], cents: Array[(Long, Seq[Float])]): Seq[Long] =
-    cents.map { case (ccid, v) => (ccid, round9(cos(probe, v))) }
+    cents.map { case (ccid, v) => (ccid, PqIndex.round9(cos(probe, v))) }
       .sortBy { case (ccid, sim) => (-sim, ccid) }
       .take(NProbe).map(_._1).toSeq
 
@@ -147,7 +144,7 @@ object IvfPqIndex {
             cents: Array[(Long, Seq[Float])], cb: Array[Seq[Float]],
             topN: Int): DataFrame =
     PqIndex.adcRank(
-      PqIndex.readCodes(spark, path)
+      CodeTable.read(spark, path)
         .filter(col("list").isin(probeLists(probe, cents): _*)),
       PqIndex.adcLut(probe, cb), topN)
 
@@ -171,19 +168,10 @@ object IvfPqIndex {
     }
     val lutDf = entries.toDF("qid", "lists", "lut")
     val allLists = entries.flatMap(_._2).distinct
-    val asim9 = round((0 until PqIndex.M).map(m =>
-      element_at(element_at(col("lut"), m + 1), col(s"code$m"))).reduceLeft(_ + _), 9)
-    val topk = udaf(new graft.functions.TopK.TopKAgg(topN))
-    PqIndex.readCodes(spark, path)
+    PqIndex.adcTopK(CodeTable.read(spark, path)
       .filter(col("list").isin(allLists: _*))
       .crossJoin(broadcast(lutDf))
-      .filter(array_contains(col("lists"), col("list")))
-      .select(col("qid"), col("vec_id"), asim9.as("a9"))
-      .groupBy("qid")
-      .agg(topk(col("a9"), col("vec_id")).as("top"))
-      .select(col("qid"), explode(col("top")).as("r"))
-      .select(col("qid"), col("r.id").as("vec_id"),
-        round(col("r.ord"), 4).as("asim"))
+      .filter(array_contains(col("lists"), col("list"))), topN)
   }
 
   // ------------------------------------------- residual encoding (FAISS)
@@ -215,7 +203,7 @@ object IvfPqIndex {
     */
   def residualCodebookOf(emb: DataFrame, cents: Array[(Long, Seq[Float])]): Array[Seq[Float]] =
     PqIndex.codebookOf(emb).map { v =>
-      val ccid = cents.map { case (id, c) => (id, round9(cos(v, c))) }
+      val ccid = cents.map { case (id, c) => (id, PqIndex.round9(cos(v, c))) }
         .minBy { case (id, sim) => (-sim, id) }._1
       val c = cents.find(_._1 == ccid).get._2
       v.indices.map(i => (v(i).toDouble - c(i).toDouble).toFloat): Seq[Float]
@@ -247,30 +235,17 @@ object IvfPqIndex {
     residualCodeTable(emb, cents, cb)
       .write.partitionBy("list").mode("append").parquet(path)
 
-  /** Streamed ingest of an embeddings stream into the residual code table —
-    * the last cell of the streamed-ingest matrix (signature, substring, PQ,
-    * IVF-PQ): each micro-batch is coarse-assigned and residual-encoded
-    * against the FROZEN quantizers and appended into the partitioned list
-    * directories, so the production vector index keeps up with a
+  /** Streamed ingest of an embeddings stream into the residual code table
+    * ([[CodeTable.appendStream]] into the `list=` directories): each
+    * micro-batch is coarse-assigned and residual-encoded against the
+    * FROZEN quantizers, so the production vector index keeps up with a
     * continuously embedded corpus without re-encoding history and without
-    * losing partition pruning (appended files land inside their `list=`
-    * directory). foreachBatch + the plain batch writer for the same reason
-    * as [[SignatureIndex.ingestStream]]: the streaming file sink's
-    * `_spark_metadata` manifest would hide batch-API appends from every
-    * later read of the shared artifact. At-least-once replay can duplicate
-    * rows; codes are DETERMINISTIC (frozen centroids + codebook, 9-dp
-    * lattice), so duplicates are byte-identical and [[PqIndex.readCodes]]
-    * (the query path) restores set semantics before ranking.
+    * losing partition pruning.
     */
   def ingestStreamResidual(emb: DataFrame, cents: Array[(Long, Seq[Float])],
                            cb: Array[Seq[Float]], path: String,
                            checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    residualCodeTable(emb, cents, cb).writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.partitionBy("list").mode("append").parquet(path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    CodeTable.appendStream(residualCodeTable(emb, cents, cb), path, Seq("list"), checkpoint)
 
   /** Residual-ADC top-N from the stored table: score(v) decomposes as
     * <p, centroid(list)> + <p, residual-code> (the FAISS inner-product
@@ -282,9 +257,9 @@ object IvfPqIndex {
   def queryResidual(spark: SparkSession, path: String, probe: Seq[Float],
                     cents: Array[(Long, Seq[Float])], cb: Array[Seq[Float]],
                     topN: Int): DataFrame = {
-    val ipc = cents.sortBy(_._1).map { case (_, c) => round9(dotD(probe, c)) }.toSeq
+    val ipc = cents.sortBy(_._1).map { case (_, c) => PqIndex.round9(dotD(probe, c)) }.toSeq
     PqIndex.adcRank(
-      PqIndex.readCodes(spark, path)
+      CodeTable.read(spark, path)
         .filter(col("list").isin(probeLists(probe, cents): _*)),
       PqIndex.adcLut(probe, cb), topN,
       base = element_at(typedlit(ipc), col("list").cast("int")))

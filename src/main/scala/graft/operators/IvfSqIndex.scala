@@ -68,13 +68,8 @@ object IvfSqIndex {
   def query(spark: SparkSession, path: String, probe: Seq[Float],
             cents: Array[(Long, Seq[Float])], topN: Int): DataFrame = {
     val scale = SqIndex.readScale(spark, path)
-    // list restriction FIRST — written below the tombstone anti-join and
-    // the set-semantics dedup so the pruning is structural, not an
-    // optimizer courtesy
-    val pruned = spark.read.parquet(path)
-      .filter(col("list").isin(IvfPqIndex.probeLists(probe, cents): _*))
-    val live = Tombstones.applyTo(pruned, spark, path, idCol = "vec_id")
-    SqIndex.rank(live.dropDuplicates().drop("list"),
+    SqIndex.rank(CodeTable.read(spark, path)
+        .filter(col("list").isin(IvfPqIndex.probeLists(probe, cents): _*)),
       SqIndex.encodeVec(probe, scale), topN)
   }
 }

@@ -74,8 +74,8 @@ object PqIndex {
     * [[IvfPqIndex]] `list=` layout generalized to user metadata), so the
     * filter never post-scans and the inline pre-filter's
     * rescan-raw-embeddings-per-query cost disappears — the query reads
-    * ~1/|labels| of an already-M-bytes-a-vector table. Compose with
-    * [[query]]-style ADC via `readCodes(...).filter(col(partCol) === x)`.
+    * ~1/|labels| of an already-M-bytes-a-vector table. Query it with
+    * [[queryWhere]] (one probe) or [[queryBatchPartitioned]] (a batch).
     * Ingest/forget/compact compose as with [[IvfPqIndex]]: frozen codebook
     * appends land in the right `label=` directory;
     * `IndexMaintenance.compact(spark, path, Seq(partCol))` reclaims
@@ -99,25 +99,19 @@ object PqIndex {
 
   /** Streamed ingest of an embeddings stream: codes are encoded per
     * micro-batch against the FROZEN codebook and appended to the stored
-    * table — the continuous-arrival path for a vector corpus (embeddings
-    * stream out of an upstream featurizer; the index grows without ever
-    * re-encoding). foreachBatch + the plain batch writer for the same
-    * reason as [[SignatureIndex.ingestStream]]: the streaming file sink's
-    * `_spark_metadata` manifest would hide batch-API appends from every
-    * later read of the shared artifact. At-least-once replay can duplicate
-    * rows; codes are DETERMINISTIC (frozen codebook, 9-dp lattice), so
-    * duplicates are byte-identical and any consumer restores set semantics
-    * with a dropDuplicates("vec_id") — top-k consumers must do so before
-    * ranking (a duplicated row would occupy two top-k slots).
+    * table ([[CodeTable.appendStream]]) — the continuous-arrival path for a
+    * vector corpus (embeddings stream out of an upstream featurizer; the
+    * index grows without ever re-encoding).
     */
   def ingestStream(emb: DataFrame, cb: Array[Seq[Float]], path: String,
                    checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    encode(emb, cb).writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("append").parquet(path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    CodeTable.appendStream(encode(emb, cb), path, Nil, checkpoint)
+
+  /** Round half-up to 9 decimal places — the driver side of the 9-dp
+    * lattice (ADC lookup tables, IVF coarse-list sims and base terms).
+    */
+  private[operators] def round9(x: Double): Double =
+    BigDecimal(x).setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** ADC lookup table for one probe: lut(m)(c) = <probe_m, cb(c)_m>,
     * 9-dp-rounded. M * KC doubles, computed on the driver.
@@ -125,8 +119,7 @@ object PqIndex {
   def adcLut(probe: Seq[Float], cb: Array[Seq[Float]]): Array[Array[Double]] =
     Array.tabulate(M, KC) { (m, c) =>
       val p = subv(probe, m); val q = subv(cb(c), m)
-      BigDecimal((0 until SubDim).map(i => p(i).toDouble * q(i).toDouble).sum)
-        .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+      round9((0 until SubDim).map(i => p(i).toDouble * q(i).toDouble).sum)
     }
 
   /** ADC ranking over a codes relation (`vec_id, code0..code{M-1}`): M
@@ -149,6 +142,28 @@ object PqIndex {
       .select(col("vec_id"), round(col("a9"), 4).as("asim"))
   }
 
+  /** The batched ADC plan: per-qid top-N over code rows already paired
+    * with the probes that may return them, each pair carrying its probe's
+    * `qid` and `lut` (the M x KC [[adcLut]] as nested arrays). Per-qid
+    * top-N is the bounded mergeable [[graft.functions.TopK]] Aggregator —
+    * map-side partials reduce each task's slice to <= N rows per qid
+    * BEFORE the exchange, so the shuffle carries O(N * probes * tasks)
+    * rows however big the stored table is. Same total order as
+    * [[adcRank]] ((a9 desc, vec_id) — ties cannot diverge), same 9-dp /
+    * 4-dp lattice.
+    */
+  private[operators] def adcTopK(pairs: DataFrame, topN: Int): DataFrame = {
+    val asim9 = round((0 until M).map(m =>
+      element_at(element_at(col("lut"), m + 1), col(s"code$m"))).reduceLeft(_ + _), 9)
+    val topk = udaf(new graft.functions.TopK.TopKAgg(topN))
+    pairs.select(col("qid"), col("vec_id"), asim9.as("a9"))
+      .groupBy("qid")
+      .agg(topk(col("a9"), col("vec_id")).as("top"))
+      .select(col("qid"), explode(col("top")).as("r"))
+      .select(col("qid"), col("r.id").as("vec_id"),
+        round(col("r.ord"), 4).as("asim"))
+  }
+
   /** [[queryBatch]] over a [[buildPartitioned]] table with a per-probe
     * restriction on the partition column — the serving shape of FILTERED
     * vector search under a query STREAM (each tenant/label's query must
@@ -166,30 +181,20 @@ object PqIndex {
       probes: Seq[(Long, Seq[Float], Int)], cb: Array[Seq[Float]],
       topN: Int, partCol: String): DataFrame = {
     import spark.implicits._
-    val luts = probes.map { case (qid, pv, lbl) =>
+    val lutDf = probes.map { case (qid, pv, lbl) =>
       (qid, lbl, adcLut(pv, cb).map(_.toSeq).toSeq)
-    }
-    val lutDf = luts.toDF("qid", "plbl", "lut")
+    }.toDF("qid", "plbl", "lut")
     val labels = probes.map(_._3).distinct
-    val asim9 = round((0 until M).map(m =>
-      element_at(element_at(col("lut"), m + 1), col(s"code$m"))).reduceLeft(_ + _), 9)
-    val topk = udaf(new graft.functions.TopK.TopKAgg(topN))
-    readCodes(spark, path)
+    adcTopK(CodeTable.read(spark, path)
       .filter(col(partCol).isin(labels: _*))
-      .join(broadcast(lutDf), col(partCol) === col("plbl"))
-      .select(col("qid"), col("vec_id"), asim9.as("a9"))
-      .groupBy("qid")
-      .agg(topk(col("a9"), col("vec_id")).as("top"))
-      .select(col("qid"), explode(col("top")).as("r"))
-      .select(col("qid"), col("r.id").as("vec_id"),
-        round(col("r.ord"), 4).as("asim"))
+      .join(broadcast(lutDf), col(partCol) === col("plbl")), topN)
   }
 
   /** Forget vectors — the GDPR/takedown lifecycle step for the vector
     * family (a user's embeddings are personal data exactly like their
     * text): shared [[Tombstones]] delete-vector semantics keyed on
     * `vec_id`. O(deletes) per request; every query path reads through the
-    * live view ([[readCodes]]) so forgotten vec_ids stop ranking
+    * live view ([[CodeTable.read]]) so forgotten vec_ids stop ranking
     * immediately; physical reclamation rides the tombstone-aware
     * [[IndexMaintenance.compact]] (for [[IvfPqIndex]]'s partitioned
     * layout, with partitionCols = Seq("list") — the rewrite preserves the
@@ -200,25 +205,13 @@ object PqIndex {
   def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
     Tombstones.forget(spark, path, ids, idCol = "vec_id")
 
-  /** Stored-table read for querying: the tombstone-aware LIVE view
-    * (forgotten vec_ids anti-joined out — [[forget]]), with SET semantics
-    * restored before any ranking. Build/ingest write each vector once,
-    * but a STREAMED table's at-least-once appends can replay
-    * byte-identical rows ([[ingestStream]] scaladoc), and a duplicated
-    * row would occupy two top-k slots — the dedup is an all-column
-    * dropDuplicates (duplicates are byte-identical by construction), a
-    * map-side-combined exchange of M-byte rows.
-    */
-  private[operators] def readCodes(spark: SparkSession, path: String): DataFrame =
-    Tombstones.live(spark, path, idCol = "vec_id").dropDuplicates()
-
   /** Approximate top-N for one probe, entirely from the STORED code table:
     * the plan scans the code parquet — no embedding column, no sub-vector
     * math, no re-encoding.
     */
   def query(spark: SparkSession, path: String,
             lut: Array[Array[Double]], topN: Int): DataFrame =
-    adcRank(readCodes(spark, path), lut, topN)
+    adcRank(CodeTable.read(spark, path), lut, topN)
 
   /** [[query]] restricted by a metadata predicate — over a
     * [[buildPartitioned]] table the predicate on the partition column
@@ -227,7 +220,7 @@ object PqIndex {
     */
   def queryWhere(spark: SparkSession, path: String, lut: Array[Array[Double]],
                  topN: Int, pred: org.apache.spark.sql.Column): DataFrame =
-    adcRank(readCodes(spark, path).filter(pred), lut, topN)
+    adcRank(CodeTable.read(spark, path).filter(pred), lut, topN)
 
   /** Answer a BATCH of probes in ONE plan — `(qid, vec_id, asim)` rows,
     * per-qid top-N, byte-identical per qid to [[query]] (VERDICT r10
@@ -235,221 +228,15 @@ object PqIndex {
     * probes/trigger). One code-table scan serves every probe: the per-qid
     * LUTs broadcast as a tiny literal relation (M*KC doubles a probe),
     * each M-byte code row scores against all of them in the scan stage,
-    * and per-qid top-N is the bounded mergeable [[graft.functions.TopK]]
-    * Aggregator — map-side partials reduce each task's slice to <= N rows
-    * per qid BEFORE the exchange, so the shuffle carries O(N * probes *
-    * tasks) rows however big the stored table is. Same total order as
-    * [[adcRank]] ((a9 desc, vec_id) — ties cannot diverge), same 9-dp /
-    * 4-dp lattice.
+    * and [[adcTopK]] keeps each qid's top-N.
     */
-  // ——— versioned lifecycle with RETRAIN (r17 verdict missing #3) ———
-  //
-  // The flat lifecycle above freezes its codebook by contract — correct
-  // for replay-safety, but distribution drift degrades recall with no
-  // remedy short of a hand-rolled rebuild (FAISS users reindex on exactly
-  // this cadence). The versioned lifecycle stores codes UNDER VERSION
-  // DIRECTORIES with the codebook persisted beside each version's codes:
-  //
-  //   path/v=N/codes      the code table encoded under codebook N
-  //   path/v=N/_codebook  that codebook (cid, float vector rows)
-  //   path/_graft_pq_current   the current version (atomic flip)
-  //   path/_tombstones    ROOT-level forget vectors — they outlive retrain
-  //   path/_reader_pins/...  reader snapshot pins ([[withSnapshot]])
-  //
-  // [[retrain]] trains on the CURRENT live corpus, encodes it under
-  // v = N+1, flips the marker, and GCs superseded versions that no
-  // unexpired pin references — readers bracketed by [[withSnapshot]] keep
-  // a consistent (codebook, codes) pair across any concurrent retrain
-  // (the Scd2Dim.withSnapshot pin discipline, whole-version-granular
-  // here because a retrain replaces the whole artifact by design).
-
-  /** Pin TTL — a crashed bracket cannot block version GC forever. */
-  val PinTtlMs: Long = 10 * 60 * 1000L
-
-  /** Deterministic per-subspace k-means codebook ([[IvfIndex.train]]'s
-    * discipline per 16-dim subspace): hash-chosen sample (order by
-    * xxhash64(vec_id), capped), first-KC init, `iters` Lloyd steps under
-    * L2 with ties to the smaller centroid id, empty clusters keep their
-    * centroid. Returns the [[codebookOf]] shape — KC full-dim rows whose
-    * m-th slice is subspace m's c-th centroid — so [[encode]]/[[adcLut]]
-    * apply unchanged.
-    */
-  def trainCodebook(emb: DataFrame, iters: Int = 5,
-                    sampleCap: Int = 4096): Array[Seq[Float]] = {
-    val sample: Array[Array[Float]] = emb
-      .select(col("embedding").as("v"), xxhash64(col("vec_id")).as("h"))
-      .orderBy("h").limit(sampleCap)
-      .collect().map(_.getSeq[Float](0).toArray)
-    require(sample.length >= KC,
-      s"pq train: need at least $KC vectors, got ${sample.length}")
-    val subCents: IndexedSeq[IndexedSeq[Array[Double]]] = (0 until M).map { m =>
-      val sub = sample.map(v =>
-        v.slice(m * SubDim, (m + 1) * SubDim).map(_.toDouble))
-      var cents: IndexedSeq[Array[Double]] = sub.take(KC).map(_.clone).toIndexedSeq
-      var it = 0
-      while (it < iters) {
-        val sums = Array.fill(KC)(new Array[Double](SubDim))
-        val counts = new Array[Int](KC)
-        sub.foreach { v =>
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < KC) {
-            var d = 0.0; var i = 0
-            while (i < SubDim) { val t = v(i) - cents(c)(i); d += t * t; i += 1 }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          val s = sums(best)
-          var i = 0
-          while (i < SubDim) { s(i) += v(i); i += 1 }
-          counts(best) += 1
-        }
-        cents = IndexedSeq.tabulate(KC) { c =>
-          if (counts(c) == 0) cents(c)
-          else sums(c).map(_ / counts(c))
-        }
-        it += 1
-      }
-      cents
-    }
-    Array.tabulate(KC)(c =>
-      (0 until M).flatMap(m => subCents(m)(c).map(_.toFloat)).toSeq)
-  }
-
-  private def currentMarkerPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_pq_current")
-
-  private def codesDir(path: String, v: Int) = s"$path/v=$v/codes"
-  private def cbDir(path: String, v: Int) = s"$path/v=$v/cb"
-
-  /** The live version — fails loudly on a non-versioned root. */
-  def currentVersion(spark: SparkSession, path: String): Int =
-    Ledger.readInt(spark, currentMarkerPath(path)).getOrElse(throw new IllegalArgumentException(
-      s"no version marker at $path — not a versioned PQ index (buildVersioned first)"))
-
-  private def flipCurrent(spark: SparkSession, path: String, v: Int): Unit =
-    Ledger.write(spark, currentMarkerPath(path), v.toString)
-
-  private def saveCodebook(spark: SparkSession, path: String, v: Int,
-                           cb: Array[Seq[Float]]): Unit = {
-    import spark.implicits._
-    cb.zipWithIndex.map { case (vec, c) => (c + 1, vec) }.toSeq
-      .toDF("cid", "vec").coalesce(1)
-      .write.mode("overwrite").parquet(cbDir(path, v))
-  }
-
-  /** The PERSISTED codebook of a version — what makes the frozen-contract
-    * explicit state instead of caller convention, and what a pinned
-    * reader resolves consistently with its codes.
-    */
-  def loadCodebook(spark: SparkSession, path: String, v: Int): Array[Seq[Float]] =
-    spark.read.parquet(cbDir(path, v)).orderBy("cid")
-      .select("vec").collect().map(_.getSeq[Float](0))
-
-  /** Train on the corpus and seed version 1. */
-  def buildVersioned(emb: DataFrame, path: String): Unit = {
-    val spark = emb.sparkSession
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(new org.apache.hadoop.fs.Path(path), true)
-    val cb = trainCodebook(emb)
-    encode(emb, cb).write.mode("overwrite").parquet(codesDir(path, 1))
-    saveCodebook(spark, path, 1, cb)
-    flipCurrent(spark, path, 1)
-  }
-
-  /** Encode a delta against the CURRENT version's persisted codebook and
-    * append under that version — after a [[retrain]], appends continue
-    * under the new version with no caller change (spec-pinned).
-    */
-  def ingestVersioned(emb: DataFrame, path: String): Unit = {
-    val spark = emb.sparkSession
-    val v = currentVersion(spark, path)
-    encode(emb, loadCodebook(spark, path, v))
-      .write.mode("append").parquet(codesDir(path, v))
-  }
-
-  /** Forget vectors across ALL versions — root-level tombstones, so a
-    * later retrain cannot resurrect a forgotten id even if the caller's
-    * corpus frame still carries it ([[retrain]] anti-joins them out
-    * before encoding).
-    */
-  def forgetVersioned(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    Tombstones.forget(spark, path, ids, idCol = "vec_id")
-
-  private def readCodesVersioned(spark: SparkSession, path: String, v: Int): DataFrame =
-    Tombstones.applyTo(spark.read.parquet(codesDir(path, v)), spark, path,
-      idCol = "vec_id").dropDuplicates()
-
-  /** Top-N from a version's stored codes + persisted codebook (current
-    * version by default). Probe encoding and ranking are [[adcRank]]'s
-    * lattice verbatim.
-    */
-  def queryVersioned(spark: SparkSession, path: String, probe: Seq[Float],
-                     topN: Int, version: Int = -1): DataFrame = {
-    val v = if (version > 0) version else currentVersion(spark, path)
-    adcRank(readCodesVersioned(spark, path, v),
-      adcLut(probe, loadCodebook(spark, path, v)), topN)
-  }
-
-  /** Snapshot bracket: runs `f` against the current version under a
-    * reader pin ([[Ledger.withPin]]) — a concurrent [[retrain]] can flip
-    * and GC freely, but the pinned version's codes AND codebook survive
-    * until the bracket exits (or [[PinTtlMs]] expires — a crashed reader
-    * cannot block reclamation forever, the Scd2Dim pin contract).
-    */
-  def withSnapshot[A](spark: SparkSession, path: String)(f: Int => A): A =
-    Ledger.withPin(spark, path)(() => currentVersion(spark, path))(f)
-
-  /** Retrain on the CURRENT live corpus and atomically swap: train a new
-    * codebook on `emb` (root tombstones anti-joined out first — a
-    * forgotten vector must not re-enter through the retrain), encode
-    * under version N+1, flip the marker, GC superseded versions no
-    * unexpired pin references. `emb` must be the corpus whose vectors the
-    * index currently serves (the index stores lossy codes; only the raw
-    * embeddings can re-encode — [[AggIndex.forgetUsers]]'s
-    * recompute-needs-the-log argument on the vector side). Readers see
-    * either the old consistent pair or the new one, never a mix: the
-    * marker flip is the only publication point, and bracketed readers
-    * pin whatever they resolved. Returns the new version id.
-    */
-  def retrain(spark: SparkSession, path: String, emb: DataFrame): Int = {
-    val v = currentVersion(spark, path)
-    val nv = v + 1
-    val live = Tombstones.applyTo(emb, spark, path, idCol = "vec_id")
-    val cb = trainCodebook(live)
-    encode(live, cb).write.mode("overwrite").parquet(codesDir(path, nv))
-    saveCodebook(spark, path, nv, cb)
-    flipCurrent(spark, path, nv)
-    // GC: versions below the new current that no live pin references
-    val keep = Ledger.livePins(spark, path, PinTtlMs).toSet + nv
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(root).iterator
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v="))
-      .map(st => (st.getPath, st.getPath.getName.stripPrefix("v=").toInt))
-      .filter { case (_, k) => k < nv && !keep.contains(k) }
-      .foreach { case (p, _) => fs.delete(p, true) }
-    nv
-  }
-
   def queryBatch(spark: SparkSession, path: String,
                  probes: Seq[(Long, Seq[Float])], cb: Array[Seq[Float]],
                  topN: Int): DataFrame = {
     import spark.implicits._
-    val luts = probes.map { case (qid, pv) =>
+    val lutDf = probes.map { case (qid, pv) =>
       (qid, adcLut(pv, cb).map(_.toSeq).toSeq)
-    }
-    val lutDf = luts.toDF("qid", "lut")
-    val asim9 = round((0 until M).map(m =>
-      element_at(element_at(col("lut"), m + 1), col(s"code$m"))).reduceLeft(_ + _), 9)
-    val topk = udaf(new graft.functions.TopK.TopKAgg(topN))
-    readCodes(spark, path).crossJoin(broadcast(lutDf))
-      .select(col("qid"), col("vec_id"), asim9.as("a9"))
-      .groupBy("qid")
-      .agg(topk(col("a9"), col("vec_id")).as("top"))
-      .select(col("qid"), explode(col("top")).as("r"))
-      .select(col("qid"), col("r.id").as("vec_id"),
-        round(col("r.ord"), 4).as("asim"))
+    }.toDF("qid", "lut")
+    adcTopK(CodeTable.read(spark, path).crossJoin(broadcast(lutDf)), topN)
   }
 }

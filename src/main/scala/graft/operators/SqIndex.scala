@@ -49,7 +49,7 @@ object SqIndex {
   /** Train the quantizer: the corpus-wide max absolute component — ONE
     * order-independent reduction over the embedding column (a full pass at
     * build time, the same budget as PQ's encode pass; on an append-only
-    * corpus the frozen scale never retrains).
+    * corpus the frozen scale never changes).
     */
   def train(emb: DataFrame, vecCol: String = "embedding"): Double =
     emb.agg(max(expr(
@@ -118,19 +118,18 @@ object SqIndex {
     encode(emb, scale).write.mode("append").parquet(path)
   }
 
-  /** Streamed ingest — [[PqIndex.ingestStream]]'s discipline for the SQ8
-    * table: embeddings stream in, every micro-batch encodes against the
-    * FROZEN scale (trained batch-side before the stream starts — the
-    * frozen-quantizer contract: stream-time codes mean what build-time
-    * codes meant; out-of-range values clamp) and appends. The `_scale`
-    * sidecar is published BEFORE the stream starts so readers can query
-    * the growing table mid-stream.
+  /** Streamed ingest ([[CodeTable.appendStream]]): every micro-batch
+    * encodes against the FROZEN scale (trained batch-side before the
+    * stream starts — stream-time codes mean what build-time codes meant;
+    * out-of-range values clamp) and appends. The `_scale` sidecar is
+    * published BEFORE the stream starts so readers can query the growing
+    * table mid-stream.
     */
   def ingestStream(emb: DataFrame, scale: Double, path: String, checkpoint: String)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = emb.sparkSession
     // frozen-quantizer guard: a pre-existing code table's rows were
-    // encoded against ITS scale — silently republishing a retrained one
+    // encoded against ITS scale — silently republishing a different one
     // would rank old and new codes on different lattices. Batch ingest()
     // reads the stored scale for the same reason.
     val sd = new org.apache.hadoop.fs.Path(scaleDir(path))
@@ -138,14 +137,9 @@ object SqIndex {
       val stored = readScale(spark, path)
       require(stored == scale,
         s"scale $scale does not match the frozen _scale $stored at $path — " +
-          "rebuild the index to retrain, never re-scale in place")
+          "rebuild the index under the new scale, never re-scale in place")
     } else writeScale(spark, scale, path)
-    encode(emb, scale).writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
-        df.write.mode("append").parquet(path)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    CodeTable.appendStream(encode(emb, scale), path, Nil, checkpoint)
   }
 
   /** Forget vectors — the shared [[Tombstones]] delete-vector lifecycle on
@@ -154,12 +148,6 @@ object SqIndex {
     */
   def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
     Tombstones.forget(spark, path, ids, idCol = "vec_id")
-
-  /** The tombstone-aware live view with SET semantics restored (same
-    * at-least-once-replay rationale as [[PqIndex.readCodes]]).
-    */
-  private def readCodes(spark: SparkSession, path: String): DataFrame =
-    Tombstones.live(spark, path, idCol = "vec_id").dropDuplicates()
 
   /** Rank a codes relation against one quantized probe: exact BIGINT dot
     * product via zip_with + aggregate (codegen, no explode), total
@@ -188,6 +176,6 @@ object SqIndex {
   def query(spark: SparkSession, path: String, probe: Seq[Float],
             topN: Int): DataFrame = {
     val scale = readScale(spark, path)
-    rank(readCodes(spark, path), encodeVec(probe, scale), topN)
+    rank(CodeTable.read(spark, path), encodeVec(probe, scale), topN)
   }
 }

@@ -376,7 +376,7 @@ object StreamingQueries {
         emb, cents, cb, s"$base/idx", s"$base/cp")
       try q.processAllAvailable() finally q.stop()
       // dropDuplicates: at-least-once replays append byte-identical rows
-      // (frozen quantizers); set semantics restored as in readCodes
+      // (frozen quantizers); set semantics restored as in CodeTable.read
       s.read.parquet(s"$base/idx")
         .dropDuplicates("vec_id")
         .select(col("vec_id") +: col("list").cast("int").as("list") +:

@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
@@ -118,8 +119,12 @@ class IvfPqIndexSpec extends SparkSpec {
       .schema(emb.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$base/delta")
-    val q = IvfPqIndex.ingestStreamResidual(st, trained, cbR, s"$base/idx", s"$base/cp")
-    try q.processAllAvailable() finally q.stop()
+    val jobs = JobCount.of(spark) {
+      val q = IvfPqIndex.ingestStreamResidual(st, trained, cbR, s"$base/idx", s"$base/cp")
+      try q.processAllAvailable() finally q.stop()
+    }
+    // three triggers (one delta file each), one append job apiece
+    assert(jobs == 3, s"the streamed ingest ran $jobs Spark jobs, not 3")
     val scratch = Files.createTempDirectory("graft_ivfpq_st_scratch_").toString
     IvfPqIndex.buildResidual(emb, trained, cbR, scratch)
     assert(spark.read.parquet(s"$base/idx").orderBy("vec_id").collect().toSeq ==

@@ -54,8 +54,7 @@ class LedgerSpec extends SparkSpec {
     }
     val cases: Seq[(String, String => Any)] = Seq(
       "_graft_committed_batch" -> (r => Ledger.committed(spark, r)),
-      "_graft_layout" -> (r => AggIndex.layoutVersion(spark, r)),
-      "_graft_pq_current" -> (r => PqIndex.currentVersion(spark, r)))
+      "_graft_layout" -> (r => AggIndex.layoutVersion(spark, r)))
     for ((name, readIt) <- cases; body <- Seq("", "x7")) {
       val root = corrupt(name, body)
       val e = intercept[IllegalStateException](readIt(root))

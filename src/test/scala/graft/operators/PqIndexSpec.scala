@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -58,8 +59,12 @@ class PqIndexSpec extends SparkSpec {
       "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT")
     val streamed = spark.readStream.schema(embSchema)
       .option("pathGlobFilter", "embeddings.parquet").parquet(sfDir)
-    val q = PqIndex.ingestStream(streamed, cb, s"$base/idx", s"$base/cp")
-    try q.processAllAvailable() finally q.stop()
+    val jobs = JobCount.of(spark) {
+      val q = PqIndex.ingestStream(streamed, cb, s"$base/idx", s"$base/cp")
+      try q.processAllAvailable() finally q.stop()
+    }
+    // one trigger over the one embeddings file: one append job
+    assert(jobs == 1, s"the streamed ingest ran $jobs Spark jobs, not 1")
 
     val twin = Files.createTempDirectory("graft_pqidx_twin_").toString
     PqIndex.build(emb, cb, twin)

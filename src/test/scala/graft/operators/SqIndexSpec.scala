@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -76,6 +77,26 @@ class SqIndexSpec extends SparkSpec {
     val survivors = spark.read.parquet(full)
     assert(survivors.filter(col("vec_id") % 2 === 0).count() == 0,
       "tombstoned code rows must be physically reclaimed")
+  }
+
+  test("streamed ingest produces a table the batch query answers from identically") {
+    val base = Files.createTempDirectory("graft_sqidx_stream_").toString
+    val scale = SqIndex.train(emb)
+    val streamed = spark.readStream
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(
+        "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"))
+      .option("pathGlobFilter", "embeddings.parquet").parquet(sfDir)
+    val jobs = JobCount.of(spark) {
+      val q = SqIndex.ingestStream(streamed, scale, s"$base/idx", s"$base/cp")
+      try q.processAllAvailable() finally q.stop()
+    }
+    // the `_scale` sidecar write, then one trigger's append job
+    assert(jobs == 2, s"the streamed ingest ran $jobs Spark jobs, not 2")
+
+    val twin = Files.createTempDirectory("graft_sqidx_twin_").toString
+    SqIndex.build(emb, scale, twin)
+    assert(SqIndex.query(spark, s"$base/idx", probeVec, topN = 5).collect().toSeq ==
+      SqIndex.query(spark, twin, probeVec, topN = 5).collect().toSeq)
   }
 
   test("ingestStream refuses to re-scale an existing code table") {

@@ -52,7 +52,7 @@ class TransformerSpec extends SparkSpec {
         concat(lit("row "), col("id").cast("string")).as("s"))
       .coalesce(1).write.parquet(s"$base/source")
     val t = new TableTransformer(spark, s"$base/source", PathConfig(base), "spectrum_jobs", "t")
-    val jobs = JobCount.of(spark.sparkContext) {
+    val jobs = JobCount.of(spark) {
       t.exportToCsv()
       t.convertToParquet()
       t.createTable()
