@@ -64,7 +64,7 @@ private[operators] object BatchBuckets {
     * the batch's rows in it) is absent OR unreadable — pre-r14 indexes,
     * the crash window (including a dir created by the committer with no
     * data file landed, which the parquet reader rejects as footerless),
-    * fall back to the caller's discovery scan. Self-healing by contract:
+    * fall back to [[probe]]'s discovery scan. Self-healing by contract:
     * no manifest state may fail a probe.
     */
   def read(spark: SparkSession, path: String, batch: Int): Option[Array[Int]] = {
@@ -129,4 +129,93 @@ private[operators] object BatchBuckets {
       use(r)
     } finally r.unpersist()
   }
+
+  /** The probe side of batch `batch`: its `rows`, the index rows
+    * `visible` to it ([[IndexStream.visibleTo]]), and the bb ids the
+    * rows land in. `held` rows are the caller's in-memory batch rows.
+    */
+  final class Probe(val rows: DataFrame, val held: Boolean, val visible: DataFrame,
+                    ids: => Array[Int]) {
+    /** A bounded collect (<= BB ids), run only when a caller prunes by it. */
+    lazy val buckets: Array[Int] = ids
+
+    /** The visible rows of buckets `ids`: the stored side, restricted at
+      * planning time (PartitionFilters) to the buckets a probe can hit.
+      */
+    def stored(ids: Array[Int]): DataFrame = inBuckets(visible, ids)
+  }
+
+  /** THE probe side of the `bb=` indexes. Held rows are used as they
+    * are, with tombstones anti-joined: a tombstoned entity re-arriving in
+    * a micro-batch must stay hidden until compaction retires its
+    * tombstone, exactly as on the stored path. Otherwise the batch is
+    * read back, pruned to the buckets its manifest lists ([[read]]),
+    * else to those the counted legacy index-wide scan finds (artifacts
+    * older than the manifest, and its crash window, only).
+    */
+  def probe(spark: SparkSession, path: String, batch: Int,
+            held: Option[DataFrame]): Probe = {
+    val visible = IndexStream.visibleTo(spark, path, batch, "key")
+    held match {
+      case Some(r) =>
+        val live = Tombstones.applyTo(r, spark, path, "key")
+        new Probe(live, held = true, visible, distinctBuckets(live))
+      case None =>
+        val ids = read(spark, path, batch).getOrElse {
+          discoveryScans.incrementAndGet()
+          distinctBuckets(visible.filter(col("batch") === batch))
+        }
+        new Probe(inBuckets(visible, ids).filter(col("batch") === batch),
+          held = false, visible, ids)
+    }
+  }
+
+  private def distinctBuckets(rows: DataFrame): Array[Int] =
+    rows.select("bb").distinct().collect().map(_.getInt(0))
+
+  private def inBuckets(rows: DataFrame, ids: Array[Int]): DataFrame =
+    rows.filter(col("bb").isin(ids.map(Int.box): _*))
+
+  /** The normalised pair of a [[IndexStream.laterMember]] join of two
+    * `(key, name)` sides: `(a_key, b_key, a_name, b_name)`, a_key < b_key
+    * whichever side each member came from.
+    */
+  def pair(joined: DataFrame): DataFrame = {
+    val first = col("a.key") < col("b.key")
+    joined.select(
+      when(first, col("a.key")).otherwise(col("b.key")).as("a_key"),
+      when(first, col("b.key")).otherwise(col("a.key")).as("b_key"),
+      when(first, col("a.name")).otherwise(col("b.name")).as("a_name"),
+      when(first, col("b.name")).otherwise(col("a.name")).as("b_name"))
+  }
+
+  /** Streamed ingest AND screen of a `bb=` index: per trigger, `kernel`
+    * runs over the batch once, its rows and manifest land under the real
+    * pinned batch id ([[appendBatch]]), and `answer(batchDf, rows, b)` —
+    * the trigger's verified pairs, probed with the in-memory rows, never
+    * an index re-read — lands in `outPath`. At-least-once replay safe:
+    * replayed rows are candidate-insensitive and `answer` must be
+    * deterministic per batch.
+    */
+  def screenStream(entities: DataFrame, path: String, outPath: String,
+                   checkpoint: String)(kernel: DataFrame => DataFrame)
+                  (answer: (DataFrame, DataFrame, Int) => DataFrame)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    IndexStream.appendWithBatchIds(entities, path, checkpoint,
+        autoCompactFragments = 0) { (df, b) =>
+      appendBatch(kernel(df), path, b, use = rows =>
+        IndexStream.append(answer(df, rows, b), outPath, b))
+    }
+
+  /** Merge fragment files and reclaim tombstoned rows
+    * ([[IndexMaintenance.compact]]), keeping the `bb=` layout AND laying
+    * each directory's rows out batch-clustered:
+    * every probe filters `batch = N` inside its pruned buckets, and over
+    * a batch-sorted rewrite that pushed filter skips the files whose
+    * min/max exclude N instead of decoding all history (the measured
+    * ~1/batches scan-rows win, IndexMaintenanceSpec).
+    */
+  def compact(spark: SparkSession, path: String): Unit =
+    IndexMaintenance.compact(spark, path, partitionCols = Seq("bb"),
+      sortCols = Seq("batch"))
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted parity-block entity index — the EDIT-DISTANCE cell of the
@@ -82,11 +82,7 @@ object EntityBlockIndex {
     * they cannot drift).
     */
   def verifyTypo(cands: DataFrame, tau: Int = 1): DataFrame =
-    cands
-      .dropDuplicates("a_key", "b_key")
-      .withColumn("dist", levenshtein(col("a_name"), col("b_name")).cast("long"))
-      .filter(col("dist") <= tau)
-      .select(col("a_key"), col("b_key"), col("dist"))
+    verify(cands, tau, levenshtein(col("a_name"), col("b_name")))
 
   /** [[verifyTypo]] under the TRANSPOSITION-AS-ONE-EDIT metric
     * ([[graft.functions.OsaDistance]], the codegen OSA kernel) — the
@@ -109,13 +105,15 @@ object EntityBlockIndex {
       s"verifyOsa supports tau <= 1 only (got $tau): tau = 1 deletion " +
         "blocking is incomplete for OSA distance >= 2, and OSA diverges " +
         "from unrestricted Damerau-Levenshtein there")
+    verify(cands, tau, graft.functions.EditDistances.osa(col("a_name"), col("b_name")))
+  }
+
+  private def verify(cands: DataFrame, tau: Int, distance: Column): DataFrame =
     cands
       .dropDuplicates("a_key", "b_key")
-      .withColumn("dist",
-        graft.functions.EditDistances.osa(col("a_name"), col("b_name")).cast("long"))
+      .withColumn("dist", distance.cast("long"))
       .filter(col("dist") <= tau)
       .select(col("a_key"), col("b_key"), col("dist"))
-  }
 
   /** Block the base master list once; write the index as batch 0 under
     * the `bb=` bucket layout.
@@ -136,73 +134,23 @@ object EntityBlockIndex {
     * index: normalized `(a_key, b_key, a_name, b_name)` with a_key <
     * b_key, where the pair involves a batch-`batch` entity matched
     * against earlier batches or lower-key same-batch peers (so each pair
-    * surfaces exactly once, at its later member's arrival). The
-    * SHUFFLE_HASH hint makes the batch-sized delta the hash-build side
-    * (broadcasting the index side would ship the master list's blocks to
-    * every task); tombstoned entities are anti-joined out on BOTH sides.
-    * DISTINCT on the pair key folds both-parity agreement AND replayed
-    * index rows — the probe is duplicate-insensitive end to end.
-    */
-  def candidates(spark: SparkSession, path: String, batch: Int): DataFrame =
-    candidates(spark, path, batch, batchBlocks = None)
-
-  /** As [[candidates]], with the probe side supplied IN MEMORY when the
-    * caller just computed it ([[screenStream]] holds the micro-batch's
-    * blocks — re-reading them from the index would pay a full footer
-    * listing per trigger just to rediscover rows the trigger wrote).
-    * The blocking kernel is deterministic, so the in-memory rows equal
-    * the just-appended ones byte-for-byte.
+    * surfaces exactly once, at its later member's arrival —
+    * [[IndexStream.laterMember]]). The probe side is the [[BatchBuckets
+    * .probe]] rows — `batchBlocks` IN MEMORY when the caller just
+    * computed them ([[screenStream]]), else the batch read back — and
+    * the stored side is partition-pruned to their buckets (<= min(2 x
+    * batch size, BB) of BB directories). Tombstoned entities are
+    * anti-joined out on BOTH sides. DISTINCT on the pair key folds
+    * both-parity agreement AND replayed index rows — the probe is
+    * duplicate-insensitive end to end.
     */
   def candidates(spark: SparkSession, path: String, batch: Int,
-                 batchBlocks: Option[DataFrame]): DataFrame = {
-    // the in-memory probe side honors the forget contract exactly like
-    // the stored one (r13 ADVICE): a tombstoned entity re-arriving in a
-    // micro-batch must stay hidden until compaction retires its
-    // tombstone, so the supplied blocks are anti-joined against the
-    // delete vectors BEFORE probing — both candidate paths filter both
-    // join sides identically.
-    val batchLive = batchBlocks.map(Tombstones.applyTo(_, spark, path, "key"))
-    // batch <= probe pre-filter: the disjunctive later-member condition
-    // below is not pushable, so later batches would otherwise shuffle
-    // only to be dropped in the join (SignatureIndex.probe's argument)
-    val live = Tombstones.live(spark, path, idCol = "key")
-      .filter(col("batch") <= batch)
-    // bucket pruning: only stored blocks sharing a bb= bucket with some
-    // batch block can satisfy the equi-join — restrict the scan to the
-    // batch's buckets at planning time (PartitionFilters, spec-pinned).
-    // Bounded collect: <= min(2 x batch size, BB) distinct bucket ids.
-    // Discovery order: the in-memory blocks when provided (streamed
-    // path), else the per-batch `_batch_buckets` manifest ([[
-    // BatchBuckets]] — O(batches) tiny files), else the legacy eager
-    // index-wide scan (pre-r14 artifacts / manifest crash window only,
-    // counted so specs pin it never fires on a manifested batch).
-    val buckets = batchLive match {
-      case Some(b) => b.select("bb").distinct().collect().map(_.getInt(0))
-      case None => BatchBuckets.read(spark, path, batch).getOrElse {
-        BatchBuckets.discoveryScans.incrementAndGet()
-        live.filter(col("batch") === batch)
-          .select("bb").distinct().collect().map(_.getInt(0))
-      }
-    }
-    val idx = live.filter(col("bb").isin(buckets.map(Int.box): _*))
-    // the plan's own batch-row read stays bucket-pruned too (it is a
-    // subset of its buckets by construction)
-    val a = batchLive.getOrElse(idx.filter(col("batch") === batch))
-      .select("key", "name", "len", "part", "v")
-      .hint("SHUFFLE_HASH").as("a")
-    val b = idx.as("b")
-    val first = col("a.key") < col("b.key")
-    a.join(b,
+                 batchBlocks: Option[DataFrame] = None): DataFrame = {
+    val p = BatchBuckets.probe(spark, path, batch, batchBlocks)
+    BatchBuckets.pair(IndexStream.laterMember(
+        p.rows.select("key", "name", "len", "part", "v"), p.stored(p.buckets), batch, "key")(
         col("a.part") === col("b.part") && col("a.v") === col("b.v") &&
-          col("a.len") === col("b.len") &&
-          col("a.key") =!= col("b.key") &&
-          (col("b.batch") < batch ||
-            (col("b.batch") === batch && col("b.key") < col("a.key"))))
-      .select(
-        when(first, col("a.key")).otherwise(col("b.key")).as("a_key"),
-        when(first, col("b.key")).otherwise(col("a.key")).as("b_key"),
-        when(first, col("a.name")).otherwise(col("b.name")).as("a_name"),
-        when(first, col("b.name")).otherwise(col("a.name")).as("b_name"))
+          col("a.len") === col("b.len")))
       .dropDuplicates("a_key", "b_key")
   }
 
@@ -222,14 +170,8 @@ object EntityBlockIndex {
     */
   def screenStream(entities: DataFrame, path: String, outPath: String,
                    checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery =
-    IndexStream.appendWithBatchIds(entities, path, checkpoint,
-        autoCompactFragments = 0) { (df, b) =>
-      // the shared discipline persists the trigger's blocks across the
-      // append, the manifest, AND the probe (`use`) — one kernel run,
-      // no per-trigger index re-read to rediscover just-written rows
-      BatchBuckets.appendBatch(blocks(df), path, b, use = blk =>
-        IndexStream.append(
-          verifyTypo(candidates(df.sparkSession, path, b, Some(blk))), outPath, b))
+    BatchBuckets.screenStream(entities, path, outPath, checkpoint)(blocks) { (df, blk, b) =>
+      verifyTypo(candidates(df.sparkSession, path, b, Some(blk)))
     }
 
   /** Right-to-be-forgotten: tombstone the entity — candidates stop
@@ -239,9 +181,9 @@ object EntityBlockIndex {
   def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
     Tombstones.forget(spark, path, ids, idCol = "key")
 
-  /** Merge fragment files and reclaim tombstoned rows, preserving the
-    * `bb=` bucket layout ([[IndexMaintenance.compact]]).
+  /** Merge fragment files and reclaim tombstoned rows
+    * ([[BatchBuckets.compact]]).
     */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexMaintenance.compact(spark, path, partitionCols = Seq("bb"))
+    BatchBuckets.compact(spark, path)
 }

@@ -162,47 +162,22 @@ object FastSsIndex {
     BatchBuckets.appendBatch(sigsFor(entities, tau), path, batch)
   }
 
-  def candidates(spark: SparkSession, path: String, batch: Int): DataFrame =
-    candidates(spark, path, batch, batchSigs = None)
-
   /** Candidate cross-length pairs for batch `batch`, entirely from
-    * stored state: the batch's signature rows (supplied IN MEMORY by
-    * [[screenStream]], else read back bucket-pruned) equi-join the
-    * stored signatures on the 8-byte hash, the later-member rule making
-    * each pair surface exactly once. A collision implies true edit
-    * distance <= 2, so candidate volume is output-shaped by
-    * construction. Normalized `(a_key, b_key, a_name, b_name)`;
-    * DISTINCT folds multi-signature agreement and replayed rows.
+    * stored state: the batch's signature rows ([[BatchBuckets.probe]] —
+    * `batchSigs` IN MEMORY from [[screenStream]], else read back
+    * bucket-pruned) equi-join the stored signatures on the 8-byte hash
+    * under [[IndexStream.laterMember]], so each pair surfaces exactly
+    * once. A collision implies true edit distance <= 2, so candidate
+    * volume is output-shaped by construction. Normalized `(a_key, b_key,
+    * a_name, b_name)`; the fold collapses multi-signature agreement and
+    * replayed rows.
     */
   def candidates(spark: SparkSession, path: String, batch: Int,
-                 batchSigs: Option[DataFrame]): DataFrame = {
-    // in-memory probe side honors the forget contract like the stored
-    // one (r13 ADVICE; [[EntityBlockIndex.candidates]]' rationale):
-    // anti-join the supplied signatures against the delete vectors so a
-    // tombstoned entity re-arriving mid-stream stays hidden.
-    val batchLive = batchSigs.map(Tombstones.applyTo(_, spark, path, "key"))
-    val live = Tombstones.live(spark, path, idCol = "key")
-      .filter(col("batch") <= batch)
-    // bucket pruning: bounded collect, <= min(batch signatures, BB) ids.
-    // Discovery order = [[EntityBlockIndex.candidates]]': in-memory
-    // signatures, else the `_batch_buckets` manifest, else the counted
-    // legacy index-wide scan.
-    val buckets = batchLive match {
-      case Some(b) => b.select("bb").distinct().collect().map(_.getInt(0))
-      case None => BatchBuckets.read(spark, path, batch).getOrElse {
-        BatchBuckets.discoveryScans.incrementAndGet()
-        live.filter(col("batch") === batch)
-          .select("bb").distinct().collect().map(_.getInt(0))
-      }
-    }
+                 batchSigs: Option[DataFrame] = None): DataFrame = {
+    val p = BatchBuckets.probe(spark, path, batch, batchSigs)
     val tau = storedTau(spark, path)
-    val idx = live.filter(col("bb").isin(buckets.map(Int.box): _*))
-    val aRows = batchLive.getOrElse(idx.filter(col("batch") === batch))
-      .select("key", "name", "sig")
-    // later-member rule: each pair surfaces exactly once across batches.
-    val laterMember =
-      col("b.batch") < batch ||
-        (col("b.batch") === batch && col("b.key") < col("a.key"))
+    val idx = p.stored(p.buckets)
+    val aRows = p.rows.select("key", "name", "sig")
     if (tau < 2) {
       // tau = 1: fold (keys, names) directly — a qualifying pair shares
       // at most ~2 signatures, so the fold shuffles <= 2x its output and
@@ -215,17 +190,8 @@ object FastSsIndex {
       // instead of an arbitrary surviving row, so a key ingested twice
       // under different names yields a deterministic candidate row
       // (r16 ADVICE; one-name-per-key remains the documented contract).
-      val a = aRows.hint("SHUFFLE_HASH").as("a")
-      val b = idx.as("b")
-      val first = col("a.key") < col("b.key")
-      a.join(b,
-          col("a.sig") === col("b.sig") &&
-            col("a.key") =!= col("b.key") && laterMember)
-        .select(
-          when(first, col("a.key")).otherwise(col("b.key")).as("a_key"),
-          when(first, col("b.key")).otherwise(col("a.key")).as("b_key"),
-          when(first, col("a.name")).otherwise(col("b.name")).as("a_name"),
-          when(first, col("b.name")).otherwise(col("a.name")).as("b_name"))
+      BatchBuckets.pair(IndexStream.laterMember(aRows, idx, batch, "key")(
+          col("a.sig") === col("b.sig")))
         .groupBy("a_key", "b_key")
         .agg(max(col("a_name")).as("a_name"), max(col("b_name")).as("b_name"))
     } else {
@@ -247,8 +213,6 @@ object FastSsIndex {
         .withColumn("_len", length(col("name")))
         .withColumn("_chsk", expr("aggregate(split(name, ''), 0L, " +
           "(acc, c) -> acc ^ shiftleft(1L, pmod(hash(c), 64)))"))
-      val a = withFeat(aRows).hint("SHUFFLE_HASH").as("a")
-      val b = withFeat(idx).as("b")
       // the pair fold carries 8-BYTE KEYS ONLY (the in-query kernel's
       // shape): at tau = 2 a surviving pair still re-collides on many
       // signatures, so folding keys and re-joining names afterwards
@@ -259,19 +223,17 @@ object FastSsIndex {
       // have landed yet). LATEST BATCH WINS in the projection (max over
       // (batch, name)) so a key re-ingested under a different name reads
       // back deterministically (r16 ADVICE).
-      val pairs = a.join(b,
+      val pairs = IndexStream.laterMember(withFeat(aRows), withFeat(idx), batch, "key")(
           col("a.sig") === col("b.sig") &&
-            col("a.key") =!= col("b.key") &&
             abs(col("a._len") - col("b._len")) <= tau &&
-            expr(s"bit_count(a._chsk ^ b._chsk) <= ${2 * tau}") &&
-            laterMember)
+            expr(s"bit_count(a._chsk ^ b._chsk) <= ${2 * tau}"))
         .select(
           least(col("a.key"), col("b.key")).as("a_key"),
           greatest(col("a.key"), col("b.key")).as("b_key"))
         .dropDuplicates("a_key", "b_key")
-      val names = (batchLive.map(_.select(col("key"), col("name"))
-            .withColumn("batch", lit(batch))).toSeq
-          :+ idx.select(col("key"), col("name"), col("batch")))
+      val held = if (p.held) Seq(p.rows.select(col("key"), col("name"))
+        .withColumn("batch", lit(batch))) else Nil
+      val names = (held :+ idx.select(col("key"), col("name"), col("batch")))
         .reduce(_ unionByName _)
         .groupBy("key")
         .agg(max(struct(col("batch"), col("name")))
@@ -282,14 +244,11 @@ object FastSsIndex {
     }
   }
 
-  /** Streamed ingest AND cross-length screen — [[EntityBlockIndex
-    * .screenStream]]'s discipline with deletion-neighborhood blocking:
-    * per trigger, the batch alone is hashed and appended under a real
-    * pinned batch id, then its verified pairs (exact levenshtein <= 1,
-    * the shared [[EntityBlockIndex.verifyTypo]] lattice) land in
-    * `outPath`. The probe runs with the in-memory batch signatures — no
-    * per-trigger index re-read. At-least-once replay safe
-    * (candidate-insensitive DISTINCT, deterministic verification).
+  /** Streamed ingest AND cross-length screen ([[BatchBuckets
+    * .screenStream]] over deletion-neighborhood blocking): per trigger,
+    * the batch alone is hashed and appended under a real pinned batch
+    * id, then its verified pairs (exact levenshtein <= tau, the shared
+    * [[EntityBlockIndex.verifyTypo]] lattice) land in `outPath`.
     *
     * `emit` post-processes each trigger's verified pairs before they
     * land (given the pairs and the trigger's own batch frame — which may
@@ -304,15 +263,10 @@ object FastSsIndex {
                    emit: (DataFrame, DataFrame) => DataFrame = (pairs, _) => pairs)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     RadiusMarker.claim(entities.sparkSession, path, tau, default = 1)
-    IndexStream.appendWithBatchIds(entities, path, checkpoint,
-        autoCompactFragments = 0) { (df, b) =>
-      // shared discipline ([[BatchBuckets.appendBatch]]): append,
-      // bucket manifest, and probe share one kernel run
-      BatchBuckets.appendBatch(sigsFor(df, tau), path, b, use = sigs =>
-        IndexStream.append(
-          emit(EntityBlockIndex.verifyTypo(
-            candidates(df.sparkSession, path, b, Some(sigs)), tau = tau), df),
-          outPath, b))
+    BatchBuckets.screenStream(entities, path, outPath, checkpoint)(sigsFor(_, tau)) {
+      (df, sigs, b) =>
+        emit(EntityBlockIndex.verifyTypo(
+          candidates(df.sparkSession, path, b, Some(sigs)), tau = tau), df)
     }
   }
 
@@ -322,14 +276,9 @@ object FastSsIndex {
   def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
     Tombstones.forget(spark, path, ids, idCol = "key")
 
-  /** Compaction keeps the `bb=` layout AND lays each directory's rows out
-    * batch-clustered (`sortCols` — r17 verdict missing #5): every
-    * [[candidates]] probe filters `batch = N` inside its pruned buckets,
-    * and over a batch-sorted rewrite that pushed filter skips the files
-    * whose min/max exclude N instead of decoding all history (the
-    * measured ~1/batches scan-rows win, IndexMaintenanceSpec).
+  /** Merge fragment files and reclaim tombstoned rows
+    * ([[BatchBuckets.compact]]).
     */
   def compact(spark: SparkSession, path: String): Unit =
-    IndexMaintenance.compact(spark, path, partitionCols = Seq("bb"),
-      sortCols = Seq("batch"))
+    BatchBuckets.compact(spark, path)
 }

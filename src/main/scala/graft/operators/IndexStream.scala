@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{lit, max}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit, max}
 
 /** Shared foreachBatch append discipline for streaming into a persisted
   * index ([[SignatureIndex]], [[SubstringIndex]], [[MinHashIndex]],
@@ -88,6 +88,36 @@ private[operators] object IndexStream {
       }
     val markerMax = IndexMaintenance.readMaxBatchMarker(spark, path)
     (dataMax ++ markerMax).reduceOption(_ max _).map(_ + 1).getOrElse(0)
+  }
+
+  /** The rows of `path` a probe of batch `batch` sees: the live rows
+    * ([[Tombstones.live]], anti-joined on `idCol`) of batches <= `batch`
+    * — THE one read of every stored similarity index's probe. The bound
+    * is filtered up front because [[laterMember]]'s condition is a
+    * disjunction the optimizer cannot push into the scan: without it a
+    * historical-batch probe would read, explode and shuffle every LATER
+    * batch's rows only to drop them in the join.
+    */
+  def visibleTo(spark: SparkSession, path: String, batch: Int, idCol: String): DataFrame =
+    Tombstones.live(spark, path, idCol).filter(col("batch") <= batch)
+
+  /** The later-member join of a probe of batch `batch`: `probe` (the
+    * batch's rows, aliased `a`) against `stored` (rows [[visibleTo]] the
+    * probe, aliased `b`) under the caller's `on` — its equi-keys and any
+    * extra predicates — plus the rule that surfaces each pair exactly
+    * once, when its later member arrives: `b` comes from an earlier
+    * batch, or from the same batch with a lower `idCol`. Never the same
+    * id: a record re-ingested under a later batch (an upstream that sent
+    * it twice) must not match its own earlier copy. The SHUFFLE_HASH
+    * hint makes the batch-sized probe side the hash-build side
+    * (broadcasting the stored side would ship the whole index to every
+    * task); AQE splits skewed keys at runtime.
+    */
+  def laterMember(probe: DataFrame, stored: DataFrame, batch: Int, idCol: String)
+                 (on: Column): DataFrame = {
+    val (a, b) = (col(s"a.$idCol"), col(s"b.$idCol"))
+    probe.hint("SHUFFLE_HASH").as("a").join(stored.as("b"),
+      on && a =!= b && (col("b.batch") < batch || (col("b.batch") === batch && b < a)))
   }
 
   /** Append `rows` to `path` under batch id `batch` — the plain append of

@@ -159,26 +159,16 @@ object MinHashIndex {
   /** Candidate near-dup pairs for batch `batch`, entirely from the stored
     * index: normalized `(id_a, id_b)` with id_a < id_b, where the pair
     * involves a batch-`batch` doc matched against earlier batches or
-    * lower-id same-batch peers. The SHUFFLE_HASH hint makes the
-    * batch-sized delta the hash-build side (broadcasting the INDEX side
-    * would ship the corpus's bands to every task); AQE splits skewed
-    * buckets. DISTINCT folds multi-band collisions AND replayed index
-    * rows — the probe is duplicate-insensitive end to end.
+    * lower-id same-batch peers ([[IndexStream.laterMember]]). DISTINCT
+    * folds multi-band collisions AND replayed index rows — the probe is
+    * duplicate-insensitive end to end.
     */
   def candidates(spark: SparkSession, path: String, batch: Int): DataFrame = {
-    // batch <= probe pre-filter: same argument as SignatureIndex.probe —
-    // the disjunctive condition below is not pushable, so later batches
-    // would otherwise band and shuffle only to be dropped in the join
-    val idx = Tombstones.live(spark, path).filter(col("batch") <= batch)
+    val idx = IndexStream.visibleTo(spark, path, batch, "doc_id")
       .select(col("doc_id"), col("n"), col("batch"),
         posexplode(col("bands")).as(Seq("band", "bucket")))
-    val a = idx.filter(col("batch") === batch).hint("SHUFFLE_HASH").as("a")
-    val b = idx.as("b")
-    a.join(b,
+    IndexStream.laterMember(idx.filter(col("batch") === batch), idx, batch, "doc_id")(
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") =!= col("b.doc_id") &&
-          (col("b.batch") < batch ||
-            (col("b.batch") === batch && col("b.doc_id") < col("a.doc_id"))) &&
           // integer-rational size prune: jac >= 0.7 bounds |A|/|B| within
           // [0.7, 1/0.7]; exact-safe, no floats
           col("a.n") * 10 >= col("b.n") * 7 && col("b.n") * 10 >= col("a.n") * 7)

@@ -72,83 +72,55 @@ object PassJoinIndex {
   }
 
   /** Candidate long-string pairs for batch `batch`, entirely from stored
-    * state: the batch's entities (supplied IN MEMORY by [[screenStream]],
-    * else read back one-row-per-key from the batch's bucket-pruned
-    * stored rows) generate probe substrings, which equi-join the stored
-    * segment rows on the 8-byte context hash — pruned to the probe
-    * entries' buckets (bounded collect, <= [[BatchBuckets.BB]] ids).
-    * Normalized `(a_key, b_key, a_name, b_name)`; the later-member rule
-    * surfaces each pair once and the deterministic MAX fold collapses
-    * multi-segment agreement and replays.
+    * state: the batch's entities ([[BatchBuckets.probe]] — supplied IN
+    * MEMORY by [[screenStream]], else read back one-row-per-key from the
+    * batch's bucket-pruned stored rows) generate probe substrings, which
+    * equi-join the stored segment rows on the 8-byte context hash —
+    * pruned to the probe ENTRIES' buckets, not the batch rows' (bounded
+    * collect, <= [[BatchBuckets.BB]] ids). Normalized `(a_key, b_key,
+    * a_name, b_name)`; the later-member rule surfaces each pair once and
+    * the deterministic MAX fold collapses multi-segment agreement and
+    * replays.
     */
   def candidates(spark: SparkSession, path: String, batch: Int,
                  batchEnts: Option[DataFrame] = None): DataFrame = {
     val tau = storedTau(spark, path)
-    // in-memory probe side honors the forget contract (the family rule):
-    // a tombstoned entity re-arriving mid-stream stays hidden
-    val batchLive = batchEnts.map(Tombstones.applyTo(_, spark, path, "key"))
-    val live = Tombstones.live(spark, path, idCol = "key")
-      .filter(col("batch") <= batch)
-    val probeSrc = batchLive.map(_.select("key", "name")).getOrElse {
-      // the batch's own stored rows, manifest-pruned ([[BatchBuckets]]
-      // discovery order), folded to one (key, name) per entity
-      val bs = BatchBuckets.read(spark, path, batch).getOrElse {
-        BatchBuckets.discoveryScans.incrementAndGet()
-        live.filter(col("batch") === batch)
-          .select("bb").distinct().collect().map(_.getInt(0))
-      }
-      live.filter(col("batch") === batch &&
-          col("bb").isin(bs.map(Int.box): _*))
-        .select("key", "name").dropDuplicates("key")
-    }
-    val probes = PassJoin.probeEntries(probeSrc, tau)
+    val p = BatchBuckets.probe(spark, path, batch, batchEnts)
+    val ents = p.rows.select("key", "name")
+    // the stored batch rows are k segment rows per entity: fold them to
+    // one probe string per key
+    val probes = PassJoin.probeEntries(if (p.held) ents else ents.dropDuplicates("key"), tau)
       .withColumn("bb", BatchBuckets.bucket(col("sig")))
     // probe-bucket pruning: bounded collect over the constant-per-entity
     // probe rows (regenerated for the join — cheaper than a persist at
     // this width)
     val buckets = probes.select("bb").distinct().collect().map(_.getInt(0))
-    val idx = live.filter(col("bb").isin(buckets.map(Int.box): _*))
-    val a = probes.hint("SHUFFLE_HASH").as("a")
-    val b = idx.as("b")
-    val first = col("a.key") < col("b.key")
-    a.join(b,
-        col("a.sig") === col("b.sig") &&
-          col("a.key") =!= col("b.key") &&
-          (col("b.batch") < batch ||
-            (col("b.batch") === batch && col("b.key") < col("a.key"))))
-      .select(
-        when(first, col("a.key")).otherwise(col("b.key")).as("a_key"),
-        when(first, col("b.key")).otherwise(col("a.key")).as("b_key"),
-        when(first, col("a.name")).otherwise(col("b.name")).as("a_name"),
-        when(first, col("b.name")).otherwise(col("a.name")).as("b_name"))
+    BatchBuckets.pair(IndexStream.laterMember(probes, p.stored(buckets), batch, "key")(
+        col("a.sig") === col("b.sig")))
       .groupBy("a_key", "b_key")
       .agg(max(col("a_name")).as("a_name"), max(col("b_name")).as("b_name"))
   }
 
-  /** Streamed ingest AND long-string screen ([[FastSsIndex.screenStream]]'s
-    * discipline over the segment kernel): per trigger, the batch alone
-    * is segmented and appended under a real pinned batch id, then its
-    * verified pairs (exact levenshtein <= tau, the shared
-    * [[EntityBlockIndex.verifyTypo]] lattice) land in `outPath`.
-    * At-least-once replay safe (deterministic folds, pair dedup at
-    * read).
+  /** Streamed ingest AND long-string screen ([[BatchBuckets.screenStream]]
+    * over the segment kernel): per trigger, the batch alone is segmented
+    * and appended under a real pinned batch id, then its verified pairs
+    * (exact levenshtein <= tau, the shared [[EntityBlockIndex.verifyTypo]]
+    * lattice) land in `outPath`. At-least-once replay safe
+    * (deterministic folds, pair dedup at read).
     */
   def screenStream(entities: DataFrame, path: String, outPath: String,
                    checkpoint: String, tau: Int = DefaultTau)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     RadiusMarker.claim(entities.sparkSession, path, tau, default = DefaultTau)
-    IndexStream.appendWithBatchIds(entities, path, checkpoint,
-        autoCompactFragments = 0) { (df, b) =>
-      BatchBuckets.appendBatch(segsFor(df, tau), path, b, use = segs =>
-        IndexStream.append(
-          EntityBlockIndex.verifyTypo(
-            candidates(df.sparkSession, path, b,
-              // single-evaluation discipline: the probe entities are
-              // re-derived from the MATERIALIZED segment rows, never
-              // from a second pass over the caller's frame
-              Some(segs.select("key", "name").dropDuplicates("key"))),
-            tau = tau),
-          outPath, b))
+    BatchBuckets.screenStream(entities, path, outPath, checkpoint)(segsFor(_, tau)) {
+      (df, segs, b) =>
+        EntityBlockIndex.verifyTypo(
+          candidates(df.sparkSession, path, b,
+            // single-evaluation discipline: the probe entities are
+            // re-derived from the MATERIALIZED segment rows, never
+            // from a second pass over the caller's frame
+            Some(segs.select("key", "name").dropDuplicates("key"))),
+          tau = tau)
     }
   }
 
@@ -159,6 +131,5 @@ object PassJoinIndex {
     Tombstones.forget(spark, path, ids, idCol = "key")
 
   def compact(spark: SparkSession, path: String): Unit =
-    IndexMaintenance.compact(spark, path, partitionCols = Seq("bb"),
-      sortCols = Seq("batch")) // the FastSsIndex.compact probe-layout rationale
+    BatchBuckets.compact(spark, path)
 }

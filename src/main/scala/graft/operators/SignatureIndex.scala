@@ -66,9 +66,6 @@ object SignatureIndex {
   def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
     Tombstones.forget(spark, path, ids)
 
-  private[graft] def readIndex(spark: SparkSession, path: String): DataFrame =
-    Tombstones.live(spark, path)
-
   /** Streamed ingest of a documents stream: the fused kernel runs per
     * micro-batch (stateless — no watermark, no aggregation state) and each
     * micro-batch appends under batch = base + batchId — REAL, distinct,
@@ -128,11 +125,8 @@ object SignatureIndex {
 
   /** Near-dup witnesses for batch `batch`, entirely from the stored index.
     *
-    * The (band, bucket) equi-join probes the delta's banded rows against
-    * the whole banded index; the SHUFFLE_HASH hint on the delta side makes
-    * it the hash-build side of a shuffled join (the delta is batch-sized;
-    * broadcasting the INDEX side would ship the whole corpus's signatures
-    * to every task). AQE splits skewed buckets at runtime. Returns
+    * The delta's banded rows probe the visible banded index with a
+    * (band, bucket) equi-join under [[IndexStream.laterMember]]. Returns
     * `(doc_id, dup_of)` for every batch-`batch` doc, dup_of NULL if novel.
     */
   def probe(spark: SparkSession, path: String, batch: Int,
@@ -143,22 +137,10 @@ object SignatureIndex {
     // never collide), so refuse it loudly.
     require(maxHamming < Bands,
       s"maxHamming=$maxHamming breaks the $Bands-band pigeonhole recall bound (max ${Bands - 1})")
-    // pre-filter batch <= probed batch: the disjunctive join condition
-    // below is not inferable as a pushable b-side predicate, so without
-    // this a historical-batch probe would band and shuffle every LATER
-    // batch's rows only to drop them in the join
-    val idx = banded(readIndex(spark, path).filter(col("batch") <= batch))
-    val a = idx.filter(col("batch") === batch).hint("SHUFFLE_HASH").as("a")
-    val b = idx.as("b")
-    // a.doc_id != b.doc_id: a doc re-ingested under a LATER batch (an
-    // upstream that crawled it twice) must not witness itself through its
-    // earlier copy — same-doc rows are never duplicates of each other,
-    // matching the incremental-dedup oracle's a.doc_id != b.doc_id
-    val matches = a.join(b,
+    val idx = banded(IndexStream.visibleTo(spark, path, batch, "doc_id"))
+    val matches = IndexStream.laterMember(idx.filter(col("batch") === batch), idx,
+        batch, "doc_id")(
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col("a.doc_id") =!= col("b.doc_id") &&
-          (col("b.batch") < batch ||
-            (col("b.batch") === batch && col("b.doc_id") < col("a.doc_id"))) &&
           expr(s"bit_count(a.simhash ^ b.simhash) <= $maxHamming"))
       .groupBy(col("a.doc_id").as("doc_id"))
       .agg(min(col("b.doc_id")).as("dup_of"))
@@ -167,7 +149,7 @@ object SignatureIndex {
     // is what makes at-least-once appenders — a replayed streaming
     // micro-batch (st_sig_ingest), a retried batch ingest — safe without
     // any sink-side exactly-once machinery
-    readIndex(spark, path).filter(col("batch") === batch)
+    Tombstones.live(spark, path).filter(col("batch") === batch)
       .select(col("doc_id")).distinct()
       .join(matches, Seq("doc_id"), "left")
   }

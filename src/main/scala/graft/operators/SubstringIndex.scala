@@ -107,7 +107,7 @@ object SubstringIndex {
     * data ingested after it.
     */
   def probe(spark: SparkSession, path: String, batch: Int, w: Int): DataFrame = {
-    val win = Tombstones.live(spark, path).filter(col("batch") <= batch)
+    val win = IndexStream.visibleTo(spark, path, batch, "doc_id")
     val dup = win.groupBy("h").agg(countDistinct("doc_id").as("nd"))
       .filter(col("nd") > 1).select("h")
     val marked = win.filter(col("batch") === batch)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, HyperLogLogPlusPlus}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.util.HyperLogLogPlusPlusHelper
 
 /** Opt-in sketch rewrite, injected via
   * [[graft.engine.GraftExtensions]] (`injectOptimizerRule`):
@@ -28,10 +29,23 @@ import org.apache.spark.sql.catalyst.rules.Rule
 case class ApproxDistinctRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
   private def enabled: Boolean =
-    spark.conf.getOption("spark.graft.approxDistinct").exists(_.toBoolean)
+    setting("spark.graft.approxDistinct", "true or false")(_.toBooleanOption)
+      .getOrElse(false)
 
   private def rsd: Double =
-    spark.conf.getOption("spark.graft.approxDistinct.rsd").map(_.toDouble).getOrElse(0.05)
+    setting("spark.graft.approxDistinct.rsd",
+        "a positive relative error HLL++ accepts (below ~0.39)") { v =>
+      v.toDoubleOption.filter(r => r > 0 && !r.isInfinite &&
+        scala.util.Try(new HyperLogLogPlusPlusHelper(r)).isSuccess)
+    }.getOrElse(0.05)
+
+  /** `key`'s value as `parse` reads it. The rule runs on every plan of the
+    * session, so a value `parse` rejects fails the session's queries, and
+    * the error names the key.
+    */
+  private def setting[T](key: String, expected: String)(parse: String => Option[T]): Option[T] =
+    spark.conf.getOption(key).map(v => parse(v.trim).getOrElse(
+      throw new IllegalArgumentException(s"$key must be $expected, got '$v'")))
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     if (!enabled) plan

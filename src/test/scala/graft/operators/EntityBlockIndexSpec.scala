@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -78,9 +79,12 @@ class EntityBlockIndexSpec extends SparkSpec {
       "key BIGINT, name STRING")
     val streamed = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = EntityBlockIndex.screenStream(
-      streamed, s"$base/idx", s"$base/matches", s"$base/cp")
-    try q.processAllAvailable() finally q.stop()
+    val jobs = JobCount.of(spark) {
+      val q = EntityBlockIndex.screenStream(
+        streamed, s"$base/idx", s"$base/matches", s"$base/cp")
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(jobs == 39, s"the streamed screen's start and three triggers ran $jobs Spark jobs, not 39")
 
     val matches = spark.read.parquet(s"$base/matches")
       .dropDuplicates("a_key", "b_key")

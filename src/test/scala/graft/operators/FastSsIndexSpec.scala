@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -118,9 +119,12 @@ class FastSsIndexSpec extends SparkSpec {
       "key BIGINT, name STRING")
     val streamed = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = FastSsIndex.screenStream(
-      streamed, s"$base/idx", s"$base/matches", s"$base/cp")
-    try q.processAllAvailable() finally q.stop()
+    val jobs = JobCount.of(spark) {
+      val q = FastSsIndex.screenStream(
+        streamed, s"$base/idx", s"$base/matches", s"$base/cp")
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(jobs == 43, s"the streamed screen's start and three triggers ran $jobs Spark jobs, not 43")
     val got = spark.read.parquet(s"$base/matches")
       .dropDuplicates("a_key", "b_key")
       .collect().map(r => (r.getAs[Long]("a_key"), r.getAs[Long]("b_key"),

@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -85,16 +86,18 @@ class MinHashIndexSpec extends SparkSpec {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$base/src"))
     val streamed = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = MinHashIndex.probeStream(streamed, s"$base/idx", s"$base/docs",
-      s"$base/out", s"$base/cp")
-    def oneFile(df: org.apache.spark.sql.DataFrame, path: String, mtime: Long): Unit =
-      graft.StreamFixtures.oneFile(df, path, mtime)
-    try {
-      oneFile(half0.select("doc_id", "text"), s"$base/src/s0.parquet", 1000000000000L)
-      q.processAllAvailable()
-      oneFile(half1.select("doc_id", "text"), s"$base/src/s1.parquet", 1000000060000L)
-      q.processAllAvailable()
-    } finally q.stop()
+    // both slices land before the stream starts (mtime-ordered, one per
+    // trigger), so the pin counts only the stream's start and triggers
+    graft.StreamFixtures.oneFile(half0.select("doc_id", "text"),
+      s"$base/src/s0.parquet", 1000000000000L)
+    graft.StreamFixtures.oneFile(half1.select("doc_id", "text"),
+      s"$base/src/s1.parquet", 1000000060000L)
+    val jobs = JobCount.of(spark) {
+      val q = MinHashIndex.probeStream(streamed, s"$base/idx", s"$base/docs",
+        s"$base/out", s"$base/cp")
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(jobs == 36, s"the streamed probe's start and two triggers ran $jobs Spark jobs, not 36")
     // batch twin: same slices through the batch API, probed per batch
     val twin = Files.createTempDirectory("graft_mhidx_probetwin_").toString
     MinHashIndex.build(half0, twin)

@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -66,9 +67,12 @@ class PassJoinIndexSpec extends SparkSpec {
     val streamed = spark.readStream
       .schema(org.apache.spark.sql.types.StructType.fromDDL("key BIGINT, name STRING"))
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = PassJoinIndex.screenStream(streamed, s"$base/idx", s"$base/out",
-      s"$base/cp", tau = 2)
-    try q.processAllAvailable() finally q.stop()
+    val jobs = JobCount.of(spark) {
+      val q = PassJoinIndex.screenStream(streamed, s"$base/idx", s"$base/out",
+        s"$base/cp", tau = 2)
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(jobs == 52, s"the streamed screen's start and three triggers ran $jobs Spark jobs, not 52")
     val got = spark.read.parquet(s"$base/out").dropDuplicates("a_key", "b_key")
       .select("a_key", "b_key", "dist")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -106,6 +110,56 @@ class PassJoinIndexSpec extends SparkSpec {
         PassJoinIndex.candidates(spark, p, batch = 1, Some(rearrival)), tau = 2)
       .collect()
     assert(pairs.isEmpty, s"tombstoned re-arrival produced pairs: ${pairs.toSeq}")
+  }
+
+  /** 150 diverse 64-character strings (hex digests of their keys): their
+    * segments spread over nearly every bb= bucket.
+    */
+  private def hexNames: DataFrame =
+    spark.range(150).select(col("id").as("key"), sha2(col("id").cast("string"), 256).as("name"))
+
+  test("a small batch's probe is partition-pruned to its bb= buckets") {
+    val p = Files.createTempDirectory("graft_pjidx_prune_").toString + "/idx"
+    PassJoinIndex.build(hexNames, p, tau = 2)
+    val one = hexNames.limit(1)
+    PassJoinIndex.ingest(one, p, batch = 1, tau = 2)
+    val nb = spark.read.parquet(p).select("bb").distinct().count()
+    // the stored side is pruned by the buckets of the batch's PROBE
+    // entries, which outnumber its k = 3 segments
+    val probeBuckets = PassJoin.probeEntries(one, 2)
+      .select(BatchBuckets.bucket(col("sig"))).distinct().count()
+    assert(nb > probeBuckets, s"master must span more buckets than the probe ($nb vs $probeBuckets)")
+    val scans = fileScans(PassJoinIndex.candidates(spark, p, batch = 1))
+    assert(scans.nonEmpty)
+    scans.foreach { scan =>
+      assert(scan.partitionFilters.exists(_.toString.contains("bb")),
+        s"index scan not bucket-pruned: ${scan.partitionFilters}")
+      assert(scan.selectedPartitions.partitionCount <= probeBuckets,
+        s"expected <=$probeBuckets pruned partitions, got ${scan.selectedPartitions.partitionCount}")
+    }
+  }
+
+  test("batch probes discover their buckets from the manifest, not an index-wide scan") {
+    val p = Files.createTempDirectory("graft_pjidx_manifest_").toString + "/idx"
+    val (b0, b1) = corpus.partition(_._1 % 10 != 1)
+    PassJoinIndex.build(ents(b0), p, tau = 2)
+    PassJoinIndex.ingest(ents(b1), p, batch = 1, tau = 2)
+    def probe1() = EntityBlockIndex.verifyTypo(
+        PassJoinIndex.candidates(spark, p, batch = 1), tau = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val before = BatchBuckets.discoveryScans.get()
+    val manifested = probe1()
+    assert(BatchBuckets.discoveryScans.get() == before,
+      "a manifested batch probe ran the legacy index-wide bucket-discovery scan")
+    assert(manifested.nonEmpty, "fixture has cross-batch pairs")
+    // a manifest-less artifact falls back to the counted legacy scan,
+    // exactly once, with the SAME answers
+    val md = new org.apache.hadoop.fs.Path(BatchBuckets.dir(p))
+    md.getFileSystem(spark.sessionState.newHadoopConf()).delete(md, true)
+    val legacy = probe1()
+    assert(BatchBuckets.discoveryScans.get() == before + 1,
+      "the manifest-less fallback was expected to take (and count) the legacy scan once")
+    assert(legacy == manifested)
   }
 
   test("a mixed-radius writer fails loudly") {

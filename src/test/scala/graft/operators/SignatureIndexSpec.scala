@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -177,8 +178,11 @@ class SignatureIndexSpec extends SparkSpec {
     oneFile(docs.filter(batchOf === 2), s"$base/src/d2.parquet", 1000000120000L)
     val streamed = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = SignatureIndex.probeStream(streamed, s"$base/idx", s"$base/out", s"$base/cp")
-    try q.processAllAvailable() finally q.stop()
+    val jobs = JobCount.of(spark) {
+      val q = SignatureIndex.probeStream(streamed, s"$base/idx", s"$base/out", s"$base/cp")
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(jobs == 27, s"the streamed probe's start and three triggers ran $jobs Spark jobs, not 27")
 
     val twin = Files.createTempDirectory("graft_sigidx_probe_twin_").toString
     SignatureIndex.build(docs.filter(batchOf === 0), twin)

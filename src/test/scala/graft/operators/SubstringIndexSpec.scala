@@ -2,6 +2,7 @@ package graft.operators
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -94,8 +95,11 @@ class SubstringIndexSpec extends SparkSpec {
     oneFile(docs.filter(batchOf === 2), s"$base/src/d2.parquet", 1000000120000L)
     val streamed = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val q = SubstringIndex.probeStream(streamed, s"$base/idx", s"$base/out", s"$base/cp", W)
-    try q.processAllAvailable() finally q.stop()
+    val jobs = JobCount.of(spark) {
+      val q = SubstringIndex.probeStream(streamed, s"$base/idx", s"$base/out", s"$base/cp", W)
+      try q.processAllAvailable() finally q.stop()
+    }
+    assert(jobs == 24, s"the streamed probe's start and three triggers ran $jobs Spark jobs, not 24")
 
     val expected = (0 to 2).map(b =>
         bruteSpans(docs, batchOf, b).withColumn("batch", lit(b)))

@@ -56,4 +56,33 @@ class ApproxDistinctRewriteSpec extends SparkSpec {
       assert(df.collect().head.getLong(0) > 0)
     } finally spark.conf.unset("spark.graft.approxDistinct")
   }
+
+  /** Apply the rule under a session whose only setting is `conf`, to an
+    * exact distinct count planned in the shared session.
+    */
+  private def rewriteUnder(conf: (String, String)*): Unit = {
+    val s = spark.newSession()
+    conf.foreach { case (k, v) => s.conf.set(k, v) }
+    ApproxDistinctRewrite(s)(distinctParts.queryExecution.analyzed)
+  }
+
+  test("a flag that is not a boolean fails naming the key") {
+    val key = "spark.graft.approxDistinct"
+    for (bad <- Seq("yes", "1", "")) {
+      val e = intercept[IllegalArgumentException](rewriteUnder(key -> bad))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    rewriteUnder(key -> "FALSE")
+  }
+
+  test("an rsd outside HLL++'s range fails naming the key") {
+    val key = "spark.graft.approxDistinct.rsd"
+    // 0.5 leaves HLL++ fewer than 4 addressing bits
+    for (bad <- Seq("abc", "0", "-0.05", "NaN", "Infinity", "0.5")) {
+      val e = intercept[IllegalArgumentException](
+        rewriteUnder("spark.graft.approxDistinct" -> "true", key -> bad))
+      assert(e.getMessage.contains(key) && e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+    rewriteUnder("spark.graft.approxDistinct" -> "true", key -> "0.3")
+  }
 }
